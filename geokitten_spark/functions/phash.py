@@ -21,9 +21,10 @@ image library):
 
 Scale shape at 100 TB: hashing is one Arrow-batched ``mapInPandas``
 pass over the image lane (decode already required for feature
-extraction — the hash rides the same scan); the near-dup join ships
-ONLY (64-bit hash, id) pairs through ``bands`` equi-join keys — never
-pixels, never payloads — and verifies candidates with a JVM-side
+extraction — the hash rides the same scan); the near-dup join
+(``operators/dedup.py:hamming_neardup``, re-exported here) ships ONLY
+(64-bit hash, id) pairs through ``bands`` equi-join keys — never pixels,
+never payloads — and verifies candidates with a JVM-side
 ``bit_count(xor)``. Pigeonhole guarantee: bands > max_hamming implies
 every qualifying pair shares at least one exact band slice.
 """
@@ -35,8 +36,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..operators.dedup import hamming_neardup
 
 __all__ = [
     "dhash64",
@@ -155,77 +157,6 @@ def image_phash(media: DataFrame, *, fake: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=out_schema)
-
-
-def hamming_neardup(
-    hashes: DataFrame,
-    *,
-    id_col: str = "media_id",
-    hash_col: str = "phash",
-    bits: int = 64,
-    max_hamming: int = 7,
-    bands: int = 8,
-) -> DataFrame:
-    """Pairs with Hamming(hash_a, hash_b) <= max_hamming over any int64
-    hash column — the SimHash pigeonhole blocking generalized to a
-    precomputed fingerprint (band equi-join on (band, slice), JVM-side
-    ``bit_count(xor)`` verify; only (id, hash) rows ever shuffle).
-
-    Candidate volume scales with band WIDTH (bits/bands): each band
-    bucket holds ~n/2^width ids, so the equi-join emits ~bands * n^2 /
-    2^width candidate pairs. At corpus scale keep slices wide — bands=4
-    (16-bit slices, Hamming <= 3) is the production setting; many
-    narrow bands (e.g. 16x4 for Hamming <= 12, as the fixture query
-    uses for its measured 9-vs-18-bit margin) trade recall radius for
-    a quadratic candidate blow-up and suit bounded corpora or a
-    pre-blocked (e.g. per-domain) key space only.
-
-    Output: (id_a, id_b, hamming) with id_a < id_b."""
-    if bands <= max_hamming:
-        raise ValueError("pigeonhole requires bands > max_hamming")
-    if bits % bands != 0:
-        raise ValueError("bands must divide bits")
-    width = bits // bands
-    mask = (1 << width) - 1
-    # lazy localCheckpoint: the banded self-join below reads this table on
-    # BOTH sides, and without a materialization barrier the whole upstream
-    # fingerprint pipeline (image/audio decode passes) executes once per
-    # side. The checkpoint is (id, hash) rows only — 16 bytes/row.
-    sh = (
-        hashes.filter(F.col(hash_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), F.col(hash_col).alias("__h"))
-        .localCheckpoint(eager=False)
-    )
-    # band keys derived in ONE projection and posexploded — a union of
-    # per-band selects re-plans (and re-executes) the entire upstream
-    # hash pipeline once per band per join side; with a decode-heavy
-    # upstream (image/audio lanes) that was bands x 2 full decode passes
-    # (measured 32s -> 2.2s on the media_phash query at 16 bands). Same
-    # rows, same (band, bkey) values.
-    band_arr = F.array(
-        *[
-            F.shiftright(F.col("__h"), b * width).bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ]
-    )
-    banded = sh.select("__id", "__h", F.posexplode(band_arr).alias("band", "bkey"))
-    a = banded.select(
-        F.col("__id").alias("id_a"), F.col("__h").alias("h_a"), "band", "bkey"
-    )
-    b2 = banded.select(
-        F.col("__id").alias("id_b"), F.col("__h").alias("h_b"), "band", "bkey"
-    )
-    cand = (
-        a.join(b2, on=["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("long")
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def recompress_jpeg(

@@ -29,15 +29,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _dot, _norm
+
 __all__ = ["brute_topk", "IVFIndex", "PQIndex"]
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, x: s + x * x))
 
 
 def _cosine(a: Column, b: Column) -> Column:

@@ -13,6 +13,10 @@ algorithm — same hash function, same shingling, same banding:
 * embedding-cosine near-dup — brute-force baseline (``embedding_neardup``)
   plus a sign-LSH bucketed scale path (``embedding_neardup_lsh``).
 
+Every banded lane (MinHash, SimHash, sign-LSH, and the image/audio
+``hamming_neardup``) gets its candidates from ONE generator,
+:func:`banded_self_join`; integer hashes are sliced by :func:`bit_slices`.
+
 Shared 60-bit hash: ``H(x) = int(md5(x)[:15 hex], 16)`` — Spark
 ``conv(substring(md5(x),1,15),16,10)`` == DuckDB
 ``CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)``: positive, fits BIGINT,
@@ -42,6 +46,9 @@ __all__ = [
     "connected_components_sql",
     "hash60",
     "hash60_sql",
+    "bit_slices",
+    "banded_self_join",
+    "hamming_neardup",
     "word_shingles",
     "word_shingles_sql",
     "minhash_signature",
@@ -72,6 +79,102 @@ def hash60(c: Column) -> Column:
 
 def hash60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}),1,15)) AS BIGINT)"
+
+
+# ---------------------------------------------------------------------------
+# banded self-join: the one LSH candidate generator
+# ---------------------------------------------------------------------------
+
+def bit_slices(h: Column, bits: int, bands: int) -> Column:
+    """The ``bands`` contiguous ``bits // bands``-bit slices of the integer
+    column ``h``, lowest first, as one array. Pigeonhole: two hashes
+    within Hamming distance ``bands - 1`` agree exactly on at least one
+    slice."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    return F.array(
+        *[F.shiftright(h, b * width).bitwiseAND(F.lit(mask)) for b in range(bands)]
+    )
+
+
+def banded_self_join(
+    table: DataFrame, band_keys: Column, *, id_col: str, payload: tuple[str, ...] = ()
+) -> DataFrame:
+    """Candidate pairs of the narrow ``table`` agreeing on at least one
+    element of the array expression ``band_keys``: ``(id_a, id_b, <p>_a,
+    <p>_b, ...)`` per ``payload`` column ``p``, once per pair, id_a < id_b.
+
+    * one lazy ``localCheckpoint(eager=False)`` of ``table``: the join
+      reads it on both sides, and without a barrier the whole upstream
+      hash pipeline (minhash fold, simhash, image/audio decode, signature
+      UDF) runs once per side. It cuts lineage and cannot take a stream;
+    * one ``posexplode`` projection of all bands: per-band selects re-run
+      the upstream once per band per side (measured 32 s -> 2.2 s on
+      ``media_phash`` at 16 bands). NULL keys never match; they are
+      dropped rather than shuffled to one reducer;
+    * one equi-join on ``(band, bkey)``, then the output columns are
+      projected before ``dropDuplicates`` (a pair meets once per band).
+    """
+    banded = (
+        table.localCheckpoint(eager=False)
+        .select(id_col, *payload, F.posexplode(band_keys).alias("band", "bkey"))
+        .filter(F.col("bkey").isNotNull())
+    )
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col(c).alias(f"{c}_{s}") for c in payload]
+        return banded.select(F.col(id_col).alias(f"id_{s}"), *cols, "band", "bkey")
+
+    return (
+        side("a")
+        .join(side("b"), on=["band", "bkey"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{p}_{s}" for p in payload for s in "ab"])
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def hamming_neardup(
+    hashes: DataFrame,
+    *,
+    id_col: str = "media_id",
+    hash_col: str = "phash",
+    bits: int = 64,
+    max_hamming: int = 7,
+    bands: int = 8,
+) -> DataFrame:
+    """Pairs with Hamming(hash_a, hash_b) <= max_hamming over any int64
+    hash column: pigeonhole blocking on :func:`bit_slices` through
+    :func:`banded_self_join`, then a JVM-side ``bit_count(xor)`` verify.
+    Only (id, hash) rows ever shuffle; NULL hashes never pair.
+
+    Candidate volume scales with band WIDTH (bits/bands): each band
+    bucket holds ~n/2^width ids, so the equi-join emits ~bands * n^2 /
+    2^width candidate pairs. At corpus scale keep slices wide — bands=4
+    (16-bit slices, Hamming <= 3) is the production setting; many
+    narrow bands (e.g. 16x4 for Hamming <= 12, as the fixture query
+    uses for its measured 9-vs-18-bit margin) trade recall radius for
+    a quadratic candidate blow-up and suit bounded corpora or a
+    pre-blocked (e.g. per-domain) key space only.
+
+    Output: (id_a, id_b, hamming) with id_a < id_b."""
+    if bands <= max_hamming:
+        raise ValueError("pigeonhole requires bands > max_hamming")
+    if bits % bands != 0:
+        raise ValueError("bands must divide bits")
+    # NULL hashes are left to banded_self_join's NULL-key drop: a filter
+    # here, on a UDF-computed hash (the simhash lane), is pushed below the
+    # projection and runs the UDF a second time
+    table = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+    cand = banded_self_join(
+        table, bit_slices(F.col("h"), bits, bands), id_col="id", payload=("h",)
+    )
+    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("long")
+    return (
+        cand.withColumn("hamming", ham)
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -171,61 +274,24 @@ def minhash_neardup(
     # Jaccard over hashed distinct sets equals string-set Jaccard up to
     # md5-collisions (~2^-60 per pair); the DuckDB twin hashes identically
     # so parity is exact.
-    sig = (
-        docs.filter(n_words >= shingle_n)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            word_shingles(F.col(text_col), shingle_n).alias("sh"),
-        )
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), hash60).alias("shh"),
-            *minhash_signature(F.col("sh"), n_hashes),
-        )
-        # lazy localCheckpoint: the banded self-join reads sig on both
-        # sides — without the barrier the shingle + n_hashes minhash-fold
-        # pipeline runs once per side (the dominant cost of this operator)
-        .localCheckpoint(eager=False)
+    sig = docs.filter(n_words >= shingle_n).select(
+        F.col(id_col).alias("doc_id"),
+        word_shingles(F.col(text_col), shingle_n).alias("sh"),
+    ).select(
+        "doc_id",
+        F.transform(F.col("sh"), hash60).alias("shh"),
+        *minhash_signature(F.col("sh"), n_hashes),
     )
-
-    # band keys derived from the computed signature IN ONE projection and
-    # exploded — a union of per-band branches would re-evaluate the whole
-    # shingle+minhash pipeline once per band per join side
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"mh{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", "shh", F.posexplode(band_keys).alias("band", "bkey")
-    )
-
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("shh").alias("sh_a"), "band", "bkey"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("shh").alias("sh_b"), "band", "bkey"
-    )
-    cand = (
-        a.join(b, on=["band", "bkey"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    # band b's key: its rows' minhash values, comma-joined
+    mh = [F.col(f"mh{i}").cast("string") for i in range(n_hashes)]
+    rows = [mh[b * rows_per_band:(b + 1) * rows_per_band] for b in range(bands)]
+    band_keys = F.array(*[F.concat_ws(",", *r) for r in rows])
+    cand = banded_self_join(sig, band_keys, id_col="doc_id", payload=("shh",))
+    inter = F.size(F.array_intersect("shh_a", "shh_b")).cast("double")
+    union = F.size(F.array_union("shh_a", "shh_b")).cast("double")
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        cand.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b")
+    return cand.filter(jac >= threshold).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 
@@ -539,42 +605,20 @@ def simhash_neardup(
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
 
-    Pigeonhole blocking: split the fingerprint into ``bands`` contiguous
-    bit-slices; any pair within Hamming<=bands-1 must agree exactly on at
-    least one slice, so the candidate join is an equi-join on
-    (band, slice-value) — a uniform bigint shuffle key.
+    Pigeonhole blocking: :func:`hamming_neardup` over the ``SIM_BITS``-bit
+    fingerprint — any pair within Hamming <= bands-1 agrees exactly on
+    at least one of the ``bands`` bit-slices, so the candidate join is an
+    equi-join on (band, slice-value), a uniform bigint shuffle key.
     """
-    assert max_hamming < bands, "pigeonhole requires bands > max_hamming"
-    width = SIM_BITS // bands
-    # lazy localCheckpoint: both sides of the banded self-join read this
-    # table — without the barrier the simhash fold over every word hash
-    # runs once per join side. 16 bytes/row materialized.
-    sh = docs.select(
+    sims = docs.select(
         F.col(id_col).alias("doc_id"), simhash_col(F.col(text_col)).alias("sim")
-    ).localCheckpoint(eager=False)
-    # ONE projection + posexplode (see minhash_neardup's band_keys note:
-    # a union of per-band selects re-plans the whole simhash pipeline
-    # once per band per join side)
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.shiftright(F.col("sim"), b * width).bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ]
     )
-    banded = sh.select("doc_id", "sim", F.posexplode(band_arr).alias("band", "bkey"))
-    a = banded.select(F.col("doc_id").alias("doc_a"), F.col("sim").alias("sim_a"), "band", "bkey")
-    b2 = banded.select(F.col("doc_id").alias("doc_b"), F.col("sim").alias("sim_b"), "band", "bkey")
-    cand = (
-        a.join(b2, on=["band", "bkey"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
+    pairs = hamming_neardup(
+        sims, id_col="doc_id", hash_col="sim", bits=SIM_BITS,
+        max_hamming=max_hamming, bands=bands,
     )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        cand.withColumn("hamming", ham.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    return pairs.select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
     )
 
 
@@ -808,6 +852,14 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, x: s + x * x))
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity, NULL when either vector has zero norm or holds
+    a NaN — Spark orders NaN above every double, so a bare NaN would
+    pass every ``>= threshold`` filter; NULL passes none."""
+    sim = F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+    return F.when(~F.isnan(sim), sim)
+
+
 def _uniform_dim(emb: DataFrame, vec_col: str) -> int | None:
     """min==max vector length, else None. One bounded control-plane
     aggregate (2 longs to the driver) — negligible next to the O(n²) scan
@@ -830,10 +882,12 @@ def embedding_neardup(
 
     O(n²) — correct at any scale but quadratic; use the LSH variant as the
     scale path and this as its recall oracle on samples. When every vector
-    has the same length (``dim="auto"`` detects this; pass an int to pin
-    it, ``None`` to disable): the cosine then evaluates in whole-stage
-    codegen (identical summation order, so the pair set is bit-identical)
+    has the same length (``dim="auto"`` detects this with one eager
+    min/max job over ``emb`` at plan-build time; pass an int to pin it,
+    ``None`` to disable): the cosine then runs in the blocked numpy
+    kernel (identical summation order, so the pair set is bit-identical)
     and each row's norm is computed once instead of per pair.
+    NULL, zero-norm and NaN-holding vectors never pair, on either path.
     """
     if dim == "auto":
         dim = _uniform_dim(emb, vec_col)
@@ -847,8 +901,9 @@ def embedding_neardup(
     a = v.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"))
     b = v.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    sim = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    return pairs.filter(sim >= threshold).select("vec_a", "vec_b")
+    return pairs.filter(_cosine(F.col("va"), F.col("vb")) >= threshold).select(
+        "vec_a", "vec_b"
+    )
 
 
 def _embedding_neardup_blocked(
@@ -898,7 +953,9 @@ def _embedding_neardup_blocked(
             an += av[:, k] * av[:, k]
             bn += bv[:, k] * bv[:, k]
             dot += np.outer(av[:, k], bv[:, k])
-        sim = dot / np.outer(np.sqrt(an), np.sqrt(bn))
+        # zero norms give 0/0 = NaN, and NaN >= threshold is False here
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sim = dot / np.outer(np.sqrt(an), np.sqrt(bn))
         aid = left["vid"].to_numpy()
         bid = right["vid"].to_numpy()
         ia, ib = np.nonzero((sim >= threshold) & (aid[:, None] < bid[None, :]))
@@ -927,8 +984,6 @@ def embedding_neardup_lsh(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    rows_per_band = n_planes // bands
-
     def _planes(dim: int) -> "np.ndarray":
         out = np.empty((n_planes, dim), dtype=np.float64)
         for p in range(n_planes):
@@ -950,43 +1005,25 @@ def embedding_neardup_lsh(
     v = emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("sig", signature(F.col("v")))
-
-    mask = (1 << rows_per_band) - 1
-    # ONE projection + posexplode: the per-band-union form re-planned
-    # the signature pandas UDF once per band per join side — bands x 2
-    # Python passes over the embedding table (same fix as
-    # simhash_neardup / functions/phash.py hamming_neardup)
-    band_arr = F.array(
-        *[
-            F.shiftright(F.col("sig"), bnd * rows_per_band).bitwiseAND(F.lit(mask))
-            for bnd in range(bands)
-        ]
     )
     # band-join and pair-dedup on bare 8-byte ids — carrying both 64-double
     # arrays through the candidate shuffle/aggregate costs ~1 KB per pair;
-    # the vectors re-attach afterwards via two joins against the small
-    # (vid, v) table (no signature UDF re-run: the projection is pre-UDF)
-    banded = v.select("vid", F.posexplode(band_arr).alias("band", "bkey"))
-    a = banded.select(F.col("vid").alias("vec_a"), "band", "bkey")
-    b = banded.select(F.col("vid").alias("vec_b"), "band", "bkey")
-    cand = (
-        a.join(b, on=["band", "bkey"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .dropDuplicates(["vec_a", "vec_b"])
+    # the vectors re-attach afterwards via two joins against (vid, v),
+    # which is pre-UDF, so the signature runs once, into the checkpoint
+    cand = banded_self_join(
+        v.select("vid", signature(F.col("v")).alias("sig")),
+        bit_slices(F.col("sig"), n_planes, bands),
+        id_col="vid",
     )
-    base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    va_tbl = base.select(F.col("vid").alias("vec_a"), F.col("v").alias("va"))
-    vb_tbl = base.select(F.col("vid").alias("vec_b"), F.col("v").alias("vb"))
-    pairs = cand.join(va_tbl, "vec_a").join(vb_tbl, "vec_b")
+    va = v.select(F.col("vid").alias("id_a"), F.col("v").alias("va"))
+    vb = v.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"))
+    pairs = cand.join(va, "id_a").join(vb, "id_b")
     # HOF fold, not the dim-unrolled form: measured 2.1 s vs 12.2 s here —
     # the 64-term unrolled tree in a filter/join-condition position crosses
     # the generated-code size cliff and runs slower than the fold
-    sim = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    return pairs.filter(sim >= threshold).select("vec_a", "vec_b")
+    return pairs.filter(_cosine(F.col("va"), F.col("vb")) >= threshold).select(
+        F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b")
+    )
 
 
 def span_removal(

@@ -5,12 +5,14 @@ a static corpus; a crawl ingests continuously, and the production
 question is "is THIS new page a near-dup of anything seen so far?". This
 operator answers it incrementally with ``applyInPandasWithState``:
 
-* the stream carries (doc_id, 60-bit simhash) banded into the same
-  4-way pigeonhole slices the batch lane uses (any pair within
-  Hamming <= bands-1 agrees exactly on >= 1 slice), so the state is
-  keyed by (band, slice-value) and each bucket holds only the
-  fingerprints that ever hashed there — state size is O(corpus /
-  n_buckets) per key and ONLY (id, int64) pairs, never text;
+* the stream carries (doc_id, 60-bit simhash) banded by the batch
+  lane's slicer ``operators/dedup.py:bit_slices`` (whose slices the
+  batch lane's one candidate generator, ``banded_self_join``, joins
+  on; any pair within Hamming <= bands-1 agrees exactly on >= 1
+  slice), so the state is keyed by (band, slice-value) and each
+  bucket holds only the fingerprints that ever hashed there — state
+  size is O(corpus / n_buckets) per key and ONLY (id, int64) pairs,
+  never text;
 * within a group call rows are processed in doc_id order and compared
   against all earlier fingerprints in the bucket; matches emit
   (doc_id, band, dup_of = smallest earlier match).
@@ -39,25 +41,15 @@ def simhash_banded_stream(
     """(id, text) stream -> (doc_id, sim, band, bkey) stream with the
     SAME fingerprint + slicing expressions as the batch lane (pure
     Catalyst — streaming-safe, no state)."""
-    from ..operators.dedup import SIM_BITS, simhash_col
+    from ..operators.dedup import SIM_BITS, bit_slices, simhash_col
 
-    width = SIM_BITS // bands
-    mask = (1 << width) - 1
+    # banded_self_join's slicing without its join or its barrier:
+    # localCheckpoint cannot take a stream
     sh = docs.select(
         F.col(id_col).alias("doc_id"), simhash_col(F.col(text_col)).alias("sim")
     )
-    # ONE projection + posexplode: a union of per-band selects re-plans
-    # (and per micro-batch re-executes) the simhash expression once per
-    # band (see operators/dedup.py simhash_neardup)
-    band_arr = F.array(
-        *[
-            F.shiftright(F.col("sim"), b * width).bitwiseAND(F.lit(mask))
-            for b in range(bands)
-        ]
-    )
-    return sh.select(
-        "doc_id", "sim", F.posexplode(band_arr).alias("band", "bkey")
-    )
+    slices = bit_slices(F.col("sim"), SIM_BITS, bands)
+    return sh.select("doc_id", "sim", F.posexplode(slices).alias("band", "bkey"))
 
 
 def neardup_flags_stream(

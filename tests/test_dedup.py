@@ -90,6 +90,9 @@ def test_simhash_neardup_planted(spark):
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_neardup(df).collect()}
     assert (1, 2) in pairs
     assert pairs[(1, 2)] <= 3
+    # a ValueError, not an assert (python -O strips asserts)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_neardup(df, max_hamming=4, bands=4)
 
 
 def test_ngram_jaccard_planted(spark):
@@ -176,8 +179,10 @@ def test_embedding_lsh_recall_vs_bruteforce(spark):
 
 def test_embedding_neardup_blocked_matches_naive(spark):
     """The blocked numpy kernel (dim detected uniform) must emit exactly
-    the naive HOF plan's pair set — including a NULL vector (drops out of
-    every pair) — and non-uniform dims must fall back to the naive path."""
+    the naive HOF plan's pair set — including NULL, zero-norm and NaN
+    vectors (each drops out of every pair; the naive path must neither
+    raise DIVIDE_BY_ZERO nor let NaN pass the threshold) — and
+    non-uniform dims must fall back to the naive path."""
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [1.0, 1e-9, 0.0, 0.0]),       # near-dup of 0
@@ -185,6 +190,8 @@ def test_embedding_neardup_blocked_matches_naive(spark):
         (3, [0.0, 1.0, 1e-9, 0.0]),       # near-dup of 2
         (4, None),                        # NULL vector: no pairs
         (5, [-1.0, 0.0, 0.0, 0.0]),       # anti-parallel: no pairs
+        (6, [0.0, 0.0, 0.0, 0.0]),        # zero norm: no pairs
+        (7, [float("nan"), 1.0, 0.0, 0.0]),  # NaN: no pairs
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     fast = {tuple(r) for r in embedding_neardup(emb).collect()}

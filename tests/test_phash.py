@@ -86,18 +86,20 @@ def test_hamming_neardup_equals_bruteforce(spark):
         for b in range(nbits):
             h ^= 1 << (b * 3)  # distinct positions, all within 64 bits
         rows.append((i, h - (1 << 64) if h >= 1 << 63 else h))
+    rows.append((6, rows[0][1]))  # identical to row 0: agrees on all 8 bands
+    rows.append((7, None))  # NULL hash (a non-image row): never pairs
     df = spark.createDataFrame(rows, "media_id long, phash long")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in hamming_neardup(df, max_hamming=7, bands=8).collect()
-    }
+    collected = hamming_neardup(df, max_hamming=7, bands=8).collect()
+    got = {(r.id_a, r.id_b): r.hamming for r in collected}
+    assert len(collected) == len(got)  # each pair once, however many bands agree
     want = {}
-    for i, (ida, ha) in enumerate(rows):
-        for idb, hb in rows[i + 1 :]:
+    hashed = [r for r in rows if r[1] is not None]
+    for i, (ida, ha) in enumerate(hashed):
+        for idb, hb in hashed[i + 1 :]:
             ham = _ham(ha, hb)
             if ham <= 7:
                 want[(min(ida, idb), max(ida, idb))] = ham
-    assert got == want and (0, 1) in got and (0, 4) not in got
+    assert got == want and (0, 1) in got and (0, 4) not in got and got[(0, 6)] == 0
 
     with pytest.raises(ValueError, match="pigeonhole"):
         hamming_neardup(df, max_hamming=8, bands=8)

@@ -1,6 +1,8 @@
 """Shapefile sink (S6): write→read roundtrips on synthetic and REAL
 reference fixtures, ring-orientation enforcement, dBASE typing."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -98,6 +100,7 @@ def test_fixture_corpus_roundtrip(tmp_path):
         assert to_wkt(got) == _canon(orig)
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference not present")
 def test_reference_fixture_rewrite_parity(tmp_path):
     """REAL data: the reference's 124-row standardization shapefile written
     by this sink and re-read equals the original read (geometry set and
