@@ -30,13 +30,25 @@ __all__ = [
 ]
 
 
+def _encode_finite(lon: pd.Series, lat: pd.Series, encode) -> pd.Series:
+    """``encode(lat, lon)`` as int64 cell ids; NULL where either coordinate
+    is NULL, NaN or ±Inf (the encoders would raise or return a bogus id)."""
+    lo, la = lon.to_numpy(np.float64), lat.to_numpy(np.float64)
+    ok = np.isfinite(lo) & np.isfinite(la)
+    if ok.all():
+        return pd.Series(encode(la, lo).astype(np.int64, copy=False))
+    cells = np.zeros(len(lo), dtype=np.int64)
+    if ok.any():
+        cells[ok] = encode(la[ok], lo[ok])
+    return pd.Series(pd.arrays.IntegerArray(cells, ~ok))
+
+
 def s2_cell(level: int):
     """UDF factory: (lon, lat) → S2 cell id at ``level``."""
 
     @pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cells = s2mod.lat_lng_to_cell(lat.to_numpy(np.float64), lon.to_numpy(np.float64), level)
-        return pd.Series(cells)
+        return _encode_finite(lon, lat, lambda la, lo: s2mod.lat_lng_to_cell(la, lo, level))
 
     return _enc
 
@@ -142,10 +154,7 @@ def h3_cell(res: int):
 
     @pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cells = h3core.latlng_to_cell(
-            lat.to_numpy(np.float64), lon.to_numpy(np.float64), res
-        )
-        return pd.Series(cells.astype(np.int64))
+        return _encode_finite(lon, lat, lambda la, lo: h3core.latlng_to_cell(la, lo, res))
 
     return _enc
 

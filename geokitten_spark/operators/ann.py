@@ -29,13 +29,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _dot, _norm
+from .dedup import _cosine
 
 __all__ = ["brute_topk", "IVFIndex", "PQIndex"]
-
-
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_topk(

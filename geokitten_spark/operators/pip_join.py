@@ -11,9 +11,12 @@ Strategy (scale rationale):
 * Skew-free by construction: work per partition is proportional to rows,
   not to key frequency (no hot-cell shuffle key exists in this operator).
 
-Equivalently expressible as cell-prefilter + refine (``cell_pip_join``)
-which IS shuffle-based — kept for the case where the boundary set is too
-big to broadcast (SURVEY §4 "custom Catalyst rule? none — explicit API").
+Equivalently expressible as cell-cover prefilter + refine: ``PolygonCover``
+(square grid) and ``H3PolygonCover`` (H3 cells) broadcast the cover and
+send only boundary-cell docs to the Arrow refine; ``partitioned_pip_join``
+computes the cover in the executors and shuffles on the cell id — kept for
+the case where the boundary set is too big to broadcast (SURVEY §4
+"custom Catalyst rule? none — explicit API").
 """
 
 from __future__ import annotations
@@ -27,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..cells.grid import RES_SHIFT, X_SHIFT
+from ..functions.cells_udfs import grid_cell_col, h3_cell, h3_parent_col
 from ..geom import parse_wkt, points_in_rings
 from ..geom.rtree import STRtree
 
@@ -39,6 +44,54 @@ __all__ = [
 ]
 
 
+def _parts(g) -> list:
+    """A geometry's parts as lists of float64 (lon, lat) ring arrays."""
+    return [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
+
+
+def _inside(lons: np.ndarray, lats: np.ndarray, owner: np.ndarray, parts_of) -> np.ndarray:
+    """Row mask: point ``i`` lies inside polygon ``owner[i]``, whose parts
+    ``parts_of(owner[i])`` returns. Rows are grouped by owner, so each
+    polygon ray-casts all its rows in one vectorized call."""
+    keep = np.zeros(len(owner), dtype=bool)
+    if len(owner) == 0:
+        return keep
+    order = np.argsort(owner, kind="stable")
+    bounds = np.flatnonzero(np.diff(owner[order])) + 1
+    for chunk in np.split(order, bounds):
+        for rings in parts_of(owner[chunk[0]]):
+            keep[chunk] |= points_in_rings(lons[chunk], lats[chunk], rings)
+    return keep
+
+
+def _edge_pieces(ring: np.ndarray, step: float):
+    """Split every edge of ``ring`` into pieces at most ``step`` long per
+    axis; returns the pieces' start and end coordinates (x0, y0, x1, y1)."""
+    ax, ay = ring[:-1, 0], ring[:-1, 1]
+    dx, dy = ring[1:, 0] - ax, ring[1:, 1] - ay
+    n_sub = np.maximum(1, np.ceil(np.maximum(np.abs(dx), np.abs(dy)) / step).astype(np.int64))
+    idx = np.repeat(np.arange(len(ax)), n_sub)
+    k = np.concatenate([np.arange(n) for n in n_sub])
+    starts, ends = k / n_sub[idx], (k + 1) / n_sub[idx]
+    ax, ay, dx, dy = ax[idx], ay[idx], dx[idx], dy[idx]
+    return ax + dx * starts, ay + dy * starts, ax + dx * ends, ay + dy * ends
+
+
+def _left(matched: DataFrame, docs: DataFrame, how: str, doc_key_cols, id_col: str, id_type):
+    """``how`` tail of the two-path joins: 'left' adds every unmatched doc
+    once with a null ``id_col`` — a key anti-join against the matched set."""
+    if how == "inner":
+        return matched
+    if how != "left":
+        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
+    if not doc_key_cols:
+        raise ValueError("how='left' requires doc_key_cols (a unique doc key)")
+    unmatched = docs.join(
+        matched.select(*doc_key_cols).distinct(), on=doc_key_cols, how="left_anti"
+    ).withColumn(id_col, F.lit(None).cast(id_type))
+    return matched.unionByName(unmatched)
+
+
 class BoundaryIndex:
     """Driver-built, broadcast-able polygon index: packed bbox R-tree +
     parsed ring arrays, pure numpy (pickles compactly)."""
@@ -47,44 +100,19 @@ class BoundaryIndex:
         self.ids = list(ids)
         self.geoms = [parse_wkt(w) for w in wkts]
         # one entry per polygon PART so candidate refine touches only the part
-        part_boxes = []
-        self.part_owner = []
-        self.part_rings = []
-        for gi, g in enumerate(self.geoms):
-            for rings in g.parts:
-                ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-                part_boxes.append(
-                    (ext[:, 0].min(), ext[:, 1].min(), ext[:, 0].max(), ext[:, 1].max())
-                )
-                self.part_owner.append(gi)
-                self.part_rings.append([np.asarray(r, dtype=np.float64)[:, :2] for r in rings])
-        self.part_owner = np.asarray(self.part_owner, dtype=np.int64)
+        self.part_rings = [rings for g in self.geoms for rings in _parts(g)]
+        self.part_owner = np.asarray(
+            [gi for gi, g in enumerate(self.geoms) for _ in g.parts], dtype=np.int64
+        )
+        part_boxes = [(*rings[0].min(axis=0), *rings[0].max(axis=0)) for rings in self.part_rings]
         self.tree = STRtree(np.asarray(part_boxes, dtype=np.float64))
 
     def locate(self, lons: np.ndarray, lats: np.ndarray):
         """(point_idx, polygon_idx) matches; a point inside k overlapping
         polygons yields k pairs (join semantics, not first-wins)."""
         pi, part_i = self.tree.query_points(lons, lats)
-        if len(pi) == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        out_p, out_g = [], []
-        # refine grouped by part: vectorize PIP over that part's candidates
-        order = np.argsort(part_i, kind="stable")
-        pi, part_i = pi[order], part_i[order]
-        bounds = np.flatnonzero(np.diff(part_i)) + 1
-        for chunk_p, chunk_part in zip(
-            np.split(pi, bounds), np.split(part_i, bounds)
-        ):
-            part = int(chunk_part[0])
-            inside = points_in_rings(lons[chunk_p], lats[chunk_p], self.part_rings[part])
-            hits = chunk_p[inside]
-            if len(hits):
-                out_p.append(hits)
-                out_g.append(np.full(len(hits), self.part_owner[part], dtype=np.int64))
-        if not out_p:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        out_p = np.concatenate(out_p)
-        out_g = np.concatenate(out_g)
+        hit = _inside(lons[pi], lats[pi], part_i, lambda k: self.part_rings[k : k + 1])
+        out_p, out_g = pi[hit], self.part_owner[part_i[hit]]
         # a MULTIPOLYGON hit in 2 parts would duplicate: dedupe (point, geom)
         key = out_p * (len(self.geoms) + 1) + out_g
         _, uniq = np.unique(key, return_index=True)
@@ -157,7 +185,7 @@ def pip_join(
 # J2b — cover-refine PIP join (the 10^12-row fast path)
 # ---------------------------------------------------------------------------
 
-def _cover_cells(geoms: list, ids: list, res: int):
+def _cover_cells(geoms: list, res: int):
     """Driver-side cell cover: classify every grid cell in each polygon's
     bbox as fully-INSIDE (every point of the cell is inside the part) or
     BOUNDARY (some polygon edge's bbox overlaps the cell — conservative).
@@ -168,9 +196,6 @@ def _cover_cells(geoms: list, ids: list, res: int):
     Conservativeness only moves cells from the fast path to the refine
     path, never the reverse, so results are exact.
     """
-    from ..cells.grid import grid_cell, RES_SHIFT, X_SHIFT
-    from ..geom import points_in_rings
-
     n = np.int64(1) << res
     cell_w = 360.0 / float(n)
     cell_h = 180.0 / float(n)
@@ -181,10 +206,9 @@ def _cover_cells(geoms: list, ids: list, res: int):
     for pos, g in enumerate(geoms):
         seen_inside: set = set()
         seen_border: set = set()
-        for rings in g.parts:
-            ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-            xmin, ymin = ext.min(axis=0)
-            xmax, ymax = ext.max(axis=0)
+        for rings in _parts(g):
+            xmin, ymin = rings[0].min(axis=0)
+            xmax, ymax = rings[0].max(axis=0)
             ix0 = max(0, int(np.floor((xmin + 180.0) / 360.0 * n)))
             ix1 = min(int(n) - 1, int(np.floor((xmax + 180.0) / 360.0 * n)))
             iy0 = max(0, int(np.floor((ymin + 90.0) / 180.0 * n)))
@@ -196,28 +220,10 @@ def _cover_cells(geoms: list, ids: list, res: int):
             # all edges of all rings, SUBDIVIDED to sub-cell length so each
             # sub-edge bbox marks only cells the edge actually crosses (a
             # whole diagonal edge's bbox would mark O(len²) spurious cells)
-            exs, eys, exe, eye = [], [], [], []
-            step = 0.5 * min(cell_w, cell_h)
-            for ring in rings:
-                r = np.asarray(ring, dtype=np.float64)[:, :2]
-                ax, ay = r[:-1, 0], r[:-1, 1]
-                bx, by = r[1:, 0], r[1:, 1]
-                seg_len = np.maximum(np.abs(bx - ax), np.abs(by - ay))
-                n_sub = np.maximum(1, np.ceil(seg_len / step).astype(np.int64))
-                idx = np.repeat(np.arange(len(ax)), n_sub)
-                # fraction along each edge for every sub-segment start/end
-                starts = np.concatenate([np.arange(k) for k in n_sub]) / n_sub[idx]
-                ends = np.concatenate([np.arange(1, k + 1) for k in n_sub]) / n_sub[idx]
-                sx0 = ax[idx] + (bx[idx] - ax[idx]) * starts
-                sx1 = ax[idx] + (bx[idx] - ax[idx]) * ends
-                sy0 = ay[idx] + (by[idx] - ay[idx]) * starts
-                sy1 = ay[idx] + (by[idx] - ay[idx]) * ends
-                exs.append(np.minimum(sx0, sx1))
-                exe.append(np.maximum(sx0, sx1))
-                eys.append(np.minimum(sy0, sy1))
-                eye.append(np.maximum(sy0, sy1))
-            e_x0 = np.concatenate(exs); e_x1 = np.concatenate(exe)
-            e_y0 = np.concatenate(eys); e_y1 = np.concatenate(eye)
+            pieces = [_edge_pieces(r, 0.5 * min(cell_w, cell_h)) for r in rings]
+            sx0, sy0, sx1, sy1 = (np.concatenate(c) for c in zip(*pieces))
+            e_x0, e_x1 = np.minimum(sx0, sx1), np.maximum(sx0, sx1)
+            e_y0, e_y1 = np.minimum(sy0, sy1), np.maximum(sy0, sy1)
             # map each edge bbox to the cell range it touches
             touched = np.zeros((nx, ny), dtype=bool)
             c_x0 = np.clip(np.floor((e_x0 + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
@@ -231,7 +237,7 @@ def _cover_cells(geoms: list, ids: list, res: int):
             if len(ux):
                 cx = -180.0 + (ux + ix0 + 0.5) * cell_w
                 cy = -90.0 + (uy + iy0 + 0.5) * cell_h
-                inside = points_in_rings(cx, cy, [np.asarray(r, dtype=np.float64)[:, :2] for r in rings])
+                inside = points_in_rings(cx, cy, rings)
                 for k in np.nonzero(inside)[0]:
                     seen_inside.add((int(ux[k] + ix0), int(uy[k] + iy0)))
             tx, ty = np.nonzero(touched)
@@ -297,16 +303,7 @@ def cover_refine_pip_join(
             docs.sparkSession, boundaries_pdf, id_col=id_col, wkt_col=wkt_col, res=res
         )
     matched = cover.join(docs, lon_col=lon_col, lat_col=lat_col)
-    if how == "inner":
-        return matched
-    if how != "left":
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if not doc_key_cols:
-        raise ValueError("how='left' requires doc_key_cols (a unique doc key)")
-    unmatched = docs.join(
-        matched.select(*doc_key_cols).distinct(), on=doc_key_cols, how="left_anti"
-    ).withColumn(id_col, F.lit(None).cast(cover.id_type))
-    return matched.unionByName(unmatched)
+    return _left(matched, docs, how, doc_key_cols, id_col, cover.id_type)
 
 
 def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: int):
@@ -314,8 +311,6 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
     of a parent cell are fully inside for the same polygon, replace them by
     the parent — repeatedly, down to ``min_res``. Shrinks the broadcast
     table ~5-10x (fits in L3, builds in ~0.1s) with identical semantics."""
-    from ..cells.grid import RES_SHIFT, X_SHIFT
-
     out_cells, out_pos = [], []
     ix = (in_cells >> X_SHIFT) & ((np.int64(1) << X_SHIFT) - 1)
     iy = in_cells & ((np.int64(1) << X_SHIFT) - 1)
@@ -352,7 +347,70 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
     return np.concatenate(out_cells), np.concatenate(out_pos)
 
 
-class PolygonCover:
+class _BroadcastCover:
+    """Shared half of the broadcast cover-refine joins: the two cover
+    tables, the ring broadcast and ``join``. A subclass classifies cells
+    and supplies two hooks: ``_cell`` (a doc's cell at ``res``) and
+    ``_ancestors`` (the ids it probes the multi-level inside cover with)."""
+
+    def _publish(self, spark, boundaries_pdf: pd.DataFrame, geoms: list,
+                 in_cells, in_pos, bd_cells, bd_pos) -> None:
+        ids = boundaries_pdf[self.id_col].tolist()
+        self.n_inside_cells = len(in_cells)
+        self.n_border_cells = len(bd_cells)
+        self.id_type = (
+            StringType() if boundaries_pdf[self.id_col].dtype == object else LongType()
+        )
+        cell = StructField("__cell", LongType())
+        self.inside_df = spark.createDataFrame(
+            pd.DataFrame({"__cell": np.asarray(in_cells, dtype=np.int64),
+                          self.id_col: [ids[p] for p in in_pos]}),
+            schema=StructType([cell, StructField(self.id_col, self.id_type)]),
+        )
+        self.border_df = spark.createDataFrame(
+            pd.DataFrame({"__cell": np.asarray(bd_cells, dtype=np.int64),
+                          "__pos": np.asarray(bd_pos, dtype=np.int64)}),
+            schema=StructType([cell, StructField("__pos", LongType())]),
+        )
+        self._bc = spark.sparkContext.broadcast(([_parts(g) for g in geoms], ids))
+
+    def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+        id_col, bc = self.id_col, self._bc
+        lon, lat = F.col(lon_col), F.col(lat_col)
+        tagged = docs.withColumn("__cell", self._cell(lon, lat))
+
+        # fast path: pure-JVM broadcast hash join against the multi-level
+        # inside cover — each doc probes with its ancestor at every cover
+        # level (explode is codegen; a doc matches a region at <=1 level
+        # because the cover is disjoint per region)
+        probe = tagged.withColumn("__cell", F.explode(self._ancestors(lon, lat)))
+        fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
+
+        # refine path: only boundary-cell docs reach the Arrow exchange
+        cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
+
+        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            parts_all, ids_local = bc.value
+            ids_arr = np.asarray(ids_local, dtype=object)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                pos = pdf["__pos"].to_numpy(np.int64)
+                keep = _inside(
+                    pdf[lon_col].to_numpy(np.float64),
+                    pdf[lat_col].to_numpy(np.float64),
+                    pos,
+                    parts_all.__getitem__,
+                )
+                out = pdf.loc[keep].copy()
+                out[id_col] = ids_arr[pos[keep]]
+                yield out.drop(columns=["__pos"])
+
+        refine_schema = StructType(docs.schema.fields + [StructField(id_col, self.id_type, True)])
+        return fast.unionByName(cand.mapInPandas(refine, schema=refine_schema))
+
+
+class PolygonCover(_BroadcastCover):
     """Reusable cell-cover index over a boundary set: driver-side cover
     classification (multi-resolution quadtree), the two broadcast-able
     cover tables, and the refine kernel broadcast — built once, used by
@@ -363,88 +421,17 @@ class PolygonCover:
         self.id_col = id_col
         self.res = res
         self.min_res = min_res
-        ids = boundaries_pdf[id_col].tolist()
         geoms = [parse_wkt(w) for w in boundaries_pdf[wkt_col].tolist()]
-        in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, ids, res)
+        in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, res)
         if len(in_cells) and min_res < res:
             in_cells, in_pos = _promote_cover(in_cells, in_pos, res, min_res)
-        self.n_inside_cells = len(in_cells)
-        self.n_border_cells = len(bd_cells)
+        self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
 
-        self.id_type = (
-            StringType() if boundaries_pdf[id_col].dtype == object else LongType()
-        )
-        cover_schema = StructType(
-            [StructField("__cell", LongType()), StructField(id_col, self.id_type)]
-        )
-        self.inside_df = spark.createDataFrame(
-            pd.DataFrame({"__cell": in_cells, id_col: [ids[p] for p in in_pos]}),
-            schema=cover_schema,
-        )
-        self.border_df = spark.createDataFrame(
-            pd.DataFrame({"__cell": bd_cells, "__pos": bd_pos}),
-            schema=StructType(
-                [StructField("__cell", LongType()), StructField("__pos", LongType())]
-            ),
-        )
-        parts_by_pos = [
-            [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
-            for g in geoms
-        ]
-        self._bc = spark.sparkContext.broadcast((parts_by_pos, ids))
+    def _cell(self, lon, lat):
+        return grid_cell_col(lon, lat, self.res)
 
-    def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-        from ..functions.cells_udfs import grid_cell_col
-
-        id_col = self.id_col
-        tagged = docs.withColumn(
-            "__cell", grid_cell_col(F.col(lon_col), F.col(lat_col), self.res)
-        )
-
-        # fast path: pure-JVM broadcast hash join against the multi-res
-        # cover — each doc probes with its ancestor cell at every cover
-        # level (explode is codegen; a doc matches a region at <=1 level
-        # because the quadtree cover is disjoint per region)
-        ancestors = F.array(
-            *[
-                grid_cell_col(F.col(lon_col), F.col(lat_col), r)
-                for r in range(self.min_res, self.res + 1)
-            ]
-        )
-        probe = docs.withColumn("__cell", F.explode(ancestors))
-        fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
-
-        # refine path: only boundary-cell docs reach the Arrow exchange
-        cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
-        bc = self._bc
-        refine_schema = StructType(
-            [f for f in docs.schema.fields] + [StructField(id_col, self.id_type, True)]
-        )
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts_all, ids_local = bc.value
-            ids_arr = np.asarray(ids_local, dtype=object)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lons = pdf[lon_col].to_numpy(np.float64)
-                lats = pdf[lat_col].to_numpy(np.float64)
-                pos = pdf["__pos"].to_numpy(np.int64)
-                keep = np.zeros(len(pdf), dtype=bool)
-                order = np.argsort(pos, kind="stable")
-                bounds = np.flatnonzero(np.diff(pos[order])) + 1
-                for chunk in np.split(order, bounds):
-                    p = int(pos[chunk[0]])
-                    inside = np.zeros(len(chunk), dtype=bool)
-                    for rings in parts_all[p]:
-                        inside |= points_in_rings(lons[chunk], lats[chunk], rings)
-                    keep[chunk[inside]] = True
-                out = pdf.loc[keep].copy()
-                out[id_col] = ids_arr[out["__pos"].to_numpy(np.int64)]
-                yield out.drop(columns=["__pos"])
-
-        refined = cand.mapInPandas(refine, schema=refine_schema)
-        return fast.unionByName(refined)
+    def _ancestors(self, lon, lat):
+        return F.array(*[grid_cell_col(lon, lat, r) for r in range(self.min_res, self.res + 1)])
 
 
 def partitioned_pip_join(
@@ -486,8 +473,6 @@ def partitioned_pip_join(
     ``how='left'`` keeps unmatched docs once with a null ``id_col``
     (requires ``doc_key_cols``, as in ``cover_refine_pip_join``).
     """
-    from ..functions.cells_udfs import grid_cell_col
-
     id_field = boundaries.schema[id_col]
     cover_schema = StructType(
         [
@@ -506,9 +491,7 @@ def partitioned_pip_join(
             if len(pdf) == 0:
                 continue
             geoms = [parse_wkt(w) for w in pdf[wkt_col]]
-            in_cells, in_pos, bd_cells, bd_pos = _cover_cells(
-                geoms, list(range(len(geoms))), res
-            )
+            in_cells, in_pos, bd_cells, bd_pos = _cover_cells(geoms, res)
             if len(in_cells) + len(bd_cells) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
@@ -544,67 +527,53 @@ def partitioned_pip_join(
     )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # parse each polygon once per task; bound the cache by TOTAL vertex
+        # count, not entry count: a few coastline-grade polygons can weigh
+        # more than thousands of small ones (ADVICE r2) — 2M vertices
+        # ~= 32 MB of ring arrays per task
         ring_cache: dict = {}
         cache_verts = 0
-        # bound the cache by TOTAL vertex count, not entry count: a few
-        # coastline-grade polygons can weigh more than thousands of small
-        # ones (ADVICE r2) — 2M vertices ~= 32 MB of ring arrays per task
         max_cache_verts = 2_000_000
+
+        def parts_of(wkt: str) -> list:
+            nonlocal cache_verts
+            parts = ring_cache.get(wkt)
+            if parts is None:
+                parts = _parts(parse_wkt(wkt))
+                n_verts = sum(len(r) for rings in parts for r in rings)
+                if cache_verts + n_verts <= max_cache_verts:
+                    ring_cache[wkt] = parts
+                    cache_verts += n_verts
+            return parts
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lons = pdf[lon_col].to_numpy(np.float64)
-            lats = pdf[lat_col].to_numpy(np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            # group candidate rows by polygon; parse each polygon once
-            # (cache survives across batches of the same task)
-            for wkt, grp in pdf.groupby("__wkt", sort=False).groups.items():
-                rings_parts = ring_cache.get(wkt)
-                if rings_parts is None:
-                    g = parse_wkt(wkt)
-                    rings_parts = [
-                        [np.asarray(r, dtype=np.float64)[:, :2] for r in rings]
-                        for rings in g.parts
-                    ]
-                    n_verts = sum(
-                        len(r) for rings in rings_parts for r in rings
-                    )
-                    if cache_verts + n_verts <= max_cache_verts:
-                        ring_cache[wkt] = rings_parts
-                        cache_verts += n_verts
-                idx = np.asarray(grp)
-                inside_m = np.zeros(len(idx), dtype=bool)
-                for rings in rings_parts:
-                    inside_m |= points_in_rings(lons[idx], lats[idx], rings)
-                keep[idx[inside_m]] = True
-            out = pdf.loc[keep, [c for c in pdf.columns if c != "__wkt"]].copy()
-            yield out
+            codes, wkts = pd.factorize(pdf["__wkt"])
+            keep = _inside(
+                pdf[lon_col].to_numpy(np.float64),
+                pdf[lat_col].to_numpy(np.float64),
+                codes,
+                lambda c: parts_of(wkts[c]),
+            )
+            yield pdf.loc[keep, [c for c in pdf.columns if c != "__wkt"]].copy()
 
-    refined = cand.mapInPandas(refine, schema=refine_schema)
-    matched = fast.unionByName(refined)
-    if how == "inner":
-        return matched
-    if how != "left":
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if not doc_key_cols:
-        raise ValueError("how='left' requires doc_key_cols (a unique doc key)")
-    unmatched = docs.join(
-        matched.select(*doc_key_cols).distinct(), on=doc_key_cols, how="left_anti"
-    ).withColumn(id_col, F.lit(None).cast(id_field.dataType))
-    return matched.unionByName(unmatched)
+    matched = fast.unionByName(cand.mapInPandas(refine, schema=refine_schema))
+    return _left(matched, docs, how, doc_key_cols, id_col, id_field.dataType)
 
 
 # ---------------------------------------------------------------------------
 # cover-refine PIP on true H3 cells (north-star flagship shape on H3 ids)
 # ---------------------------------------------------------------------------
 
-class H3PolygonCover:
+class H3PolygonCover(_BroadcastCover):
     """Cover-refine PIP join on canonical H3 cells.
 
     Driver-side classification per polygon at resolution ``res``:
 
-    * ``border``  — cells the boundary passes through (every ring sampled
-      at 0.25x the cell spacing) DILATED by one kRing. Dilation makes the
+    * ``border``  — cells the boundary passes through (every ring, and the
+      antimeridian for a part reaching lon ±180, sampled at 0.25x the
+      cell spacing) DILATED by one kRing. Dilation makes the
       set conservative: a corner-clipped cell whose boundary arc is
       shorter than the sampling step is always within one ring of a
       sampled cell, so no sliver is ever misclassified.
@@ -626,7 +595,6 @@ class H3PolygonCover:
         self.id_col = id_col
         self.res = res
         self.min_res = min_res
-        ids = boundaries_pdf[id_col].tolist()
         geoms = [parse_wkt(w) for w in boundaries_pdf[wkt_col].tolist()]
 
         step = math.degrees(h3core._cell_spacing_rad(res)) * 0.25
@@ -634,29 +602,16 @@ class H3PolygonCover:
         for pos, g in enumerate(geoms):
             sampled: set = set()
             inside_raw: set = set()
-            for rings in g.parts:
-                for ring in rings:
-                    r = np.asarray(ring, dtype=np.float64)[:, :2]  # lon, lat
-                    ax, ay = r[:-1, 0], r[:-1, 1]
-                    bx, by = r[1:, 0], r[1:, 1]
-                    seg = np.maximum(np.abs(bx - ax), np.abs(by - ay))
-                    nsub = np.maximum(1, np.ceil(seg / step).astype(np.int64))
-                    idx = np.repeat(np.arange(len(ax)), nsub)
-                    fr = (
-                        np.concatenate([np.arange(k) for k in nsub])
-                        / nsub[idx]
-                    )
-                    sx = ax[idx] + (bx[idx] - ax[idx]) * fr
-                    sy = ay[idx] + (by[idx] - ay[idx]) * fr
-                    cells = h3core.latlng_to_cell(sy, sx, res)
-                    sampled.update(int(c) for c in np.unique(cells))
-                ext = np.asarray(rings[0], dtype=np.float64)[:, :2]
-                holes = [
-                    np.asarray(h, dtype=np.float64)[:, [1, 0]]
-                    for h in rings[1:]
-                ]
+            for rings in _parts(g):
+                (x0, y0), (x1, y1) = rings[0].min(axis=0), rings[0].max(axis=0)
+                # a part reaching lon ±180 is cut there for the planar
+                # refine, while H3 cells wrap: the antimeridian is boundary
+                seam = [np.array([[180.0, y0], [180.0, y1]])] if x0 <= -180 or x1 >= 180 else []
+                for r in rings + seam:
+                    sx, sy, _, _ = _edge_pieces(r, step)
+                    sampled.update(int(c) for c in np.unique(h3core.latlng_to_cell(sy, sx, res)))
                 part_cells = h3core.polygon_to_cells(
-                    ext[:, [1, 0]], res, holes=holes
+                    rings[0][:, [1, 0]], res, holes=[h[:, [1, 0]] for h in rings[1:]]
                 )
                 inside_raw.update(int(c) for c in part_cells)
             bd_arr = np.array(sorted(sampled), dtype=np.uint64)
@@ -678,95 +633,19 @@ class H3PolygonCover:
                         [comp[keep], h3core.uncompact_cells(shallow, min_res)]
                     )
                 inside = np.unique(comp)
-            for c in inside.tolist():
-                in_cells.append(int(c))
-                in_pos.append(pos)
-            for c in sorted(dilated):
-                bd_cells.append(c)
-                bd_pos.append(pos)
+            in_cells += inside.tolist()
+            in_pos += [pos] * inside.size
+            bd_cells += sorted(dilated)
+            bd_pos += [pos] * len(dilated)
+        self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
 
-        self.n_inside_cells = len(in_cells)
-        self.n_border_cells = len(bd_cells)
-        self.id_type = (
-            StringType() if boundaries_pdf[id_col].dtype == object else LongType()
-        )
-        self.inside_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"__cell": np.asarray(in_cells, dtype=np.int64),
-                 id_col: [ids[p] for p in in_pos]}
-            ),
-            schema=StructType(
-                [StructField("__cell", LongType()), StructField(id_col, self.id_type)]
-            ),
-        )
-        self.border_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"__cell": np.asarray(bd_cells, dtype=np.int64),
-                 "__pos": np.asarray(bd_pos, dtype=np.int64)}
-            ),
-            schema=StructType(
-                [StructField("__cell", LongType()), StructField("__pos", LongType())]
-            ),
-        )
-        parts_by_pos = [
-            [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
-            for g in geoms
-        ]
-        self._bc = spark.sparkContext.broadcast((parts_by_pos, ids))
+    def _cell(self, lon, lat):
+        # ONE Arrow encode per doc; the ancestors below derive from it
+        return h3_cell(self.res)(lon, lat)
 
-    def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-        from ..functions.cells_udfs import h3_cell, h3_parent_col
-
-        id_col = self.id_col
-        tagged = docs.withColumn(
-            "__cell", h3_cell(self.res)(F.col(lon_col), F.col(lat_col))
+    def _ancestors(self, lon, lat):
+        # the COMPACTED cover's levels as pure-JVM digit truncation
+        cell = F.col("__cell")
+        return F.array(
+            cell, *[h3_parent_col(cell, self.res, r) for r in range(self.res - 1, self.min_res - 1, -1)]
         )
-        # interior fast path probes the COMPACTED cover: ONE Arrow encode,
-        # then ancestors at every cover level as pure-JVM digit truncation
-        # (a doc matches a region at <= 1 level — compact sets are
-        # disjoint per region)
-        ancestors = F.array(
-            F.col("__cell"),
-            *[
-                h3_parent_col(F.col("__cell"), self.res, r)
-                for r in range(self.res - 1, self.min_res - 1, -1)
-            ],
-        )
-        probe = tagged.withColumn("__anc", F.explode(ancestors)).drop("__cell")
-        fast = (
-            probe.join(
-                F.broadcast(self.inside_df.withColumnRenamed("__cell", "__anc")),
-                on="__anc",
-            ).drop("__anc")
-        )
-        cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
-
-        bc = self._bc
-        refine_schema = StructType(
-            [f for f in docs.schema.fields] + [StructField(id_col, self.id_type, True)]
-        )
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts_all, ids_local = bc.value
-            ids_arr = np.asarray(ids_local, dtype=object)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lons = pdf[lon_col].to_numpy(np.float64)
-                lats = pdf[lat_col].to_numpy(np.float64)
-                pos = pdf["__pos"].to_numpy(np.int64)
-                keep = np.zeros(len(pdf), dtype=bool)
-                order = np.argsort(pos, kind="stable")
-                bounds = np.flatnonzero(np.diff(pos[order])) + 1
-                for chunk in np.split(order, bounds):
-                    p = int(pos[chunk[0]])
-                    inside = np.zeros(len(chunk), dtype=bool)
-                    for rings in parts_all[p]:
-                        inside |= points_in_rings(lons[chunk], lats[chunk], rings)
-                    keep[chunk[inside]] = True
-                out = pdf.loc[keep].copy()
-                out[id_col] = ids_arr[out["__pos"].to_numpy(np.int64)]
-                yield out.drop(columns=["__pos"])
-
-        refined = cand.mapInPandas(refine, schema=refine_schema)
-        return fast.unionByName(refined)

@@ -255,6 +255,15 @@ def test_ivf_many_lists_plan_stays_bounded_and_prunes(spark, tmp_path):
     full = [r.vec_id for r in idx.search(qv, k=10, n_probe=256).collect()]
     assert full == exact
 
+    # degenerate vectors never rank: a zero-norm row and a NaN row have a
+    # NULL cosine, so neither is returned and neither raises
+    degenerate = spark.createDataFrame(
+        [(-1, [0.0] * len(qv), 0), (-2, [float("nan")] + [1.0] * (len(qv) - 1), 0)],
+        emb.schema,
+    )
+    with_bad = [r.vec_id for r in brute_topk(emb.unionByName(degenerate), qv, k=10).collect()]
+    assert with_bad == exact
+
 
 def test_connected_components_chain_triangle_pair(spark):
     """Chain 1-2-3-4 (diameter 3, needs >1 propagation round), triangle

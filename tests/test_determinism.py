@@ -202,13 +202,19 @@ def test_h3_cover_refine_matches_brute_pip(spark):
 
 
 def test_h3_cover_refine_with_holes(spark):
-    """Donut polygons: H3PolygonCover must match brute pip_join when the
-    boundary set carries interior rings (holes) — the polyfill subtracts
-    hole-covered centers and the refine ray-casts the full ring set."""
+    """Donut polygons: H3PolygonCover, PolygonCover and
+    partitioned_pip_join must match brute pip_join when the boundary set
+    carries interior rings (holes) — the covers keep hole cells out of the
+    inside set and the refine ray-casts the full ring set."""
     import pandas as pd
 
     from geokitten_spark.fixtures import web_documents
-    from geokitten_spark.operators.pip_join import H3PolygonCover, pip_join
+    from geokitten_spark.operators.pip_join import (
+        H3PolygonCover,
+        PolygonCover,
+        partitioned_pip_join,
+        pip_join,
+    )
 
     donut = (
         "POLYGON ((-40 -20, 40 -20, 40 35, -40 35, -40 -20), "
@@ -223,9 +229,6 @@ def test_h3_cover_refine_with_holes(spark):
         (r.doc_id, r.region)
         for r in pip_join(docs, bnd, id_col="region", wkt_col="geometry_wkt").collect()
     )
-    cov = H3PolygonCover(spark, bnd, id_col="region", wkt_col="geometry_wkt", res=3)
-    got = frozenset((r.doc_id, r.region) for r in cov.join(docs).collect())
-    assert got == brute and len(brute) > 0
     # docs inside the hole must NOT match the donut
     hole_docs = {
         r.doc_id
@@ -233,9 +236,24 @@ def test_h3_cover_refine_with_holes(spark):
             "lon > -15 AND lon < 15 AND lat > -5 AND lat < 20"
         ).collect()
     }
-    assert hole_docs and not any(
-        d in hole_docs for d, reg in got if reg == "donut"
-    )
+    assert hole_docs and len(brute) > 0
+    # the same donut through the grid covers (broadcast and partitioned)
+    joins = {
+        "h3": H3PolygonCover(
+            spark, bnd, id_col="region", wkt_col="geometry_wkt", res=3
+        ).join(docs),
+        "grid": PolygonCover(
+            spark, bnd, id_col="region", wkt_col="geometry_wkt", res=7
+        ).join(docs),
+        "partitioned": partitioned_pip_join(
+            docs, spark.createDataFrame(bnd), id_col="region",
+            wkt_col="geometry_wkt", res=7,
+        ),
+    }
+    for name, out in joins.items():
+        got = frozenset((r.doc_id, r.region) for r in out.collect())
+        assert got == brute, name
+        assert not any(d in hole_docs for d, reg in got if reg == "donut"), name
 
 
 def test_h3_cover_compaction_parity_and_shrink(spark):
@@ -266,3 +284,73 @@ def test_h3_cover_compaction_parity_and_shrink(spark):
             (r.doc_id, r.region_key) for r in cov.join(docs).collect()
         )
         assert got == brute and len(brute) > 0
+
+
+def test_pip_paths_match_brute_on_degenerate_docs(spark):
+    """Every PIP path equals brute pip_join on edge and bad coordinates:
+    lon ±180, lat ±90, the near-corners, NULL and NaN lon/lat, and an
+    empty frame, against a whole-world rectangle plus the bench
+    boundaries. A NULL/NaN coordinate leaves its doc unmatched (kept once
+    with a null id under how='left') instead of failing the job."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from geokitten_spark.fixtures import bench_boundaries_pdf
+    from geokitten_spark.operators.pip_join import (
+        H3PolygonCover,
+        PolygonCover,
+        cover_refine_pip_join,
+        partitioned_pip_join,
+        pip_join,
+    )
+
+    nan, e = float("nan"), 179.9999999
+    pts = [
+        (180.0, 0.0), (-180.0, 0.0), (0.0, 90.0), (0.0, -90.0),
+        (180.0, 90.0), (-180.0, -90.0),
+        (e, 89.9999999), (-e, 89.9999999), (e, -89.9999999), (-e, -89.9999999),
+        (None, 10.0), (10.0, None), (nan, 10.0), (10.0, nan),
+        (0.0, 0.0), (12.5, 41.0),
+    ]
+    schema = "doc_id long, lon double, lat double"
+    world = "POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))"
+    bnd_pdf = pd.concat(
+        [pd.DataFrame({"region_key": [-1], "geometry_wkt": [world]}), bench_boundaries_pdf()],
+        ignore_index=True,
+    )
+    bnd = spark.createDataFrame(bnd_pdf)
+    kw = dict(id_col="region_key", wkt_col="geometry_wkt")
+    grid = PolygonCover(spark, bnd_pdf, res=7, **kw)
+    h3 = H3PolygonCover(spark, bnd_pdf, res=3, **kw)
+
+    def rows(df):
+        return Counter((r.doc_id, r.region_key) for r in df.collect())
+
+    full = spark.createDataFrame([(i, *p) for i, p in enumerate(pts)], schema)
+    for docs in (full, spark.createDataFrame([], schema)):
+        brute = rows(pip_join(docs, bnd_pdf, **kw))
+        brute_left = rows(pip_join(docs, bnd_pdf, how="left", **kw))
+        left = dict(how="left", doc_key_cols=["doc_id"])
+        got = {
+            "grid": rows(grid.join(docs)),
+            "h3": rows(h3.join(docs)),
+            "partitioned": rows(partitioned_pip_join(docs, bnd, res=7, **kw)),
+        }
+        got_left = {
+            "partitioned": rows(partitioned_pip_join(docs, bnd, res=7, **left, **kw)),
+            "cover_refine": rows(
+                cover_refine_pip_join(docs, bnd_pdf, cover=grid, **left, **kw)
+            ),
+        }
+        for name, g in got.items():
+            assert g == brute, name
+        for name, g in got_left.items():
+            assert g == brute_left, name
+        if docs is full:
+            # the NULL/NaN docs (ids 10-13) stay unmatched, kept once by 'left'
+            assert {d for d, _ in brute}.isdisjoint({10, 11, 12, 13})
+            assert all(brute_left[(d, None)] == 1 for d in (10, 11, 12, 13))
+            assert (14, -1) in brute
+        else:
+            assert not brute and not brute_left
