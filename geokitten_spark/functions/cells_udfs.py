@@ -35,8 +35,6 @@ def _encode_finite(lon: pd.Series, lat: pd.Series, encode) -> pd.Series:
     is NULL, NaN or ±Inf (the encoders would raise or return a bogus id)."""
     lo, la = lon.to_numpy(np.float64), lat.to_numpy(np.float64)
     ok = np.isfinite(lo) & np.isfinite(la)
-    if ok.all():
-        return pd.Series(encode(la, lo).astype(np.int64, copy=False))
     cells = np.zeros(len(lo), dtype=np.int64)
     if ok.any():
         cells[ok] = encode(la[ok], lo[ok])

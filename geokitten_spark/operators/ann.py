@@ -45,7 +45,7 @@ def brute_topk(
     """Exact cosine top-k (distributed per-partition top-k + merge)."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     v = F.col(vec_col).cast("array<double>")
-    scored = emb.select(F.col(id_col), _cosine(v, q).alias("sim"))
+    scored = emb.select(F.col(id_col), _cosine(v, q).alias("sim")).where(F.col("sim").isNotNull())
     return scored.orderBy(F.col("sim").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -170,6 +170,7 @@ class IVFIndex:
         q = F.array(*[F.lit(float(x)) for x in query_vec])
         cand = self.lists.filter(F.col("__lst").isin(list(probe)))
         scored = cand.select(F.col(self.id_col), _cosine(F.col("v"), q).alias("sim"))
+        scored = scored.where(F.col("sim").isNotNull())
         return scored.orderBy(F.col("sim").desc(), F.col(self.id_col).asc()).limit(k)
 
     def search_many(
@@ -216,6 +217,7 @@ class IVFIndex:
         )
         return (
             cand.select("query_id", F.col(self.id_col), sim.alias("sim"))
+            .where(F.col("sim").isNotNull())
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", self.id_col, "rank")

@@ -351,7 +351,8 @@ class _BroadcastCover:
     """Shared half of the broadcast cover-refine joins: the two cover
     tables, the ring broadcast and ``join``. A subclass classifies cells
     and supplies two hooks: ``_cell`` (a doc's cell at ``res``) and
-    ``_ancestors`` (the ids it probes the multi-level inside cover with)."""
+    ``_ancestors`` (the ids it probes the multi-level inside cover with,
+    given the doc's coordinates and its ``_cell`` column)."""
 
     def _publish(self, spark, boundaries_pdf: pd.DataFrame, geoms: list,
                  in_cells, in_pos, bd_cells, bd_pos) -> None:
@@ -383,7 +384,8 @@ class _BroadcastCover:
         # inside cover — each doc probes with its ancestor at every cover
         # level (explode is codegen; a doc matches a region at <=1 level
         # because the cover is disjoint per region)
-        probe = tagged.withColumn("__cell", F.explode(self._ancestors(lon, lat)))
+        anc = self._ancestors(lon, lat, F.col("__cell"))
+        probe = tagged.withColumn("__cell", F.explode(anc))
         fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
 
         # refine path: only boundary-cell docs reach the Arrow exchange
@@ -430,7 +432,7 @@ class PolygonCover(_BroadcastCover):
     def _cell(self, lon, lat):
         return grid_cell_col(lon, lat, self.res)
 
-    def _ancestors(self, lon, lat):
+    def _ancestors(self, lon, lat, cell):
         return F.array(*[grid_cell_col(lon, lat, r) for r in range(self.min_res, self.res + 1)])
 
 
@@ -643,9 +645,8 @@ class H3PolygonCover(_BroadcastCover):
         # ONE Arrow encode per doc; the ancestors below derive from it
         return h3_cell(self.res)(lon, lat)
 
-    def _ancestors(self, lon, lat):
+    def _ancestors(self, lon, lat, cell):
         # the COMPACTED cover's levels as pure-JVM digit truncation
-        cell = F.col("__cell")
         return F.array(
             cell, *[h3_parent_col(cell, self.res, r) for r in range(self.res - 1, self.min_res - 1, -1)]
         )

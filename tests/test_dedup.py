@@ -263,6 +263,17 @@ def test_ivf_many_lists_plan_stays_bounded_and_prunes(spark, tmp_path):
     )
     with_bad = [r.vec_id for r in brute_topk(emb.unionByName(degenerate), qv, k=10).collect()]
     assert with_bad == exact
+    # ... also when k exceeds the valid count, for brute force and every
+    # IVF search path (the build must not raise on them either)
+    valid_rows = emb.orderBy("vec_id").limit(3)
+    valid = sorted(r.vec_id for r in valid_rows.collect())
+    small = valid_rows.unionByName(degenerate)
+    assert sorted(r.vec_id for r in brute_topk(small, qv, k=10).collect()) == valid
+    sidx = IVFIndex(small, label_col=None, n_lists=4, storage_path=str(tmp_path / "ivf_bad"))
+    n_all = len(sidx.centroids)
+    assert sorted(r.vec_id for r in sidx.search(qv, k=10, n_probe=n_all).collect()) == valid
+    many = sidx.search_many([(0, qv)], k=10, n_probe=n_all).collect()
+    assert sorted(r.vec_id for r in many) == valid
 
 
 def test_connected_components_chain_triangle_pair(spark):
