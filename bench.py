@@ -475,11 +475,11 @@ def _md5_chain(n: int) -> bytes:
 # equally and cancels; a code regression inflates only its query.
 # ---------------------------------------------------------------------------
 
-def load_fence_baseline(repo_dir: str, sf=None, replicate=None):
+def load_fence_baseline(repo_dir: str, sf=None, replicate=None, cpus=None):
     """Newest BENCH_r*.json whose parsed record matches ``sf`` (and
-    ``replicate`` — a 4x input growth is a protocol change, not a
-    regression) and carries per-query times; prefers records with a cpu
-    control."""
+    ``replicate`` and ``cpus`` — a 4x input growth or a new core count is
+    a protocol change, not a regression) and carries per-query times;
+    prefers records with a cpu control."""
     import glob
     import re as _re
 
@@ -500,6 +500,8 @@ def load_fence_baseline(repo_dir: str, sf=None, replicate=None):
         if sf is not None and parsed.get("sf") not in (None, sf):
             continue
         if replicate is not None and parsed.get("replicate") not in (None, replicate):
+            continue
+        if cpus is not None and parsed.get("cpus") not in (None, cpus):
             continue
         # later rounds win; within that, a record with a control beats one
         # without (BENCH_r01 predates the controls)
@@ -1072,6 +1074,7 @@ def main():
         os.path.dirname(os.path.abspath(__file__)),
         sf=result.get("sf"),
         replicate=result.get("replicate"),
+        cpus=result.get("cpus"),
     )
     if base:
         vs, regressions, note = regression_fence(

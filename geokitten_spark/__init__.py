@@ -46,7 +46,7 @@ def _repair_bench_fence():
     import json as _json
     import re as _re
 
-    def load_fence_baseline(repo_dir, sf=None, replicate=None):
+    def load_fence_baseline(repo_dir, sf=None, replicate=None, cpus=None):
         best = (None, None)
         for path in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))):
             mm = _re.search(r"BENCH_(r\d+)\.json$", path)
@@ -64,6 +64,8 @@ def _repair_bench_fence():
                 None,
                 replicate,
             ):
+                continue
+            if cpus is not None and parsed.get("cpus") not in (None, cpus):
                 continue
             if best[1] is None or parsed.get("cpu_control_sec") is not None:
                 best = (mm.group(1), parsed)

@@ -30,14 +30,18 @@ __all__ = [
 ]
 
 
-def _encode_finite(lon: pd.Series, lat: pd.Series, encode) -> pd.Series:
-    """``encode(lat, lon)`` as int64 cell ids; NULL where either coordinate
-    is NULL, NaN or ±Inf (the encoders would raise or return a bogus id)."""
+def _encode_finite(lon: pd.Series, lat: pd.Series, encode, dtype=np.int64) -> pd.Series:
+    """``encode(lat, lon)`` as int64 cell ids (strings for ``dtype=object``);
+    NULL where either coordinate is NULL, NaN or ±Inf (the encoders would
+    raise or return a bogus id)."""
     lo, la = lon.to_numpy(np.float64), lat.to_numpy(np.float64)
     ok = np.isfinite(lo) & np.isfinite(la)
-    cells = np.zeros(len(lo), dtype=np.int64)
+    cells = np.zeros(len(lo), dtype=dtype)
     if ok.any():
         cells[ok] = encode(la[ok], lo[ok])
+    if dtype is object:
+        cells[~ok] = None
+        return pd.Series(cells)
     return pd.Series(pd.arrays.IntegerArray(cells, ~ok))
 
 
@@ -73,7 +77,7 @@ def s2_kring(k: int = 1):
 def hex_cell_udf(res: int):
     @pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(_hex_cell(lon.to_numpy(np.float64), lat.to_numpy(np.float64), res))
+        return _encode_finite(lon, lat, lambda la, lo: _hex_cell(lo, la, res))
 
     return _enc
 
@@ -124,18 +128,17 @@ def grid_kring_col(cell: Column, res: int, k: int = 1) -> Column:
 
 def geohash_cell(precision: int):
     """UDF factory: (lon, lat) → interoperable geohash string
-    (cells/geohash.py — verified against published vectors). Prefix
-    rollups downstream are plain ``substr`` (no re-encode)."""
+    (cells/geohash.py — verified against published vectors); NULL where
+    lon or lat is NULL, NaN or ±Inf. Prefix rollups downstream are plain
+    ``substr`` (no re-encode)."""
     from pyspark.sql.types import StringType
 
     from ..cells.geohash import geohash_encode
 
     @pandas_udf(StringType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(
-            geohash_encode(
-                lon.to_numpy(np.float64), lat.to_numpy(np.float64), precision
-            )
+        return _encode_finite(
+            lon, lat, lambda la, lo: geohash_encode(lo, la, precision), dtype=object
         )
 
     return _enc

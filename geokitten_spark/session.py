@@ -44,6 +44,14 @@ DEFAULT_CONFS = {
     # the executor Python path — the sandbox equivalent of shipping it via
     # ``spark-submit --py-files``
     "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    # Python worker daemon (pydaemon.py): every task's
+    # importlib.invalidate_caches() makes each zipimporter re-read all of
+    # pyspark.zip on CPython < 3.13 (~0.3 s fixed setup per task); the
+    # daemon installs 3.13's lazy invalidation before forking workers. A
+    # no-op on 3.13+. The package must be importable by the executor's
+    # Python when the daemon starts (the PYTHONPATH above; DEPLOY.md for
+    # clusters), or every Python task fails.
+    "spark.python.daemon.module": "geokitten_spark.pydaemon",
 }
 # extra JVM flags (e.g. bench.py sets -Xlog:disable so JVM gc,alloc
 # warnings can't interleave with its one-line JSON on stdout); only set

@@ -15,6 +15,8 @@ the property that makes snapshot-resume + incremental ingestion coherent.
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +39,8 @@ __all__ = [
     "stateful_user_counts",
     "run_to_memory",
 ]
+
+_log = logging.getLogger(__name__)
 
 EVENTS_SCHEMA = StructType(
     [
@@ -196,7 +200,9 @@ def run_to_memory(stream_df: DataFrame, name: str, checkpoint_dir: str,
     the finished query (caller reads ``spark.table(name)``).
 
     ``shuffle_partitions`` sets the stream's state-partition count (pinned
-    into the new checkpoint at first start, then restored on the session).
+    into the new checkpoint at first start, and logged). The session value
+    is restored as soon as ``start()`` returns: the query runs on a clone
+    of the session taken inside ``start()``.
     Stateful operators pay a per-partition-per-microbatch state-store
     open/commit cost, so this should track expected state volume, not the
     batch shuffle width: measured at sf0.1, the stream-stream interval join
@@ -213,6 +219,10 @@ def run_to_memory(stream_df: DataFrame, name: str, checkpoint_dir: str,
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", max(8, cpus // 4))
         )
+    _log.info(
+        "stream %s: %d shuffle partitions (a new checkpoint pins them as its "
+        "state partitions)", name, shuffle_partitions,
+    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
@@ -224,7 +234,7 @@ def run_to_memory(stream_df: DataFrame, name: str, checkpoint_dir: str,
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
     return q

@@ -140,3 +140,53 @@ def test_baseline_loader_replicate_protocol_change(tmp_path):
     assert parsed is None
     name2, parsed2 = bench.load_fence_baseline(str(tmp_path), sf=0.1, replicate=100)
     assert parsed2 is not None
+
+
+def test_baseline_loader_cpus_protocol_change(tmp_path):
+    import json
+
+    for r in ("r04", "r06"):
+        (tmp_path / f"BENCH_{r}.json").write_text(
+            json.dumps(
+                {
+                    "parsed": {
+                        "queries": {"qa": 1.0},
+                        "sf": 0.1,
+                        "replicate": 600,
+                        "cpus": 32,
+                        "cpu_control_sec": 0.62,
+                    }
+                }
+            )
+        )
+    # a 4-core run is not compared with local[32] records
+    _, parsed = bench.load_fence_baseline(str(tmp_path), sf=0.1, replicate=600, cpus=4)
+    assert parsed is None
+    name, parsed = bench.load_fence_baseline(str(tmp_path), sf=0.1, replicate=600, cpus=32)
+    assert name == "r06"
+
+
+def test_package_import_keeps_bench_fence_cpus_match(tmp_path):
+    # with this bench.py as __main__, the package's import-time repair
+    # swaps in its own loader: that one must take and match ``cpus`` too
+    import json
+    import os
+    import subprocess
+    import sys
+
+    (tmp_path / "BENCH_r06.json").write_text(
+        json.dumps({"parsed": {"queries": {"qa": 1.0}, "sf": 0.1, "cpus": 32}})
+    )
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+    code = (
+        "import sys, bench\n"
+        "sys.modules['__main__'] = bench\n"
+        "import geokitten_spark\n"
+        f"print(bench.load_fence_baseline({str(tmp_path)!r}, sf=0.1, cpus=4))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        env=dict(os.environ, PYTHONPATH=repo), cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "(None, None)"

@@ -393,3 +393,45 @@ def test_h3_parent_col_matches_kernel(spark):
                 dtype=np.int64,
             )
             assert np.array_equal(got, want), (child_res, parent_res)
+
+
+def test_cell_encode_udfs_null_on_nonfinite(spark):
+    """Every (lon, lat) cell-encode UDF is NULL where either coordinate is
+    NULL, NaN or ±Inf, and equals its numpy kernel on the finite rows."""
+    from geokitten_spark.cells import h3core
+    from geokitten_spark.cells.geohash import geohash_encode
+    from geokitten_spark.functions.cells_udfs import (
+        geohash_cell,
+        h3_cell,
+        hex_cell_udf,
+        s2_cell,
+    )
+
+    nan, inf = float("nan"), float("inf")
+    bad = [
+        (None, 10.0), (10.0, None), (None, None), (nan, 10.0), (10.0, nan),
+        (inf, 10.0), (-inf, 10.0), (10.0, inf), (10.0, -inf),
+    ]
+    good = [(0.0, 0.0), (12.5, 41.0), (-75.5, 6.2), (180.0, 0.0), (-180.0, -89.5)]
+    rows = [(i, *p) for i, p in enumerate(bad + good)]
+    df = spark.createDataFrame(rows, "i long, lon double, lat double")
+    cols = {
+        "h3": h3_cell(7),
+        "s2": s2_cell(12),
+        "hex": hex_cell_udf(6),
+        "geohash": geohash_cell(6),
+    }
+    got = df.select(
+        "i", *[f(df.lon, df.lat).alias(n) for n, f in cols.items()]
+    ).orderBy("i").collect()
+    lon = np.array([p[0] for p in good])
+    lat = np.array([p[1] for p in good])
+    want = {
+        "h3": h3core.latlng_to_cell(lat, lon, 7).astype(np.int64),
+        "s2": s2.lat_lng_to_cell(lat, lon, 12).astype(np.int64),
+        "hex": hex_cell(lon, lat, 6).astype(np.int64),
+        "geohash": geohash_encode(lon, lat, 6),
+    }
+    for n in cols:
+        assert all(r[n] is None for r in got[: len(bad)]), n
+        assert [r[n] for r in got[len(bad):]] == list(want[n]), n

@@ -76,6 +76,40 @@ def test_stream_checkpoint_resume(spark, events_stream_dir, tmp_path):
     assert n1 > 0 and n2 == 0  # nothing new to emit
 
 
+def test_run_to_memory_restores_conf_at_start(
+    spark, events_stream_dir, tmp_path, monkeypatch, caplog
+):
+    """The session's shuffle width is back to its old value once
+    ``start()`` returns (before the drain); the checkpoint still pins the
+    chosen state-partition count, and the choice is logged."""
+    import json
+    import logging
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, *a):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return await_termination(self, *a)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    ck = tmp_path / "ckpt_conf"
+    stream = read_events_stream(spark, events_stream_dir)
+    with caplog.at_level(logging.INFO, logger="geokitten_spark.streaming.windowed"):
+        run_to_memory(
+            hourly_counts_stream(stream), "conf_restore", str(ck), "complete",
+            shuffle_partitions=3,
+        )
+    assert prev != "3" and seen == [prev]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    meta = json.loads((ck / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == "3"
+    assert "conf_restore: 3 shuffle partitions" in caplog.text
+
+
 def test_streaming_spatial_enrichment(spark, tmp_path):
     """Cover-refine PIP join on a STREAM of docs (stateless: broadcast
     joins + mapInPandas compose with Structured Streaming) — result equals
