@@ -1,54 +1,34 @@
-"""Arithmetic-coded JPEG entropy layer (T.81 Annex D + Annex F).
+"""QM arithmetic coder and the T.81 statistical models that drive it.
 
-Completes the codec matrix for the media lane: sequential arithmetic
-JPEG (SOF9) now encodes and decodes alongside the baseline/extended/
-progressive huffman paths in ``jpeg.py``. The reference repo has no
-media lane at all (its scope is geometry files — see
-``gdf_kml_converter.py``); this lane exists for the web-scale
-north-rule surface, where crawled corpora carry every T.81 variant.
+This module is the arithmetic half of the JPEG entropy layer; frame
+processes, scan walking and marker I/O live in ``jpeg.py``, whose
+arithmetic entropy coder calls into the pieces below:
 
-What is implemented, from public spec text only:
-
-* the QM arithmetic coder — encoder (Annex D.1: CODELPS/CODEMPS with
+* the QM coder (Annex D): ``ArithEncoder`` (CODELPS/CODEMPS with
   conditional exchange, renormalization, byte output with carry
-  walk-back) and decoder (Annex D.2), over the 113-state Qe
-  probability-estimation table (Table D.3) plus the one fixed
-  non-adaptive state used for AC sign decisions,
-* the sequential DCT statistical model (Annex F.1.4): DC differences
-  conditioned on the previous difference's sign/magnitude
-  classification (the L/U conditioning bounds from the DAC segment),
-  AC coefficients on a per-index EOB/zero/magnitude decision tree with
-  the low/high magnitude-category split at Kx,
-* byte stuffing: 0xFF in the entropy stream is followed by a stuffed
-  0x00, exactly as in huffman scans, so ``jpeg._split_scan`` handles
-  both entropy codings,
-* restart intervals: RSTn resets the coder, the statistics areas, the
-  DC predictors, and the DC conditioning contexts.
+  walk-back, final 0xFF/0x00 stuffing) and ``ArithDecoder`` over the
+  113-state Qe probability-estimation table (Table D.3), plus the one
+  fixed non-adaptive state used for sign and refinement decisions;
+* the DC difference model (Annex F.1.4.1): ``encode_dc_arith`` /
+  ``decode_dc_arith``, conditioned on the previous difference's
+  classification under the DAC L/U bounds — shared by sequential DC,
+  progressive DC-first (Annex G.2) and, with the Annex H ladder bases,
+  lossless differences;
+* the AC models: the per-index EOB/zero/magnitude decision tree with the
+  low/high ladder split at Kx (Annex F.1.4.2; sequential scans and
+  progressive AC-first bands) and the Annex G.2.3 refinement tree;
+* the Annex H lossless context (Da/Db classification) and the
+  statistics-area factories.
 
-Verification boundary, stated honestly: the Qe state table and model
-were transcribed from the published standard; the sandbox has no
-independent JPEG library, so cross-implementation interop is untested
-here. What IS tested: bit-level coder roundtrips over adversarial
-symbol/context sequences, full encode->decode roundtrips, and pixel
-parity — an image encoded with the huffman encoder and with this
-encoder at the same quality must decode to IDENTICAL pixels, because
-both entropy layers are lossless over the same quantized coefficients.
+Stuffing is byte-for-byte the Huffman scheme (0x00 after each 0xFF), so
+one scan splitter serves both entropy codings, and a restart resets the
+coder, the statistics areas and the DC conditioning contexts.
 
-Progressive arithmetic (SOF10, Annex G.2) decodes and encodes: the DC
-first pass reuses the F.1.4 difference model on point-transformed
-values, DC refinement is one fixed-estimate decision per block, AC
-first passes run the sequential AC decision tree over the scan's
-spectral band, and AC refinement conditions newly-/previously-nonzero
-decisions on the same per-index context tree (correction bits at the
-third bin, signs on the fixed estimate). Differential frames inside a
-hierarchical pyramid code with the sequential (SOF13), progressive
-(SOF14), or Annex H lossless (SOF15, zero prediction, mod-2^16
-corrections) models — mirroring the huffman SOF5/6/7 paths — so every
-arithmetic-coded process of T.81 decodes.
+Verification: bit-level coder roundtrips over adversarial symbol and
+context sequences (tests/test_jpeg_arith.py) and byte-exact interop with
+libjpeg-turbo's SOF9/SOF10 codec (tests/test_jpeg_interop.py).
 """
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
@@ -369,195 +349,8 @@ def new_fixed_stats():
     return _FixedBinView()
 
 
-# --- scan-level integration -------------------------------------------------
 
-
-def _scan_units(sel, comps, geom):
-    """The block walk shared by every DCT scan kind: interleaved scans
-    step MCUs (ch*cv blocks per component); single-component scans step
-    that component's OWN block grid (narrower than the MCU-padded
-    store). Mirrors ``jpeg._decode_scan``'s unit list."""
-    ih, iw, hmax, vmax, mcus_x, mcus_y = geom
-    if len(sel) > 1:
-        units = []
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                blocks = []
-                for k, td, ta in sel:
-                    _, ch, cv, _ = comps[k]
-                    for vy in range(cv):
-                        for vx in range(ch):
-                            bi = (my * cv + vy) * (mcus_x * ch) + (mx * ch + vx)
-                            blocks.append((k, bi, td, ta))
-                units.append(blocks)
-        return units
-    k, td, ta = sel[0]
-    _, ch, cv, _ = comps[k]
-    comp_w = -(-iw * ch // hmax)
-    comp_h = -(-ih * cv // vmax)
-    bw, bh = -(-comp_w // 8), -(-comp_h // 8)
-    return [
-        [(k, by * (mcus_x * ch) + bx, td, ta)]
-        for by in range(bh)
-        for bx in range(bw)
-    ]
-
-
-def decode_scan_arith(
-    payload,
-    start,
-    scan_comps,
-    comps,
-    stores,
-    conditioning,
-    restart_interval,
-    geom,
-    split_scan,
-    differential=False,
-):
-    """Decode one sequential arithmetic-coded scan (SOF9; SOF13 inside a
-    hierarchical pyramid with ``differential=True``) into the
-    coefficient stores; returns the offset of the terminating marker.
-    Mirrors ``jpeg._decode_scan``'s MCU walk; RSTn resets the coder,
-    statistics, predictors, and DC conditioning contexts.
-    ``differential`` hardwires the DC prediction to zero (T.81
-    F.1.1.5.1) — the conditioning contexts still track the coded
-    values."""
-    cid_to_idx = {c[0]: idx for idx, c in enumerate(comps)}
-    zigzag = _zigzag_of(payload)  # resolved lazily to avoid import cycle
-    sel = []
-    for cs, td, ta in scan_comps:
-        k = cid_to_idx[cs]
-        sel.append((k, td, ta))
-    units = _scan_units(sel, comps, geom)
-
-    segments, end = split_scan(payload, start)
-    seg_idx = 0
-
-    def fresh():
-        dec = ArithDecoder(bytes(segments[seg_idx]))
-        dc_stats = {}
-        ac_stats = {}
-        for _, td, ta in sel:
-            dc_stats.setdefault(td, new_dc_stats())
-            ac_stats.setdefault(ta, new_ac_stats())
-        fixed = new_fixed_stats()
-        pred = {k: 0 for k, _, _ in sel}
-        dcctx = {k: 0 for k, _, _ in sel}
-        return dec, dc_stats, ac_stats, fixed, pred, dcctx
-
-    dec, dc_stats, ac_stats, fixed, pred, dcctx = fresh()
-
-    for u, blocks in enumerate(units):
-        if restart_interval and u and u % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("arith JPEG truncated: missing restart segment")
-            dec, dc_stats, ac_stats, fixed, pred, dcctx = fresh()
-        for k, bi, td, ta in blocks:
-            row = stores[k][bi]
-            low, up, kx = conditioning_for(conditioning, td, ta)
-            diff, dcctx[k] = decode_dc_arith(
-                dec, dc_stats[td], dcctx[k], low, up
-            )
-            if differential:
-                row[0] = diff
-            else:
-                pred[k] += diff
-                row[0] = pred[k]
-            _decode_ac_into(dec, ac_stats[ta], fixed, row, zigzag, kx)
-    return end
-
-
-def decode_scan_progressive_arith(
-    payload,
-    start,
-    scan_comps,
-    comps,
-    stores,
-    conditioning,
-    restart_interval,
-    geom,
-    ss,
-    se,
-    ah,
-    al,
-    split_scan,
-    differential=False,
-):
-    """Decode one PROGRESSIVE arithmetic-coded scan (SOF10; SOF14 inside
-    a hierarchical pyramid with ``differential=True``, which hardwires
-    the DC-first prediction to zero) into the coefficient stores;
-    returns the offset of the terminating marker. Four scan kinds,
-    mirroring ``jpeg._decode_scan``'s progressive modes:
-
-    * DC first (Ss=0, Ah=0): the F.1.4 difference model over the
-      point-transformed DC values; stores ``pred << Al``.
-    * DC refine (Ss=0, Ah>0): one decision per block on the fixed
-      (non-adaptive) estimate; ORs ``1 << Al`` into the DC value.
-    * AC first (Ss>0, Ah=0): the sequential AC decision tree narrowed
-      to the Ss..Se band, values scaled by ``1 << Al``.
-    * AC refine (Ss>0, Ah>0): per-index EOB/newly-nonzero/correction
-      decisions (G.2.3) — see ``_decode_ac_refine_into``.
-
-    Restart markers reset the coder, the statistics areas, and the DC
-    predictors/conditioning contexts, exactly as in sequential scans.
-    """
-    cid_to_idx = {c[0]: idx for idx, c in enumerate(comps)}
-    zigzag = _zigzag_of(payload)
-    sel = [(cid_to_idx[cs], td, ta) for cs, td, ta in scan_comps]
-    units = _scan_units(sel, comps, geom)
-    segments, end = split_scan(payload, start)
-    seg_idx = 0
-    dc_scan = ss == 0
-
-    def fresh():
-        dec = ArithDecoder(bytes(segments[seg_idx]))
-        dc_stats = {}
-        ac_stats = {}
-        for _, td, ta in sel:
-            if dc_scan:
-                dc_stats.setdefault(td, new_dc_stats())
-            else:
-                ac_stats.setdefault(ta, new_ac_stats())
-        fixed = new_fixed_stats()
-        pred = {k: 0 for k, _, _ in sel}
-        dcctx = {k: 0 for k, _, _ in sel}
-        return dec, dc_stats, ac_stats, fixed, pred, dcctx
-
-    dec, dc_stats, ac_stats, fixed, pred, dcctx = fresh()
-
-    for u, blocks in enumerate(units):
-        if restart_interval and u and u % restart_interval == 0:
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("arith JPEG truncated: missing restart segment")
-            dec, dc_stats, ac_stats, fixed, pred, dcctx = fresh()
-        for k, bi, td, ta in blocks:
-            row = stores[k][bi]
-            if dc_scan and ah == 0:  # DC first
-                low, up, _ = conditioning_for(conditioning, td, ta)
-                diff, dcctx[k] = decode_dc_arith(
-                    dec, dc_stats[td], dcctx[k], low, up
-                )
-                if differential:  # no DC prediction in pyramid stages
-                    row[0] = diff << al
-                else:
-                    pred[k] += diff
-                    row[0] = pred[k] << al
-            elif dc_scan:  # DC refine: fixed-estimate decision per block
-                if dec.decode(fixed, 0):
-                    row[0] |= 1 << al
-            elif ah == 0:  # AC first
-                _, _, kx = conditioning_for(conditioning, td, ta)
-                _decode_ac_into(
-                    dec, ac_stats[ta], fixed, row, zigzag, kx, ss, se, al
-                )
-            else:  # AC refine
-                _decode_ac_refine_into(
-                    dec, ac_stats[ta], fixed, row, zigzag, ss, se, al
-                )
-    return end
+# --- AC models (Annex F.1.4.2 first pass, Annex G.2.3 refinement) -------
 
 
 def conditioning_for(conditioning, td, ta):
@@ -567,7 +360,7 @@ def conditioning_for(conditioning, td, ta):
     return low, up, kx
 
 
-def _decode_ac_into(dec, stats, fixed, row, zigzag, kx, ss=1, se=63, al=0):
+def decode_ac_arith(dec, stats, fixed, row, zigzag, kx, ss=1, se=63, al=0):
     """Decode AC coefficients (sequential scan, or a progressive AC
     FIRST pass when ``ss``/``se``/``al`` narrow the band) into natural
     order. Values are scaled by the point transform on the way out."""
@@ -604,11 +397,11 @@ def _decode_ac_into(dec, stats, fixed, row, zigzag, kx, ss=1, se=63, al=0):
         k += 1
 
 
-def _encode_ac_from(enc, stats, fixed, zz, kx, ss=1, se=63, al=0):
+def encode_ac_arith(enc, stats, fixed, zz, kx, ss=1, se=63, al=0):
     """Encode AC coefficients (sequential, or a progressive AC FIRST
     pass): magnitudes are the point-transformed ``abs(zz[k]) >> al``,
     signs come from the original values — the exact counterpart of
-    ``_decode_ac_into``."""
+    ``decode_ac_arith``."""
     ke = se
     while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
         ke -= 1
@@ -652,7 +445,7 @@ def _encode_ac_from(enc, stats, fixed, zz, kx, ss=1, se=63, al=0):
         enc.encode(stats, 3 * (ke + 1 - 1), 1)
 
 
-def _decode_ac_refine_into(dec, stats, fixed, row, zigzag, ss, se, al):
+def decode_ac_refine_arith(dec, stats, fixed, row, zigzag, ss, se, al):
     """Progressive AC REFINEMENT pass (Annex G.2.3): per band index the
     context tree's first bin carries the EOB decision (asked only past
     the previous scans' last nonzero index), the second flags newly
@@ -685,8 +478,8 @@ def _decode_ac_refine_into(dec, stats, fixed, row, zigzag, ss, se, al):
         k += 1
 
 
-def _encode_ac_refine_from(enc, stats, fixed, zz, ss, se, ah, al):
-    """Counterpart of ``_decode_ac_refine_into``: ``ke`` is the band's
+def encode_ac_refine_arith(enc, stats, fixed, zz, ss, se, ah, al):
+    """Counterpart of ``decode_ac_refine_arith``: ``ke`` is the band's
     last nonzero at CURRENT precision (>> al), ``kex`` the last nonzero
     at the PREVIOUS precision (>> ah) — the decoder sees the latter as
     its pre-scan block state."""
@@ -718,249 +511,6 @@ def _encode_ac_refine_from(enc, stats, fixed, zz, ss, se, ah, al):
         enc.encode(stats, 3 * (k - 1), 1)
 
 
-_ZIGZAG_CACHE = None
-
-
-def _zigzag_of(_payload):
-    global _ZIGZAG_CACHE
-    if _ZIGZAG_CACHE is None:
-        from geokitten_spark.functions.jpeg import ZIGZAG
-
-        _ZIGZAG_CACHE = ZIGZAG
-    return _ZIGZAG_CACHE
-
-
-def encode_jpeg_arith(
-    img: np.ndarray,
-    quality: int = 90,
-    subsampling: str = "4:4:4",
-    dc_l: int = 0,
-    dc_u: int = 1,
-    ac_kx: int = 5,
-) -> bytes:
-    """HxWx3 RGB (or HxW gray) uint8 -> sequential ARITHMETIC-coded
-    (SOF9) JPEG bytes, with an explicit DAC segment carrying the
-    conditioning bounds (T.81 defaults L=0, U=1, Kx=5; overridable so
-    the decoder's DAC parsing is testable against non-defaults).
-    Shares the exact quantization pipeline with ``encode_jpeg``, so the
-    two encoders' outputs decode to identical pixels at the same
-    quality — the cross-entropy-coding parity the tests pin."""
-    from geokitten_spark.functions.jpeg import _dqt_segment, _prepare_components
-
-    h, w, sub, qy, qc, zzy, zzcb, zzcr, mcus_x, mcus_y, yb_w = _prepare_components(
-        img, quality, subsampling
-    )
-
-    enc = ArithEncoder()
-    dc_stats = {0: new_dc_stats(), 1: new_dc_stats()}
-    ac_stats = {0: new_ac_stats(), 1: new_ac_stats()}
-    fixed = new_fixed_stats()
-    pred = [0, 0, 0]
-    dcctx = [0, 0, 0]
-    planes = [(zzy, 0, 0), (zzcb, 1, 1), (zzcr, 2, 1)]
-
-    cond = (dc_l, dc_u, ac_kx)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for vy in range(sub):
-                for vx in range(sub):
-                    bi = (my * sub + vy) * yb_w + (mx * sub + vx)
-                    _encode_block_arith(
-                        enc, dc_stats[0], ac_stats[0], fixed, zzy[bi],
-                        pred, dcctx, 0, cond,
-                    )
-            cbi = my * mcus_x + mx
-            _encode_block_arith(
-                enc, dc_stats[1], ac_stats[1], fixed, zzcb[cbi],
-                pred, dcctx, 1, cond,
-            )
-            _encode_block_arith(
-                enc, dc_stats[1], ac_stats[1], fixed, zzcr[cbi],
-                pred, dcctx, 2, cond,
-            )
-    scan = enc.scan()
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HHBB", 1, 1, 0, 0
-    )
-    sof_comps = bytes([3, 1, (sub << 4) | sub, 0, 2, 0x11, 1, 3, 0x11, 1])
-    sof = b"\xff\xc9" + struct.pack(">HBHH", 8 + 3 * 3, 8, h, w) + sof_comps
-    # DAC: (class<<4|table, value) — DC tables carry (U<<4)|L, AC carry Kx
-    dcv = (dc_u << 4) | dc_l
-    dac_body = bytes([0x00, dcv, 0x01, dcv, 0x10, ac_kx, 0x11, ac_kx])
-    dac = b"\xff\xcc" + struct.pack(">H", 2 + len(dac_body)) + dac_body
-    sos = b"\xff\xda" + struct.pack(">HB", 6 + 2 * 3, 3) + bytes(
-        [1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]
-    )
-    return (
-        b"\xff\xd8"
-        + app0
-        + _dqt_segment(0, qy)
-        + _dqt_segment(1, qc)
-        + sof
-        + dac
-        + sos
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-def _encode_block_arith(enc, dstats, astats, fixed, zz, pred, dcctx, ci, cond):
-    dc_l, dc_u, ac_kx = cond
-    v = int(zz[0]) - pred[ci]
-    pred[ci] = int(zz[0])
-    dcctx[ci] = encode_dc_arith(enc, dstats, dcctx[ci], v, dc_l, dc_u)
-    _encode_ac_from(enc, astats, fixed, zz, ac_kx)
-
-
-def encode_jpeg_arith_progressive(
-    img: np.ndarray,
-    quality: int = 90,
-    subsampling: str = "4:4:4",
-    restart_interval: int = 0,
-    dc_l: int = 0,
-    dc_u: int = 1,
-    ac_kx: int = 5,
-) -> bytes:
-    """HxWx3 RGB (or HxW gray) uint8 -> PROGRESSIVE ARITHMETIC-coded
-    (SOF10) JPEG bytes, using the same 10-scan successive-approximation
-    script as :func:`jpeg.encode_jpeg_progressive` — so the decoder must
-    exercise all four arithmetic progressive scan kinds (DC first/
-    refine, AC first/refine) to reconstruct. Quantized coefficients are
-    identical to the sequential encoders' at the same (quality,
-    subsampling); the tests pin pixel parity across all four
-    (huffman|arithmetic) x (sequential|progressive) lanes.
-    ``restart_interval`` applies to every scan (units are MCUs for the
-    interleaved DC scans, blocks for the single-component AC scans)."""
-    from geokitten_spark.functions.jpeg import _dqt_segment, _prepare_components
-
-    h, w, sub, qy, qc, zzy, zzcb, zzcr, mcus_x, mcus_y, yb_w = _prepare_components(
-        img, quality, subsampling
-    )
-    zzs = [zzy, zzcb, zzcr]
-    strides = [yb_w, mcus_x, mcus_x]
-    samp = [(sub, sub), (1, 1), (1, 1)]
-    tds = [0, 1, 1]
-    grids = []
-    for ch, cv in samp:
-        comp_w = -(-w * ch // sub)
-        comp_h = -(-h * cv // sub)
-        grids.append((-(-comp_w // 8), -(-comp_h // 8)))
-
-    def dc_scan(ah, al):
-        parts = []
-        rst = 0
-
-        def fresh():
-            return (
-                ArithEncoder(),
-                {0: new_dc_stats(), 1: new_dc_stats()},
-                new_fixed_stats(),
-                [0, 0, 0],
-                [0, 0, 0],
-            )
-
-        enc, stats, fixed, pred, dcctx = fresh()
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                u = my * mcus_x + mx
-                if restart_interval and u and u % restart_interval == 0:
-                    parts.append(enc.scan())
-                    parts.append(bytes([0xFF, 0xD0 + (rst & 7)]))
-                    rst += 1
-                    enc, stats, fixed, pred, dcctx = fresh()
-                for c in (0, 1, 2):
-                    ch, cv = samp[c]
-                    for vy in range(cv):
-                        for vx in range(ch):
-                            bi = (my * cv + vy) * strides[c] + (mx * ch + vx)
-                            dc = int(zzs[c][bi][0])
-                            if ah == 0:
-                                val = dc >> al
-                                diff = val - pred[c]
-                                pred[c] = val
-                                dcctx[c] = encode_dc_arith(
-                                    enc, stats[tds[c]], dcctx[c], diff,
-                                    dc_l, dc_u,
-                                )
-                            else:
-                                enc.encode(fixed, 0, (dc >> al) & 1)
-        parts.append(enc.scan())
-        return b"".join(parts)
-
-    def ac_scan(c, ss, se, ah, al):
-        parts = []
-        rst = 0
-        enc, stats, fixed = ArithEncoder(), new_ac_stats(), new_fixed_stats()
-        bw, bh = grids[c]
-        u = 0
-        for by in range(bh):
-            for bx in range(bw):
-                if restart_interval and u and u % restart_interval == 0:
-                    parts.append(enc.scan())
-                    parts.append(bytes([0xFF, 0xD0 + (rst & 7)]))
-                    rst += 1
-                    enc, stats, fixed = (
-                        ArithEncoder(), new_ac_stats(), new_fixed_stats()
-                    )
-                zz = zzs[c][by * strides[c] + bx]
-                if ah == 0:
-                    _encode_ac_from(enc, stats, fixed, zz, ac_kx, ss, se, al)
-                else:
-                    _encode_ac_refine_from(enc, stats, fixed, zz, ss, se, ah, al)
-                u += 1
-        parts.append(enc.scan())
-        return b"".join(parts)
-
-    def sos(comps_tbls, ss, se, ah, al):
-        ns = len(comps_tbls)
-        body = bytes([ns])
-        for cid, td, ta in comps_tbls:
-            body += bytes([cid, (td << 4) | ta])
-        body += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
-
-    all_dc = [(1, 0, 0), (2, 1, 0), (3, 1, 0)]
-    scans = [
-        (sos(all_dc, 0, 0, 0, 1), dc_scan(0, 1)),
-        (sos([(1, 0, 0)], 1, 5, 0, 2), ac_scan(0, 1, 5, 0, 2)),
-        (sos([(3, 0, 1)], 1, 63, 0, 1), ac_scan(2, 1, 63, 0, 1)),
-        (sos([(2, 0, 1)], 1, 63, 0, 1), ac_scan(1, 1, 63, 0, 1)),
-        (sos([(1, 0, 0)], 6, 63, 0, 2), ac_scan(0, 6, 63, 0, 2)),
-        (sos([(1, 0, 0)], 1, 63, 2, 1), ac_scan(0, 1, 63, 2, 1)),
-        (sos(all_dc, 0, 0, 1, 0), dc_scan(1, 0)),
-        (sos([(3, 0, 1)], 1, 63, 1, 0), ac_scan(2, 1, 63, 1, 0)),
-        (sos([(2, 0, 1)], 1, 63, 1, 0), ac_scan(1, 1, 63, 1, 0)),
-        (sos([(1, 0, 0)], 1, 63, 1, 0), ac_scan(0, 1, 63, 1, 0)),
-    ]
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HHBB", 1, 1, 0, 0
-    )
-    sof_comps = bytes([3, 1, (sub << 4) | sub, 0, 2, 0x11, 1, 3, 0x11, 1])
-    sof = b"\xff\xca" + struct.pack(">HBHH", 8 + 3 * 3, 8, h, w) + sof_comps
-    dcv = (dc_u << 4) | dc_l
-    dac_body = bytes([0x00, dcv, 0x01, dcv, 0x10, ac_kx, 0x11, ac_kx])
-    dac = b"\xff\xcc" + struct.pack(">H", 2 + len(dac_body)) + dac_body
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    out = (
-        b"\xff\xd8"
-        + app0
-        + _dqt_segment(0, qy)
-        + _dqt_segment(1, qc)
-        + sof
-        + dac
-        + dri
-    )
-    for header, scan_bytes in scans:
-        out += header + scan_bytes
-    return out + b"\xff\xd9"
-
-
 # --- Annex H lossless statistical model (SOF11) -----------------------------
 # Each coded difference is conditioned on the classifications of Da (the
 # difference coded for the sample to the LEFT) and Db (the difference
@@ -975,11 +525,9 @@ def encode_jpeg_arith_progressive(
 # simply Ca + 5*Cb); the two X1..X15/M2..M15 magnitude ladders sit at
 # 100 and 129, the SECOND selected when Db is classified large.
 #
-# Verification boundary (same honesty as the module docstring): the
-# sandbox has no independent codec to interop-test against; what the
-# tests pin is bit-exact lossless roundtrip (decode == original sample
-# for sample), parity with the huffman lossless path, restart handling,
-# and non-default conditioning.
+# libjpeg-turbo implements no SOF11, so this model is pinned by exact
+# lossless roundtrips, parity with the Huffman lossless lane, restarts
+# and non-default conditioning (tests/test_jpeg_arith.py).
 
 LL_STAT_BINS = 158
 _LL_X1_A = 100  # ladder when Db is zero/small
@@ -1001,169 +549,25 @@ def _classify_diff(d: int, low: int, up: int) -> int:
     return _classify_dc(m, sign, low, up)
 
 
-def decode_scan_lossless_arith(
-    payload,
-    start,
-    scan_comps,
-    comps,
-    stores,
-    conditioning,
-    restart_interval,
-    size,
-    predictor,
-    pt,
-    prec,
-    split_scan,
-    predict_fn,
-):
-    """Decode one lossless ARITHMETIC-coded scan (SOF11) into the
-    per-component sample planes; returns the offset of the terminating
-    marker. Mirrors ``jpeg._decode_scan_lossless``'s raster/MCU walk and
-    modulo-2^16 reconstruction; a restart resets the coder, statistics,
-    the prediction default, and the Da/Db difference history."""
-    ih, iw = size
-    segments, end = split_scan(payload, start)
-    comp_index = {cid: k for k, (cid, ch, cv, tq) in enumerate(comps)}
-    sel = [(comp_index[cs], td) for cs, td, ta in scan_comps]
-    # predictor 0: differential lossless frame — zero prediction
-    default = 0 if predictor == 0 else 1 << (prec - pt - 1)
-
-    seg = 0
-
-    def fresh():
-        dec = ArithDecoder(bytes(segments[seg]))
-        stats = {td: new_lossless_stats() for _, td in sel}
-        # per-component difference history: row above + current-left
-        above = [np.zeros(iw, dtype=np.int64) for _ in sel]
-        left = [0 for _ in sel]
-        return dec, stats, above, left
-
-    dec, stats, above, left = fresh()
-    cond = {td: conditioning.get(("dc", td), (0, 1)) for _, td in sel}
-
-    n_mcu = 0
-    reset = False
-    for y in range(ih):
-        for ci in range(len(sel)):
-            left[ci] = 0  # row start: no left neighbour
-        for x in range(iw):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                seg += 1
-                if seg >= len(segments):
-                    raise ValueError(
-                        "arith lossless JPEG truncated: missing restart segment"
-                    )
-                dec, stats, above, left = fresh()
-                reset = True
-            for ci, (k, td) in enumerate(sel):
-                plane = stores[k]
-                low, up = cond[td]
-                ca = _classify_diff(left[ci], low, up)
-                cb = _classify_diff(int(above[ci][x]), low, up)
-                ctx = ca + 5 * cb
-                xbase = _LL_X1_B if cb >= 12 else _LL_X1_A
-                diff, _ = decode_dc_arith(dec, stats[td], ctx, low, up, xbase)
-                px = default if reset else predict_fn(plane, x, y, predictor,
-                                                      default)
-                plane[y, x] = (px + diff) & 0xFFFF
-                left[ci] = diff
-                above[ci][x] = diff
-            reset = False
-            n_mcu += 1
-    return end
+def lossless_context(da: int, db: int, low: int, up: int) -> tuple[int, int]:
+    """(decision-tree context, magnitude-ladder base) for a lossless
+    difference whose left / above neighbours coded ``da`` / ``db``."""
+    cb = _classify_diff(db, low, up)
+    return _classify_diff(da, low, up) + 5 * cb, (_LL_X1_B if cb >= 12 else _LL_X1_A)
 
 
-def encode_jpeg_lossless_arith(
-    img: np.ndarray,
-    predictor: int = 1,
-    precision: int = 8,
-    point_transform: int = 0,
-    restart_interval: int = 0,
-    dc_l: int = 0,
-    dc_u: int = 1,
-) -> bytes:
-    """HxWx3 RGB (or HxW gray) uint8 -> LOSSLESS ARITHMETIC-coded
-    (SOF11) JPEG bytes — same predictive layer as
-    ``jpeg.encode_jpeg_lossless`` (predictors 1-7, point transform,
-    bit-replicated 12/16-bit precision, restart intervals) with the QM
-    coder replacing huffman, so
-    ``decode_jpeg(encode_jpeg_lossless_arith(img)) == img`` bit-for-bit
-    at Pt=0 and the huffman/arithmetic lanes decode identically."""
-    from geokitten_spark.functions.jpeg import _ll_predict
+_ENCODERS = (
+    "encode_jpeg_arith",
+    "encode_jpeg_arith_progressive",
+    "encode_jpeg_lossless_arith",
+)
 
-    img = np.asarray(img, dtype=np.uint8)
-    gray = img.ndim == 2
-    if not gray and (img.ndim != 3 or img.shape[2] != 3):
-        raise ValueError(f"expected HxWx3 or HxW uint8, got {img.shape}")
-    if not 1 <= predictor <= 7:
-        raise ValueError("predictor must be 1-7 (0 is differential-only)")
-    if precision not in (8, 12, 16):
-        raise ValueError("precision must be 8, 12 or 16")
-    if not 0 <= point_transform < precision:
-        raise ValueError("point_transform must satisfy 0 <= Pt < precision")
-    samples = img.astype(np.int64)
-    if precision == 12:
-        samples = samples * 16 + samples // 16
-    elif precision == 16:
-        samples = samples * 257
-    samples >>= point_transform
-    h, w = img.shape[:2]
-    planes = [samples] if gray else [samples[:, :, k] for k in range(3)]
-    ncomp = len(planes)
-    default = 1 << (precision - point_transform - 1)
 
-    out_scan = bytearray()
-    rst = 0
+def __getattr__(name):
+    """The arithmetic-coded encoders are frame-process code and live in
+    ``jpeg.py``; they stay importable from here under their old names."""
+    if name in _ENCODERS:
+        from . import jpeg
 
-    def fresh():
-        enc = ArithEncoder()
-        stats = new_lossless_stats()  # every component uses DC table 0
-        above = [np.zeros(w, dtype=np.int64) for _ in range(ncomp)]
-        left = [0 for _ in range(ncomp)]
-        return enc, stats, above, left
-
-    enc, stats, above, left = fresh()
-    n_mcu = 0
-    reset = False
-    for y in range(h):
-        left = [0 for _ in range(ncomp)]
-        for x in range(w):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                out_scan += enc.scan()
-                out_scan += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst += 1
-                enc, stats, above, left = fresh()
-                reset = True
-            for ci, plane in enumerate(planes):
-                xval = int(plane[y, x])
-                px = default if reset else _ll_predict(plane, x, y,
-                                                       predictor, default)
-                d = (xval - px) & 0xFFFF
-                if d >= 0x8000:
-                    d -= 0x10000
-                ca = _classify_diff(left[ci], dc_l, dc_u)
-                cb = _classify_diff(int(above[ci][x]), dc_l, dc_u)
-                ctx = ca + 5 * cb
-                xbase = _LL_X1_B if cb >= 12 else _LL_X1_A
-                encode_dc_arith(enc, stats, ctx, d, dc_l, dc_u, xbase)
-                left[ci] = d
-                above[ci][x] = d
-            reset = False
-            n_mcu += 1
-    out_scan += enc.scan()
-
-    sof_comps = b"".join(bytes([cid + 1, 0x11, 0]) for cid in range(ncomp))
-    sof = b"\xff\xcb" + struct.pack(
-        ">HBHH", 8 + 3 * ncomp, precision, h, w
-    ) + bytes([ncomp]) + sof_comps
-    dcv = (dc_u << 4) | dc_l
-    dac = b"\xff\xcc" + struct.pack(">H", 4) + bytes([0x00, dcv])
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    sos = b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp) + bytes(
-        [b for cid in range(ncomp) for b in (cid + 1, 0x00)]
-    ) + bytes([predictor, 0, point_transform])
-    return b"\xff\xd8" + sof + dac + dri + sos + out_scan + b"\xff\xd9"
+        return getattr(jpeg, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

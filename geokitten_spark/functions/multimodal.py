@@ -158,14 +158,12 @@ def synth_payload(doc_id: int, text: str) -> bytes:
     from .jpeg import (
         encode_jpeg,
         encode_jpeg12,
-        encode_jpeg_hierarchical,
-        encode_jpeg_lossless,
-        encode_jpeg_progressive,
-    )
-    from .jpeg_arith import (
         encode_jpeg_arith,
         encode_jpeg_arith_progressive,
+        encode_jpeg_hierarchical,
+        encode_jpeg_lossless,
         encode_jpeg_lossless_arith,
+        encode_jpeg_progressive,
     )
     from .riff import encode_avi_mjpeg, encode_wav
 

@@ -155,18 +155,21 @@ class IVFIndex:
         obj.lists = spark.read.parquet(f"{storage_path}/lists")
         return obj
 
+    def _probe(self, qv: np.ndarray, n_probe: int) -> list:
+        """The ``n_probe`` lists whose centroids are most cosine-similar to
+        ``qv`` (ties broken by list id)."""
+
+        def cos(c):
+            return float(qv @ c) / (np.linalg.norm(qv) * np.linalg.norm(c) + 1e-300)
+
+        return sorted(
+            self._cent_map, key=lambda lst: (-cos(self._cent_map[lst]), lst)
+        )[:n_probe]
+
     def search(self, query_vec: list[float], *, k: int = 10, n_probe: int = 2) -> DataFrame:
         """Top-k among vectors in the ``n_probe`` nearest lists (scan is
         partition-pruned to exactly those lists)."""
-        qv = np.asarray(query_vec, dtype=np.float64)
-
-        def cos(c):
-            d = float(qv @ c)
-            return d / (np.linalg.norm(qv) * np.linalg.norm(c) + 1e-300)
-
-        probe = sorted(
-            self._cent_map, key=lambda lst: (-cos(self._cent_map[lst]), lst)
-        )[:n_probe]
+        probe = self._probe(np.asarray(query_vec, dtype=np.float64), n_probe)
         q = F.array(*[F.lit(float(x)) for x in query_vec])
         cand = self.lists.filter(F.col("__lst").isin(list(probe)))
         scored = cand.select(F.col(self.id_col), _cosine(F.col("v"), q).alias("sim"))
@@ -190,21 +193,10 @@ class IVFIndex:
         from pyspark.sql import Window
 
         spark = self.lists.sparkSession
-        qn = {}
         probe_rows = []
         for qid, qv in queries:
             v = np.asarray(qv, dtype=np.float64)
-            qn[qid] = v
-
-            def cos(c, v=v):
-                return float(v @ c) / (
-                    np.linalg.norm(v) * np.linalg.norm(c) + 1e-300
-                )
-
-            probe = sorted(
-                self._cent_map, key=lambda lst: (-cos(self._cent_map[lst]), lst)
-            )[:n_probe]
-            for lst in probe:
+            for lst in self._probe(v, n_probe):
                 probe_rows.append((int(qid), [float(x) for x in v], lst))
         union = sorted({r[2] for r in probe_rows})
         probe_df = spark.createDataFrame(probe_rows, ["query_id", "qvec", "__lst"])
@@ -324,21 +316,18 @@ class PQIndex:
         obj.codes = spark.read.parquet(f"{storage_path}/codes")
         return obj
 
-    def search(self, query_vec: list[float], *, k: int = 10) -> DataFrame:
-        """ADC top-k: one broadcast row carries the (m·n_codes) distance
-        table; the score is a JVM ``aggregate`` over the M byte codes —
-        the scan reads M bytes per vector and never touches Python."""
-        spark = self.codes.sparkSession
+    def _dist_table(self, query_vec) -> list:
+        """The query's flattened (m·n_codes) ADC table on the L2-normalized
+        query: ``table[mm * n_codes + c] = ||q_mm - book[mm, c]||²``."""
         qv = np.asarray(query_vec, dtype=np.float64)
         qv = qv / (np.linalg.norm(qv) + 1e-300)
-        qs = qv.reshape(self.m, self.dsub)
+        diff = qv.reshape(self.m, self.dsub)[:, None, :] - self.books
+        return [float(x) for x in np.einsum("mkd,mkd->mk", diff, diff).reshape(-1)]
+
+    def _adc_dist(self):
+        """``adc_dist`` column: a JVM ``aggregate`` summing the broadcast
+        ``__tbl`` entry of each of the M byte codes, rounded to 1e-9."""
         n_codes = self.books.shape[1]
-        # dist_table[mm, c] = ||q_mm - book[mm, c]||²  (flattened row-major)
-        diff = qs[:, None, :] - self.books
-        table = np.einsum("mkd,mkd->mk", diff, diff).reshape(-1)
-        tbl_df = spark.createDataFrame(
-            [([float(x) for x in table],)], ["__tbl"]
-        )
         dist = F.aggregate(
             F.zip_with(
                 F.col("codes"),
@@ -350,8 +339,16 @@ class PQIndex:
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
+        return F.round(dist, 9).alias("adc_dist")
+
+    def search(self, query_vec: list[float], *, k: int = 10) -> DataFrame:
+        """ADC top-k: one broadcast row carries the (m·n_codes) distance
+        table; the score is a JVM ``aggregate`` over the M byte codes —
+        the scan reads M bytes per vector and never touches Python."""
+        spark = self.codes.sparkSession
+        tbl_df = spark.createDataFrame([(self._dist_table(query_vec),)], ["__tbl"])
         scored = self.codes.join(F.broadcast(tbl_df)).select(
-            F.col(self.id_col), F.round(dist, 9).alias("adc_dist")
+            F.col(self.id_col), self._adc_dist()
         )
         return scored.orderBy(
             F.col("adc_dist").asc(), F.col(self.id_col).asc()
@@ -366,33 +363,14 @@ class PQIndex:
         from pyspark.sql import Window
 
         spark = self.codes.sparkSession
-        n_codes = self.books.shape[1]
-        rows = []
-        for qid, qv in queries:
-            v = np.asarray(qv, dtype=np.float64)
-            v = v / (np.linalg.norm(v) + 1e-300)
-            qs = v.reshape(self.m, self.dsub)
-            diff = qs[:, None, :] - self.books
-            table = np.einsum("mkd,mkd->mk", diff, diff).reshape(-1)
-            rows.append((int(qid), [float(x) for x in table]))
+        rows = [(int(qid), self._dist_table(qv)) for qid, qv in queries]
         tbl_df = spark.createDataFrame(rows, ["query_id", "__tbl"])
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("codes"),
-                F.sequence(F.lit(0), F.lit(self.m - 1)),
-                lambda c, i: F.element_at(
-                    F.col("__tbl"), (i * n_codes + c + 1).cast("int")
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         w = Window.partitionBy("query_id").orderBy(
             F.col("adc_dist").asc(), F.col(self.id_col).asc()
         )
         return (
             self.codes.join(F.broadcast(tbl_df))
-            .select("query_id", F.col(self.id_col), F.round(dist, 9).alias("adc_dist"))
+            .select("query_id", F.col(self.id_col), self._adc_dist())
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", self.id_col, "rank")

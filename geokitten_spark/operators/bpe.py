@@ -33,6 +33,7 @@ keeps the unit the same as the repo's whitespace word splits.
 from __future__ import annotations
 
 from collections import Counter
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -114,8 +115,66 @@ def bpe_word(word: str, ranks: dict[tuple[str, str], int]) -> tuple:
 # Spark surface
 # ---------------------------------------------------------------------------
 
+# the word split, dictionary query, memoized tokenize UDF and token
+# top-k below are shared with the unigram sibling (`operators/unigram.py`),
+# which passes its own per-word segmenter
+
 def _words(text_col: str) -> Column:
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
+
+def _word_counts(docs: DataFrame, text_col: str, vocab_words: int) -> list:
+    """ONE distributed word-count aggregation + top-V truncation (count
+    desc, word asc): the collected training dictionary."""
+    wc = (
+        docs.select(F.explode(_words(text_col)).alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), "w")
+        .limit(vocab_words)
+        .collect()
+    )
+    return [(r.w, r.c) for r in wc]
+
+
+def _tokenize_words(
+    docs: DataFrame, segment: Callable[[str], tuple], text_col: str, out_col: str
+) -> DataFrame:
+    """Map-only Arrow-batched tokenization: Catalyst splits words (the
+    same `_words` expression training used), the UDF maps each word
+    through ``segment`` with a per-batch word memo."""
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def tok(word_lists: pd.Series) -> pd.Series:
+        memo: dict[str, tuple] = {}
+
+        def one(words):
+            out = []
+            for w in words if words is not None else ():
+                if not w:
+                    continue
+                got = memo.get(w)
+                if got is None:
+                    got = memo[w] = segment(w)
+                out.extend(got)
+            return out
+
+        return word_lists.map(one)
+
+    return docs.withColumn(out_col, tok(_words(text_col)))
+
+
+def _token_topk(toks: DataFrame, tok_col: str, n_top: int) -> DataFrame:
+    """ONE token-count shuffle + distributed top-k: (token, n_occ) by
+    (n_occ desc, token)."""
+    return (
+        toks.select(F.explode(tok_col).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .orderBy(F.desc("n_occ"), "token")
+        .limit(n_top)
+    )
 
 
 def bpe_train(
@@ -127,16 +186,7 @@ def bpe_train(
 ) -> list[tuple[str, str]]:
     """ONE distributed word-count aggregation + top-V truncation, then
     the driver-side merge loop over the resulting dictionary."""
-    wc = (
-        docs.select(F.explode(_words(text_col)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .limit(vocab_words)
-        .collect()
-    )
-    return bpe_merges([(r.w, r.c) for r in wc], n_merges=n_merges)
+    return bpe_merges(_word_counts(docs, text_col, vocab_words), n_merges=n_merges)
 
 
 def bpe_tokenize(
@@ -152,25 +202,7 @@ def bpe_tokenize(
     used), so the UDF only maps words → subwords and can never diverge
     from the dictionary's tokenization."""
     ranks = {tuple(p): i for i, p in enumerate(merges)}
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def tok(word_lists: pd.Series) -> pd.Series:
-        memo: dict[str, tuple] = {}
-
-        def one(words):
-            out = []
-            for w in words if words is not None else ():
-                if not w:
-                    continue
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = bpe_word(w, ranks)
-                out.extend(got)
-            return out
-
-        return word_lists.map(one)
-
-    return docs.withColumn(out_col, tok(_words(text_col)))
+    return _tokenize_words(docs, lambda w: bpe_word(w, ranks), text_col, out_col)
 
 
 def bpe_vocab_stats(
@@ -187,13 +219,7 @@ def bpe_vocab_stats(
         docs, text_col=text_col, vocab_words=vocab_words, n_merges=n_merges
     )
     toks = bpe_tokenize(docs, merges, text_col=text_col)
-    return (
-        toks.select(F.explode("bpe_tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .orderBy(F.desc("n_occ"), "token")
-        .limit(n_top)
-    )
+    return _token_topk(toks, "bpe_tokens", n_top)
 
 
 # ---------------------------------------------------------------------------

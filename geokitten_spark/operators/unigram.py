@@ -32,10 +32,9 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql import DataFrame
+
+from .bpe import _token_topk, _tokenize_words, _word_counts
 
 __all__ = [
     "unigram_train",
@@ -151,10 +150,6 @@ def unigram_train(
 # Spark surface
 # ---------------------------------------------------------------------------
 
-def _words(text_col: str) -> Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-
 def unigram_train_spark(
     docs: DataFrame,
     *,
@@ -167,17 +162,8 @@ def unigram_train_spark(
 ) -> dict[str, float]:
     """ONE distributed word-count aggregation + top-V truncation, then
     the driver-side trainer over the resulting dictionary."""
-    wc = (
-        docs.select(F.explode(_words(text_col)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .limit(vocab_words)
-        .collect()
-    )
     return unigram_train(
-        [(r.w, r.c) for r in wc],
+        _word_counts(docs, text_col, vocab_words),
         max_piece_len=max_piece_len,
         seed_size=seed_size,
         vocab_size=vocab_size,
@@ -196,25 +182,9 @@ def unigram_tokenize(
     """Map-only Arrow-batched Viterbi tokenization; the vocab rides the
     closure, a per-batch word memo amortizes repeats. Word splitting is
     the SAME Catalyst expression training used."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def tok(word_lists: pd.Series) -> pd.Series:
-        memo: dict[str, tuple] = {}
-
-        def one(words):
-            out = []
-            for w in words if words is not None else ():
-                if not w:
-                    continue
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = viterbi_segment(w, logp, max_piece_len)
-                out.extend(got)
-            return out
-
-        return word_lists.map(one)
-
-    return docs.withColumn(out_col, tok(_words(text_col)))
+    return _tokenize_words(
+        docs, lambda w: viterbi_segment(w, logp, max_piece_len), text_col, out_col
+    )
 
 
 def unigram_vocab_stats(
@@ -228,13 +198,7 @@ def unigram_vocab_stats(
     Returns (token, n_occ) by (n_occ desc, token)."""
     logp = unigram_train_spark(docs, text_col=text_col, **train_kw)
     toks = unigram_tokenize(docs, logp, text_col=text_col)
-    return (
-        toks.select(F.explode("uni_tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .orderBy(F.desc("n_occ"), "token")
-        .limit(n_top)
-    )
+    return _token_topk(toks, "uni_tokens", n_top)
 
 
 # ---------------------------------------------------------------------------

@@ -411,3 +411,242 @@ def test_hierarchical_malformed_streams_raise():
     # RGB input to the grayscale fixture encoder is a loud error
     with pytest.raises(ValueError, match="grayscale"):
         encode_jpeg_hierarchical(np.zeros((8, 8, 3), np.uint8))
+
+
+# ---------------------------------------------------------------------------
+# every encoder lane: golden bytes and pixels, truncated streams
+# ---------------------------------------------------------------------------
+
+from hashlib import sha256  # noqa: E402
+
+from geokitten_spark.functions.jpeg import (  # noqa: E402
+    encode_jpeg12,
+    encode_jpeg_hierarchical,
+    encode_jpeg_lossless,
+)
+from geokitten_spark.functions.jpeg_arith import (  # noqa: E402
+    encode_jpeg_arith,
+    encode_jpeg_arith_progressive,
+    encode_jpeg_lossless_arith,
+)
+
+
+def _lane_img(seed: int, h: int, w: int, gray: bool = False) -> np.ndarray:
+    """Gradient + seeded texture (odd sizes exercise edge/MCU padding)."""
+    rng = np.random.default_rng(seed)
+    yy, xx = np.mgrid[0:h, 0:w]
+    base = (yy * 5 + xx * 3) % 256
+    tex = rng.integers(0, 64, size=(h, w))
+    if gray:
+        return ((base + tex) % 256).astype(np.uint8)
+    chans = [(base + tex) % 256, (255 - base + tex) % 256,
+             (base // 2 + tex * 2) % 256]
+    return np.stack(chans, axis=2).astype(np.uint8)
+
+
+_RGB = _lane_img(1, 23, 37)
+_GRAY = _lane_img(2, 19, 29, gray=True)
+_SQUARE = _lane_img(3, 16, 16)
+
+# lane -> encoder call; every encoder, both entropy codings, restarts,
+# 4:2:0, gray, non-default DAC conditioning, 1-2 pyramid levels and the
+# lossless final stage
+GOLDEN_LANES = {
+    "baseline": lambda: encode_jpeg(_RGB, 85),
+    "baseline_420_rst3": lambda: encode_jpeg(_RGB, 75, "4:2:0", 3),
+    "baseline_gray_rst1": lambda: encode_jpeg(_GRAY, 90, "4:4:4", 1),
+    "jpeg12": lambda: encode_jpeg12(_RGB, 80),
+    "progressive_420": lambda: encode_jpeg_progressive(_RGB, 80, "4:2:0"),
+    "progressive_gray": lambda: encode_jpeg_progressive(_GRAY, 90),
+    "arith": lambda: encode_jpeg_arith(_RGB, 85),
+    "arith_420_dac": lambda: encode_jpeg_arith(_RGB, 75, "4:2:0", 1, 3, 9),
+    "arith_progressive_rst3": lambda: encode_jpeg_arith_progressive(
+        _RGB, 80, "4:4:4", 3
+    ),
+    "arith_progressive_420_dac": lambda: encode_jpeg_arith_progressive(
+        _SQUARE, 70, "4:2:0", 1, 2, 5, 2
+    ),
+    "lossless_p4_12bit_rst3": lambda: encode_jpeg_lossless(_RGB, 4, 12, 1, 3),
+    "lossless_gray_p7_16bit": lambda: encode_jpeg_lossless(_GRAY, 7, 16),
+    "lossless_arith_p5_dac_rst3": lambda: encode_jpeg_lossless_arith(
+        _RGB, 5, 8, 0, 3, 2, 4
+    ),
+    "lossless_arith_gray_p1_12bit": lambda: encode_jpeg_lossless_arith(_GRAY, 1, 12),
+    "hierarchical_l1": lambda: encode_jpeg_hierarchical(_GRAY, 85, 1),
+    "hierarchical_arith_l2": lambda: encode_jpeg_hierarchical(_GRAY, 85, 2, True),
+    "hierarchical_prog_lossless_l2": lambda: encode_jpeg_hierarchical(
+        _GRAY, 80, 2, False, True, True
+    ),
+    "hierarchical_arith_prog_lossless_l1": lambda: encode_jpeg_hierarchical(
+        _SQUARE[:, :, 0], 80, 1, True, True, True
+    ),
+}
+
+# (sha256 of the encoded bytes, sha256 of decode_jpeg's pixels)
+GOLDEN = {
+    "arith": (
+        "0d7bf4250ca0c8df20646ee92ec575b64f72fd3e29f89d6405fe0d9dbe62244a",
+        "8a697e8ddcd4b99c51cf49f06745961b3354aec35cf5351616a8aab39434ab99",
+    ),
+    "arith_420_dac": (
+        "bc0a90739abdbbdd7a267bea6c319088d37165e1622705935e97dd5b257eaec6",
+        "77629146459c93637a76ad5bbcb2fecd4b32992079fef626da75ebb0e332a107",
+    ),
+    "arith_progressive_420_dac": (
+        "c65b3a53c85be2cd32d1052b7b2253dded752e1700b16eec09a33fbd3ebb8dcb",
+        "12ac61d132e4b3edac16781847b9f9a5cc1329c44b5ea370d7b0e9cd26abee27",
+    ),
+    "arith_progressive_rst3": (
+        "b4d7f5bfe1f3f75104b44a0f91af84ad5de6906a424528a4de78712aad10ed1d",
+        "8b504a512a891d9f255300e8e1ab69d92a802c4226d66af797b253f4451fe6d3",
+    ),
+    "baseline": (
+        "2ff763cf8f0a5015cb883476d878967667f29d3382108dedb15ad6e24f8199f8",
+        "8a697e8ddcd4b99c51cf49f06745961b3354aec35cf5351616a8aab39434ab99",
+    ),
+    "baseline_420_rst3": (
+        "93c82a63977e21a1c79d891a45174f2b110157cec7c01e0b2bf081b923e54e67",
+        "77629146459c93637a76ad5bbcb2fecd4b32992079fef626da75ebb0e332a107",
+    ),
+    "baseline_gray_rst1": (
+        "f641b3581f592887f5a8c73888ec69ec3fff2aead8c5042c664f548503d32bf2",
+        "7b69e9d426a6c7117cde414be77d0dd47e270a430e92ac28fc07c9ae2516830c",
+    ),
+    "hierarchical_arith_l2": (
+        "a215b8f6a4a280e6cc880e6bd64e6c6726f785476b214c668a34e2a2824ef549",
+        "fbbe4f3d845d685cf406b38da3687ac2f43130d7200b5bd2f6d507da034e6627",
+    ),
+    "hierarchical_arith_prog_lossless_l1": (
+        "af18c7ec083cac3f85092bff790fcb93ac7ab307dfb3d21e727461b455f4b8f1",
+        "637ad2e3657214eab318f199e6e1f84e70dc7e646da5707af3b74605def1560f",
+    ),
+    "hierarchical_l1": (
+        "fec7c2e26bef3854e7a70a591d937e01ba52b035a635d014333e5e4a84f8f904",
+        "21fb309897dbafa7c5bdd759ab9bdaa8cabc21ce1fc503ec4da2a1baf8fee9cf",
+    ),
+    "hierarchical_prog_lossless_l2": (
+        "a977d62fa06e657b44640eb73c7030770a0d8e6069b1b260f09960710a82226f",
+        "ef50e03f780bf1afdae9614ecd9d18ba825fd810de15ea010afc2ddf3cda0143",
+    ),
+    "jpeg12": (
+        "b68cf9c921fe8e9ce5b0bd6c42b080708eb3c04e0d2a746487cdf67aff365dad",
+        "1a8bc5e50edeb42f15b7e687335273d61f23830971fd9d51057010b4b2e7fc7c",
+    ),
+    "lossless_arith_gray_p1_12bit": (
+        "81e937701cf3d52828b3435e8e8eaa60545c43001b57cca2df1ae8395ff34cad",
+        "ef50e03f780bf1afdae9614ecd9d18ba825fd810de15ea010afc2ddf3cda0143",
+    ),
+    "lossless_arith_p5_dac_rst3": (
+        "aea7644ef507981a863c230ec1bdf939c5ff85c9d38b2a6c2584c55253a0b0d3",
+        "780afec7684bea79b452e17ba37885d679aa867e018218aabb83642122397c55",
+    ),
+    "lossless_gray_p7_16bit": (
+        "7fcfe95e2e085e20e04008a40670fb3805e29685bfd8b50f5a89a6e5e56a407a",
+        "ef50e03f780bf1afdae9614ecd9d18ba825fd810de15ea010afc2ddf3cda0143",
+    ),
+    "lossless_p4_12bit_rst3": (
+        "9d627ed9bb0afc13a83e1a4b3ad6dd72824bb9a4e3fb524316dacfa8fa5710e1",
+        "780afec7684bea79b452e17ba37885d679aa867e018218aabb83642122397c55",
+    ),
+    "progressive_420": (
+        "f7266e4a51df0cc99862c99030cf61a29df7d60bfe31901b70656a80ddbad1df",
+        "a1008281c1ce97472d6849942fab4df2ba6fb1698ca872801ad08a0a57b8afc1",
+    ),
+    "progressive_gray": (
+        "93d93329b7f5130f5c9a9984f0772ad22cc3dacbca56340ea8c1df092ec19059",
+        "7b69e9d426a6c7117cde414be77d0dd47e270a430e92ac28fc07c9ae2516830c",
+    ),
+}
+
+
+@pytest.mark.parametrize("lane", sorted(GOLDEN_LANES))
+def test_encoder_lane_bytes_and_pixels_are_golden(lane):
+    """Pins every encoder lane's exact output and its decode across
+    refactors of the shared frame writer and scan walkers."""
+    data = GOLDEN_LANES[lane]()
+    pixels = decode_jpeg(data)
+    got = (sha256(data).hexdigest(), sha256(pixels.tobytes()).hexdigest())
+    assert got == GOLDEN[lane]
+
+
+_TRUNC_RGB = np.random.default_rng(0).integers(0, 256, (24, 40, 3)).astype(np.uint8)
+
+TRUNCATION_LANES = {
+    "baseline_rst3": lambda: encode_jpeg(_TRUNC_RGB, restart_interval=3),
+    "progressive": lambda: encode_jpeg_progressive(_TRUNC_RGB, 75, "4:2:0"),
+    "jpeg12": lambda: encode_jpeg12(_TRUNC_RGB),
+    "arith": lambda: encode_jpeg_arith(_TRUNC_RGB),
+    "arith_progressive_rst2": lambda: encode_jpeg_arith_progressive(
+        _TRUNC_RGB, restart_interval=2
+    ),
+    "lossless_rst40": lambda: encode_jpeg_lossless(_TRUNC_RGB, restart_interval=40),
+    "lossless_arith_rst40": lambda: encode_jpeg_lossless_arith(
+        _TRUNC_RGB, restart_interval=40
+    ),
+    "hierarchical": lambda: encode_jpeg_hierarchical(_TRUNC_RGB[:, :, 0]),
+    "hierarchical_arith": lambda: encode_jpeg_hierarchical(
+        _TRUNC_RGB[:, :, 0], arithmetic=True
+    ),
+    "hierarchical_prog_lossless": lambda: encode_jpeg_hierarchical(
+        _TRUNC_RGB[:, :, 1], progressive_diff=True, final_lossless=True
+    ),
+    "hierarchical_arith_prog_lossless": lambda: encode_jpeg_hierarchical(
+        _TRUNC_RGB[:, :, 2], arithmetic=True, progressive_diff=True,
+        final_lossless=True,
+    ),
+}
+
+
+def _truncation_points(data: bytes) -> list:
+    """Every cut inside the headers up to the first scan's data, the
+    first 8 cuts after each later marker (inside its code, length or
+    header), and a stride through the entropy-coded data."""
+    sos = data.index(b"\xff\xda")
+    first_scan = sos + 2 + int.from_bytes(data[sos + 2 : sos + 4], "big")
+    cuts = set(range(first_scan + 1)) | set(range(first_scan, len(data), 23))
+    for i in range(first_scan, len(data) - 1):
+        if data[i] == 0xFF and data[i + 1] != 0 and not 0xD0 <= data[i + 1] <= 0xD7:
+            cuts.update(range(i, i + 8))
+    return sorted(c for c in cuts if c < len(data))
+
+
+@pytest.mark.parametrize("lane", sorted(TRUNCATION_LANES))
+def test_truncated_stream_decodes_or_raises_value_error(lane):
+    """A truncated payload either decodes (arithmetic scans read zeros
+    past the end; progressive streams keep their finished scans) or
+    raises ValueError — never struct.error / IndexError from a short
+    segment, a cut length field or a missing restart segment (a legal
+    but unsupported frame may raise NotImplementedError)."""
+    data = TRUNCATION_LANES[lane]()
+    for n in _truncation_points(data):
+        try:
+            decode_jpeg(data[:n])
+        except (ValueError, NotImplementedError):
+            pass
+
+
+def _patched(data: bytes, marker: bytes, offset: int, value: int) -> bytes:
+    """``data`` with the byte ``offset`` past the first ``marker`` set."""
+    out = bytearray(data)
+    out[data.index(marker) + offset] = value
+    return bytes(out)
+
+
+_PROG = encode_jpeg_progressive(_SQUARE, 80)
+
+
+@pytest.mark.parametrize(
+    "marker,offset,value,match",
+    [
+        (b"\xff\xda", 12, 64, "band end"),  # first scan's Se
+        (b"\xff\xda", 5, 9, "unknown component"),
+        (b"\xff\xc2", 11, 0x01, "sampling factor"),  # luma H = 0
+        (b"\xff\xc4", 4, 0x05, "huffman table"),  # DC table 0 -> 5
+        (b"\xff\xc2", 3, 8, "SOF segment too short"),
+        (b"\xff\xc2", 12, 7, "quantization table"),  # luma Tq 7
+    ],
+    ids=["se", "component", "sampling", "dht", "sof_len", "dqt"],
+)
+def test_malformed_segments_raise_value_error(marker, offset, value, match):
+    with pytest.raises(ValueError, match=match):
+        decode_jpeg(_patched(_PROG, marker, offset, value))
