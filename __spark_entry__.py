@@ -1012,13 +1012,11 @@ def q_tile_distinct_rollup(spark, sf_dir):
     return tile_distinct_rollup(docs, "lon", "lat", "url", [3, 5, 7])
 
 
-def q_tile_vectorize(spark, sf_dir):
-    """A6 raster→vector: tile aggregate at res 6 vectorized back to cell
-    rectangle corners (pure SQL decode of the packed id; the WKT feature
-    column is Spark-side only — double→string rendering differs across
-    engines, so the oracle compares the corner NUMBERS)."""
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
-    from geokitten_spark.cells.grid import RES_SHIFT, X_SHIFT
+def _cell_corners(spark, sf_dir):
+    """Res-6 tile aggregate with each cell's corners: (cell_id, n_docs,
+    lon0, lat0, lon1, lat1) — exact bit-shift id decode, dyadic corner
+    math (Spark, numpy and DuckDB produce identical doubles)."""
+    from geokitten_spark.functions.cells_udfs import _grid_bounds_col, grid_cell_col
 
     docs = _web_docs(spark, sf_dir)
     tiles = (
@@ -1026,19 +1024,25 @@ def q_tile_vectorize(spark, sf_dir):
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    # exact bit-shift decode (double division flips FLOOR for cells >= 2^53)
-    ix = F.shiftright(F.col("cell_id"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = F.col("cell_id") % (1 << X_SHIFT)
-    n = float(1 << 6)
+    corners = _grid_bounds_col(F.col("cell_id"), 6)
+    names = ("lon0", "lat0", "lon1", "lat1")
     return tiles.select(
+        "cell_id", "n_docs", *[c.alias(a) for c, a in zip(corners, names)]
+    )
+
+
+def q_tile_vectorize(spark, sf_dir):
+    """A6 raster→vector: tile aggregate at res 6 vectorized back to cell
+    rectangle corners (pure SQL decode of the packed id; the WKT feature
+    column is Spark-side only — double→string rendering differs across
+    engines, so the oracle compares the corner NUMBERS)."""
+    return _cell_corners(spark, sf_dir).select(
         "cell_id",
         "n_docs",
-        F.round(-180.0 + ix * 360.0 / n, 9).alias("x0"),
-        F.round(-90.0 + iy * 180.0 / n, 9).alias("y0"),
-        F.round(-180.0 + (ix + 1) * 360.0 / n, 9).alias("x1"),
-        F.round(-90.0 + (iy + 1) * 180.0 / n, 9).alias("y1"),
+        F.round("lon0", 9).alias("x0"),
+        F.round("lat0", 9).alias("y0"),
+        F.round("lon1", 9).alias("x1"),
+        F.round("lat1", 9).alias("y1"),
     )
 
 
@@ -1134,23 +1138,14 @@ def q_zorder_layout(spark, sf_dir):
     contiguous runs (the min/max file-statistics pruning story,
     DEPLOY.md). Pure integer expressions shared verbatim with DuckDB."""
     from geokitten_spark.cells.grid import morton_sql
+    from geokitten_spark.functions.cells_udfs import _grid_clamp_col, _grid_xy_col
 
     res, drop = 8, 3
-    n = 1 << res
     docs = _web_docs(spark, sf_dir)
-    ix = F.least(
-        F.lit(n - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col("lon") + 180.0) / 360.0 * n).cast("long")
-        ),
+    ix, iy = _grid_xy_col(F.col("lon"), F.col("lat"), res)
+    proj = docs.select(
+        _grid_clamp_col(ix, res).alias("ix"), _grid_clamp_col(iy, res).alias("iy")
     )
-    iy = F.least(
-        F.lit(n - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col("lat") + 90.0) / 180.0 * n).cast("long")
-        ),
-    )
-    proj = docs.select(ix.alias("ix"), iy.alias("iy"))
     z = F.expr(morton_sql("ix", "iy", res))
     quad = 1 << (2 * drop)
     return (
@@ -3419,30 +3414,9 @@ def q_mvt_tiles(spark, sf_dir):
     verified against the published spec 2.1 command vectors). Oracle =
     the SAME pure kernels driver-side (oracles.mvt_tiles_sql) — every
     blob md5 must match byte-for-byte."""
-    from geokitten_spark.cells.grid import RES_SHIFT, X_SHIFT
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
     from geokitten_spark.viz.mvt import mvt_cells
 
-    docs = _web_docs(spark, sf_dir)
-    tiles = (
-        docs.select(grid_cell_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"))
-        .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    ix = F.shiftright(F.col("cell_id"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = F.col("cell_id") % (1 << X_SHIFT)
-    n = float(1 << 6)
-    corners = tiles.select(
-        "cell_id",
-        "n_docs",
-        (F.lit(-180.0) + ix * (360.0 / n)).alias("lon0"),
-        (F.lit(-90.0) + iy * (180.0 / n)).alias("lat0"),
-        (F.lit(-180.0) + (ix + 1) * (360.0 / n)).alias("lon1"),
-        (F.lit(-90.0) + (iy + 1) * (180.0 / n)).alias("lat1"),
-    )
-    out = mvt_cells(corners, z=3)
+    out = mvt_cells(_cell_corners(spark, sf_dir), z=3)
     return out.select(
         "z",
         "x",
@@ -3461,30 +3435,9 @@ def q_mvt_pyramid(spark, sf_dir):
     recomputation per level. Blobs are byte-deterministic; oracle =
     the same pure kernels driver-side (oracles.mvt_pyramid_sql), one
     VALUES row per (z, x, y), md5 per blob."""
-    from geokitten_spark.cells.grid import RES_SHIFT, X_SHIFT
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
     from geokitten_spark.viz.mvt import mvt_pyramid
 
-    docs = _web_docs(spark, sf_dir)
-    tiles = (
-        docs.select(grid_cell_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"))
-        .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    ix = F.shiftright(F.col("cell_id"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = F.col("cell_id") % (1 << X_SHIFT)
-    n = float(1 << 6)
-    corners = tiles.select(
-        "cell_id",
-        "n_docs",
-        (F.lit(-180.0) + ix * (360.0 / n)).alias("lon0"),
-        (F.lit(-90.0) + iy * (180.0 / n)).alias("lat0"),
-        (F.lit(-180.0) + (ix + 1) * (360.0 / n)).alias("lon1"),
-        (F.lit(-90.0) + (iy + 1) * (180.0 / n)).alias("lat1"),
-    )
-    out = mvt_pyramid(corners, zooms=(3, 2, 1))
+    out = mvt_pyramid(_cell_corners(spark, sf_dir), zooms=(3, 2, 1))
     return out.select(
         "z",
         "x",

@@ -8,6 +8,22 @@ tiling join / tile aggregate / kRing-kNN operators verifiable end-to-end.
 Layout: at resolution ``r`` the world [-180,180)×[-90,90) is split into
 ``2^r × 2^r`` cells; ``cell_id = r·2^58 + ix·2^29 + iy`` (single BIGINT so
 range/hash partitioning and sort-merge joins apply natively — SURVEY §1.2).
+
+The layout is known only here and in its Column twins in
+``functions/cells_udfs.py``; every operator packs, decodes and projects
+through these operations:
+
+* numpy — ``grid_cell`` (encode; finite input only), ``_grid_xy``
+  (unclamped floor projection), ``_grid_pack``, ``grid_decode``;
+* SQL (Spark SQL and DuckDB) — ``grid_cell_sql`` (encode; NULL where lon
+  or lat is NULL, NaN or ±Inf), ``_grid_pack_sql``, ``grid_decode_sql``;
+* Column (``cells_udfs``) — ``grid_cell_col`` (encode, same NULL rule),
+  ``_grid_key_col`` (the same encode as a non-nullable join key, -1 where
+  it is NULL), ``_grid_finite_col`` (its guard), ``_grid_world_col``
+  (world-clamped encode, unguarded), ``_grid_xy_col`` (unclamped floor
+  projection, like ``_grid_xy``), ``_grid_clamp_col`` (world clamp),
+  ``_grid_pack_col``, ``_grid_decode_col``, ``_grid_bounds_col`` (cell
+  corner lon/lat).
 """
 
 from __future__ import annotations
@@ -30,22 +46,45 @@ RES_SHIFT = 58
 X_SHIFT = 29
 
 
-def grid_cell(lon, lat, res: int):
-    """Vectorized lon/lat → grid cell id at resolution ``res`` (0–28)."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
+def _grid_xy(lon, lat, res: int):
+    """Vectorized lon/lat → UNCLAMPED integer grid coordinates (ix, iy)
+    at ``res``: the floor of the equirectangular projection. Callers clip
+    to the range they need (the world for ``grid_cell``, a polygon's bbox
+    range for the cover builder)."""
     n = np.int64(1) << res
-    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+    ix = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n)
+    iy = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / 180.0 * n)
+    return ix.astype(np.int64), iy.astype(np.int64)
+
+
+def _grid_pack(res, ix, iy):
+    """Vectorized (res, ix, iy) int64 grid coordinates → packed cell id."""
     return (np.int64(res) << RES_SHIFT) | (ix << X_SHIFT) | iy
 
 
-def grid_cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
-    """The identical computation as ANSI SQL (runs in Spark SQL and DuckDB).
+def grid_cell(lon, lat, res: int):
+    """Vectorized lon/lat → grid cell id at resolution ``res`` (0–28).
+    Takes finite input only (NaN/±Inf land on an arbitrary cell); the
+    SQL and Column encodes return NULL for non-finite coordinates."""
+    n = np.int64(1) << res
+    ix, iy = _grid_xy(lon, lat, res)
+    return _grid_pack(res, np.clip(ix, 0, n - 1), np.clip(iy, 0, n - 1))
 
-    Uses LEAST/GREATEST clamping and floor; bit packing via multiplication
-    (portable — DuckDB and Spark agree on BIGINT semantics).
-    """
+
+def _grid_pack_sql(res: int, ix_expr: str, iy_expr: str) -> str:
+    """(res, ix, iy) → packed cell id as portable SQL (bit packing via
+    multiplication — DuckDB and Spark agree on BIGINT semantics)."""
+    return (
+        f"(CAST({res} AS BIGINT) * {1 << RES_SHIFT} "
+        f"+ ({ix_expr}) * {1 << X_SHIFT} + ({iy_expr}))"
+    )
+
+
+def grid_cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
+    """The identical computation as ANSI SQL (runs in Spark SQL and DuckDB),
+    NULL where lon or lat is NULL, NaN or ±Inf (``ABS(v) < Infinity`` is
+    false for NaN in both engines, and CASE never evaluates the FLOOR
+    cast that DuckDB would raise on)."""
     n = 1 << res
     ix = (
         f"LEAST({n - 1}, GREATEST(0, CAST(FLOOR((({lon_expr}) + 180.0) / 360.0 * {n}) AS BIGINT)))"
@@ -53,9 +92,11 @@ def grid_cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     iy = (
         f"LEAST({n - 1}, GREATEST(0, CAST(FLOOR((({lat_expr}) + 90.0) / 180.0 * {n}) AS BIGINT)))"
     )
-    return (
-        f"(CAST({res} AS BIGINT) * {1 << RES_SHIFT} + {ix} * {1 << X_SHIFT} + {iy})"
+    finite = (
+        f"ABS({lon_expr}) < CAST('Infinity' AS DOUBLE) "
+        f"AND ABS({lat_expr}) < CAST('Infinity' AS DOUBLE)"
     )
+    return f"(CASE WHEN {finite} THEN {_grid_pack_sql(res, ix, iy)} END)"
 
 
 def _idiv_pow2_sql(expr: str, d: int) -> str:
@@ -82,7 +123,7 @@ def grid_decode_sql(cell_expr: str) -> dict[str, str]:
 
 
 def grid_decode(cell_id):
-    """cell ids → (res, ix, iy)."""
+    """cell ids → (res, ix, iy) (exact bit ops)."""
     cid = np.asarray(cell_id, dtype=np.int64)
     res = cid >> RES_SHIFT
     ix = (cid >> X_SHIFT) & ((np.int64(1) << X_SHIFT) - 1)
@@ -90,7 +131,7 @@ def grid_decode(cell_id):
     return res, ix, iy
 
 
-def grid_kring(cell_id, k: int = 1, wrap_lon: bool = True):
+def grid_kring(cell_id, k: int = 1):
     """All cells within Chebyshev distance k → shape (n, (2k+1)^2) array.
 
     Longitude wraps (antimeridian); latitude clamps (no polar wrap) — rows
@@ -104,13 +145,9 @@ def grid_kring(cell_id, k: int = 1, wrap_lon: bool = True):
     col = 0
     for dx in range(-k, k + 1):
         for dy in range(-k, k + 1):
-            nx = ix + dx
-            if wrap_lon:
-                nx = np.mod(nx, n)
-            else:
-                nx = np.clip(nx, 0, n - 1)
+            nx = np.mod(ix + dx, n)
             ny = np.clip(iy + dy, 0, n - 1)
-            out[:, col] = (res << RES_SHIFT) | (nx << X_SHIFT) | ny
+            out[:, col] = _grid_pack(res, nx, ny)
             col += 1
     return out
 

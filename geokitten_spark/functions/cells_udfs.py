@@ -3,6 +3,13 @@
 S2/hex encodes are numpy-vectorized per Arrow batch (no per-row Python).
 The square-grid encode is a pure Spark SQL expression (``grid_cell_col``) so
 it stays inside whole-stage codegen AND matches the DuckDB oracle formula.
+This module is the Column home of the grid layout (``cells/grid.py`` holds
+the numpy and SQL dialects): ``_grid_xy_col``, ``_grid_clamp_col``,
+``_grid_world_col``, ``_grid_pack_col``, ``_grid_decode_col`` and
+``_grid_bounds_col`` are the only Column code that knows
+``cell_id = res·2^58 + ix·2^29 + iy``. Every (lon, lat) encode here is
+NULL where lon or lat is NULL, NaN or ±Inf; ``_grid_key_col`` is the
+non-nullable join-key form of ``grid_cell_col``.
 """
 
 from __future__ import annotations
@@ -91,38 +98,99 @@ def hex_kring_udf(k: int = 1):
     return _ring
 
 
+def _grid_xy_col(lon: Column, lat: Column, res: int):
+    """Column twin of ``cells.grid._grid_xy``: lon/lat → UNCLAMPED integer
+    grid coordinates (ix, iy) at ``res`` (callers clamp with
+    ``_grid_clamp_col``, as the numpy callers clip)."""
+    n = 1 << res
+    ix = F.floor((lon + F.lit(180.0)) / 360.0 * n).cast("long")
+    iy = F.floor((lat + F.lit(90.0)) / 180.0 * n).cast("long")
+    return ix, iy
+
+
+def _grid_clamp_col(v: Column, res: int) -> Column:
+    """An integer grid coordinate clamped to the world range [0, 2^res)."""
+    return F.least(F.lit((1 << res) - 1), F.greatest(F.lit(0), v))
+
+
+def _grid_pack_col(res: int, ix: Column, iy: Column) -> Column:
+    """Column twin of ``cells.grid._grid_pack``: (res, ix, iy) → cell id."""
+    return (F.lit(res).cast("long") * F.lit(1 << RES_SHIFT)) + ix * F.lit(1 << X_SHIFT) + iy
+
+
+def _grid_decode_col(cell: Column):
+    """Column twin of ``cells.grid.grid_decode``: cell id → (ix, iy) by
+    exact bit ops (double division flips FLOOR for cells >= 2^53)."""
+    ix = F.shiftright(cell.cast("long"), X_SHIFT).bitwiseAND(
+        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
+    )
+    iy = cell.cast("long") % F.lit(1 << X_SHIFT)
+    return ix, iy
+
+
+def _grid_bounds_col(cell: Column, res: int):
+    """Cell id at ``res`` → its corners (lon0, lat0, lon1, lat1). All
+    corner math is dyadic, so every form of it yields the same doubles
+    in Spark, numpy and DuckDB."""
+    ix, iy = _grid_decode_col(cell)
+    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+    return (
+        F.lit(-180.0) + ix * w,
+        F.lit(-90.0) + iy * h,
+        F.lit(-180.0) + (ix + 1) * w,
+        F.lit(-90.0) + (iy + 1) * h,
+    )
+
+
+def _grid_world_col(lon: Column, lat: Column, res: int) -> Column:
+    """lon/lat → cell id at ``res`` with (ix, iy) clamped to the world; no
+    finite test (``_grid_finite_col`` guards it)."""
+    ix, iy = _grid_xy_col(lon, lat, res)
+    return _grid_pack_col(res, _grid_clamp_col(ix, res), _grid_clamp_col(iy, res))
+
+
+def _grid_finite_col(lon: Column, lat: Column) -> Column:
+    """True where lon and lat are both finite; never true where either is
+    NULL, NaN or ±Inf.
+    Callers encoding several resolutions build it once: every Column call
+    is a driver round trip to the JVM."""
+    inf = float("inf")
+    return (F.abs(lon) < inf) & (F.abs(lat) < inf)
+
+
 def grid_cell_col(lon: Column, lat: Column, res: int) -> Column:
     """Square-grid encode as a pure Spark SQL column (JVM-side; identical to
-    ``cells.grid.grid_cell`` and to ``grid_cell_sql`` for the oracle)."""
-    n = 1 << res
-    ix = F.least(
-        F.lit(n - 1),
-        F.greatest(F.lit(0), F.floor((lon + F.lit(180.0)) / 360.0 * n).cast("long")),
-    )
-    iy = F.least(
-        F.lit(n - 1),
-        F.greatest(F.lit(0), F.floor((lat + F.lit(90.0)) / 180.0 * n).cast("long")),
-    )
-    return (F.lit(res).cast("long") * F.lit(1 << RES_SHIFT)) + ix * F.lit(1 << X_SHIFT) + iy
+    ``cells.grid.grid_cell`` and to ``grid_cell_sql`` for the oracle);
+    NULL where lon or lat is NULL, NaN or ±Inf, so a group-by on it
+    (``tile_aggregate``, ``tile_rollup``) puts such docs in one NULL-key
+    row (per level) instead of on a real cell."""
+    return F.when(_grid_finite_col(lon, lat), _grid_world_col(lon, lat, res))
+
+
+def _grid_key_col(
+    lon: Column, lat: Column, res: int, finite: Column | None = None
+) -> Column:
+    """``grid_cell_col`` as a NON-nullable equi-join key: -1, which no grid
+    cell has, where the encode is NULL. An inner join on a nullable key
+    makes Spark infer ``isnotnull(key)`` and push the finite test below a
+    computed lon/lat, which then runs twice per row; a -1 key matches no
+    cover or cell row, so such docs still join nothing. ``finite`` reuses
+    a ``_grid_finite_col`` already built for the same lon/lat."""
+    if finite is None:
+        finite = _grid_finite_col(lon, lat)
+    return F.when(finite, _grid_world_col(lon, lat, res)).otherwise(F.lit(-1))
 
 
 def grid_kring_col(cell: Column, res: int, k: int = 1) -> Column:
     """kRing as a pure SQL array expression over the packed grid id
     (lon wraps, lat clamps — same as ``cells.grid.grid_kring``)."""
     n = 1 << res
-    # exact bit-shift decode (double division flips FLOOR for cells >= 2^53)
-    ix = F.shiftright(cell.cast("long"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = cell.cast("long") % F.lit(1 << X_SHIFT)
+    ix, iy = _grid_decode_col(cell)
     cells = []
     for dx in range(-k, k + 1):
         for dy in range(-k, k + 1):
             nx = (ix + F.lit(dx) + F.lit(n)) % F.lit(n)
-            ny = F.least(F.lit(n - 1), F.greatest(F.lit(0), iy + F.lit(dy)))
-            cells.append(
-                F.lit(res).cast("long") * F.lit(1 << RES_SHIFT) + nx * F.lit(1 << X_SHIFT) + ny
-            )
+            cells.append(_grid_pack_col(res, nx, _grid_clamp_col(iy + F.lit(dy), res)))
     return F.array_distinct(F.array(*cells))
 
 

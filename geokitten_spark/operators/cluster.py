@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells.grid import RES_SHIFT, X_SHIFT, grid_cell_sql, grid_decode_sql
+from ..cells.grid import _grid_pack_sql, grid_cell_sql, grid_decode_sql
 from ..functions.cells_udfs import grid_cell_col, grid_kring_col
 from .dedup import connected_components
 
@@ -92,10 +92,10 @@ def grid_dbscan_sql(
     n = 1 << res
     cell = grid_cell_sql("lon", "lat", res)
     dec = grid_decode_sql("c.cell_id")
-    neighbor = (
-        f"(CAST({res} AS BIGINT) * {1 << RES_SHIFT} "
-        f"+ ((({dec['ix']}) + d.dx + {n}) % {n}) * {1 << X_SHIFT} "
-        f"+ LEAST({n - 1}, GREATEST(0, ({dec['iy']}) + d.dy)))"
+    neighbor = _grid_pack_sql(
+        res,
+        f"(({dec['ix']}) + d.dx + {n}) % {n}",
+        f"LEAST({n - 1}, GREATEST(0, ({dec['iy']}) + d.dy))",
     )
     dense = (
         f"SELECT {cell} AS cell_id, COUNT(*) AS n_pts "

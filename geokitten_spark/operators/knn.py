@@ -35,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cells.grid import RES_SHIFT, X_SHIFT
-from ..functions.cells_udfs import grid_cell_col, grid_kring_col
+from ..functions.cells_udfs import _grid_bounds_col, grid_cell_col, grid_kring_col
 
 __all__ = ["knn_join"]
 
@@ -65,6 +64,12 @@ def knn_join(
 
     ``prune`` enables the same-cell k-th-neighbor bound prune (module
     docstring) — output is identical either way; disable only to audit.
+
+    A point whose lon or lat is NULL, NaN or ±Inf has a NULL cell: it
+    gets no rows and is no point's neighbor. (The nullable key lets Spark
+    push the finite test below a computed lon/lat, one more evaluation of
+    it per point; a shared non-null key for such points would instead
+    pair all of them with each other in the same-cell self-join.)
     """
     if cell_col is not None:
         pts = points.select(
@@ -134,20 +139,9 @@ def knn_join(
         # so output is bit-identical. At O(10-100) points/cell density
         # this cuts the exploded side from (2k+1)^2 cells/point to the
         # 1-3 cells the bound circle actually touches.
-        n = 1 << res
-        cell_w, cell_h = 360.0 / n, 180.0 / n
-        nb_ix = F.shiftright(F.col("nb_cell"), X_SHIFT).bitwiseAND(
-            F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-        )
-        nb_iy = F.col("nb_cell") % F.lit(1 << X_SHIFT)
-        lon0 = F.lit(-180.0) + nb_ix.cast("double") * F.lit(cell_w)
-        lat0 = F.lit(-90.0) + nb_iy.cast("double") * F.lit(cell_h)
-        ddx = F.greatest(
-            F.lit(0.0), lon0 - F.col("lon"), F.col("lon") - (lon0 + F.lit(cell_w))
-        )
-        ddy = F.greatest(
-            F.lit(0.0), lat0 - F.col("lat"), F.col("lat") - (lat0 + F.lit(cell_h))
-        )
+        lon0, lat0, lon1, lat1 = _grid_bounds_col(F.col("nb_cell"), res)
+        ddx = F.greatest(F.lit(0.0), lon0 - F.col("lon"), F.col("lon") - lon1)
+        ddy = F.greatest(F.lit(0.0), lat0 - F.col("lat"), F.col("lat") - lat1)
         left = left.filter(
             F.col("__bound").isNull()
             | ((ddx * ddx + ddy * ddy) <= F.col("__bound"))

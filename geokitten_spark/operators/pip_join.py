@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..cells.grid import RES_SHIFT, X_SHIFT
-from ..functions.cells_udfs import grid_cell_col, h3_cell, h3_parent_col
+from ..cells.grid import _grid_pack, _grid_xy, grid_decode
+from ..functions.cells_udfs import _grid_finite_col, _grid_key_col, h3_cell, h3_parent_col
 from ..geom import parse_wkt, points_in_rings
 from ..geom.rtree import STRtree
 
@@ -207,12 +207,10 @@ def _cover_cells(geoms: list, res: int):
         seen_inside: set = set()
         seen_border: set = set()
         for rings in _parts(g):
-            xmin, ymin = rings[0].min(axis=0)
-            xmax, ymax = rings[0].max(axis=0)
-            ix0 = max(0, int(np.floor((xmin + 180.0) / 360.0 * n)))
-            ix1 = min(int(n) - 1, int(np.floor((xmax + 180.0) / 360.0 * n)))
-            iy0 = max(0, int(np.floor((ymin + 90.0) / 180.0 * n)))
-            iy1 = min(int(n) - 1, int(np.floor((ymax + 90.0) / 180.0 * n)))
+            lo, hi = rings[0].min(axis=0), rings[0].max(axis=0)
+            (ix0, ix1), (iy0, iy1) = _grid_xy([lo[0], hi[0]], [lo[1], hi[1]], res)
+            ix0, iy0 = max(0, int(ix0)), max(0, int(iy0))
+            ix1, iy1 = min(int(n) - 1, int(ix1)), min(int(n) - 1, int(iy1))
             if ix1 < ix0 or iy1 < iy0:
                 continue
             nx = ix1 - ix0 + 1
@@ -226,10 +224,10 @@ def _cover_cells(geoms: list, res: int):
             e_y0, e_y1 = np.minimum(sy0, sy1), np.maximum(sy0, sy1)
             # map each edge bbox to the cell range it touches
             touched = np.zeros((nx, ny), dtype=bool)
-            c_x0 = np.clip(np.floor((e_x0 + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
-            c_x1 = np.clip(np.floor((e_x1 + 180.0) / 360.0 * n).astype(np.int64), ix0, ix1) - ix0
-            c_y0 = np.clip(np.floor((e_y0 + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
-            c_y1 = np.clip(np.floor((e_y1 + 90.0) / 180.0 * n).astype(np.int64), iy0, iy1) - iy0
+            c_x0, c_y0 = _grid_xy(e_x0, e_y0, res)
+            c_x1, c_y1 = _grid_xy(e_x1, e_y1, res)
+            c_x0, c_x1 = (np.clip(c, ix0, ix1) - ix0 for c in (c_x0, c_x1))
+            c_y0, c_y1 = (np.clip(c, iy0, iy1) - iy0 for c in (c_y0, c_y1))
             for a0, a1, b0, b1 in zip(c_x0, c_x1, c_y0, c_y1):
                 touched[a0 : a1 + 1, b0 : b1 + 1] = True
             # untouched cells are uniformly inside or outside: test centers
@@ -246,18 +244,16 @@ def _cover_cells(geoms: list, res: int):
         # a cell inside one part but on the border of another (overlapping
         # parts) must refine — border wins
         seen_inside -= seen_border
-        for ixv, iyv in seen_inside:
-            in_cells.append((np.int64(res) << RES_SHIFT) | (np.int64(ixv) << X_SHIFT) | np.int64(iyv))
-            in_pos.append(pos)
-        for ixv, iyv in seen_border:
-            bd_cells.append((np.int64(res) << RES_SHIFT) | (np.int64(ixv) << X_SHIFT) | np.int64(iyv))
-            bd_pos.append(pos)
+        for seen, cells, cell_pos in (
+            (seen_inside, in_cells, in_pos), (seen_border, bd_cells, bd_pos)
+        ):
+            xy = np.array(list(seen), dtype=np.int64).reshape(-1, 2)
+            cells.append(_grid_pack(res, xy[:, 0], xy[:, 1]))
+            cell_pos.append(np.full(len(xy), pos, dtype=np.int64))
 
-    return (
-        np.asarray(in_cells, dtype=np.int64),
-        np.asarray(in_pos, dtype=np.int64),
-        np.asarray(bd_cells, dtype=np.int64),
-        np.asarray(bd_pos, dtype=np.int64),
+    return tuple(
+        np.concatenate(a) if a else np.zeros(0, dtype=np.int64)
+        for a in (in_cells, in_pos, bd_cells, bd_pos)
     )
 
 
@@ -312,8 +308,7 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
     the parent — repeatedly, down to ``min_res``. Shrinks the broadcast
     table ~5-10x (fits in L3, builds in ~0.1s) with identical semantics."""
     out_cells, out_pos = [], []
-    ix = (in_cells >> X_SHIFT) & ((np.int64(1) << X_SHIFT) - 1)
-    iy = in_cells & ((np.int64(1) << X_SHIFT) - 1)
+    _, ix, iy = grid_decode(in_cells)
     pos = in_pos
     for r in range(res, min_res, -1):
         pix_all, piy_all = ix >> 1, iy >> 1
@@ -332,9 +327,7 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
         promoted_mask = np.zeros(len(order), dtype=bool)
         promoted_mask[order] = full[grp_id]
         keep = ~promoted_mask
-        out_cells.append(
-            (np.int64(r) << RES_SHIFT) | (ix[keep] << X_SHIFT) | iy[keep]
-        )
+        out_cells.append(_grid_pack(r, ix[keep], iy[keep]))
         out_pos.append(pos[keep])
         # next level: one cell per full parent
         starts = np.flatnonzero(new_grp)[full]
@@ -342,7 +335,7 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
         if len(ix) == 0:
             break
     if len(ix):
-        out_cells.append((np.int64(min_res) << RES_SHIFT) | (ix << X_SHIFT) | iy)
+        out_cells.append(_grid_pack(min_res, ix, iy))
         out_pos.append(pos)
     return np.concatenate(out_cells), np.concatenate(out_pos)
 
@@ -430,10 +423,13 @@ class PolygonCover(_BroadcastCover):
         self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
 
     def _cell(self, lon, lat):
-        return grid_cell_col(lon, lat, self.res)
+        return _grid_key_col(lon, lat, self.res)
 
     def _ancestors(self, lon, lat, cell):
-        return F.array(*[grid_cell_col(lon, lat, r) for r in range(self.min_res, self.res + 1)])
+        finite = _grid_finite_col(lon, lat)
+        return F.array(*[
+            _grid_key_col(lon, lat, r, finite) for r in range(self.min_res, self.res + 1)
+        ])
 
 
 def partitioned_pip_join(
@@ -514,7 +510,7 @@ def partitioned_pip_join(
     cover = boundaries.mapInPandas(build_cover, schema=cover_schema)
 
     tagged = docs.withColumn(
-        "__cell", grid_cell_col(F.col(lon_col), F.col(lat_col), res)
+        "__cell", _grid_key_col(F.col(lon_col), F.col(lat_col), res)
     )
     # ONE join against the whole cover, then route rows by the border flag
     # (__wkt null = fully-inside cell → direct match). The two branches

@@ -77,32 +77,26 @@ def wkt_bbox(wkt: pd.Series) -> pd.Series:
 def bbox_cell_cover(df: DataFrame, id_col: str, wkt_col: str, res: int) -> DataFrame:
     """(id, cell_id) cover of each polygon's bbox at grid ``res`` — the
     bbox parse is one Arrow pass; the cell explode is pure Catalyst."""
-    from ..cells.grid import RES_SHIFT, X_SHIFT
+    from ..functions.cells_udfs import _grid_clamp_col, _grid_pack_col, _grid_xy_col
 
-    n = 1 << res
     b = df.select(
         F.col(id_col).alias("_pid"), wkt_bbox(F.col(wkt_col)).alias("_bb")
     ).filter(F.col("_bb").isNotNull())
-    ix0 = F.floor((F.element_at("_bb", 1) + 180.0) / 360.0 * n).cast("long")
-    ix1 = F.floor((F.element_at("_bb", 3) + 180.0) / 360.0 * n).cast("long")
-    iy0 = F.floor((F.element_at("_bb", 2) + 90.0) / 180.0 * n).cast("long")
-    iy1 = F.floor((F.element_at("_bb", 4) + 90.0) / 180.0 * n).cast("long")
-    clamp = lambda c: F.greatest(F.lit(0), F.least(c, F.lit(n - 1)))  # noqa: E731
+    ix0, iy0 = _grid_xy_col(F.element_at("_bb", 1), F.element_at("_bb", 2), res)
+    ix1, iy1 = _grid_xy_col(F.element_at("_bb", 3), F.element_at("_bb", 4), res)
     cells = b.select(
         "_pid",
-        F.explode(F.sequence(clamp(ix0), clamp(ix1))).alias("_ix"),
-        clamp(iy0).alias("_iy0"),
-        clamp(iy1).alias("_iy1"),
+        F.explode(
+            F.sequence(_grid_clamp_col(ix0, res), _grid_clamp_col(ix1, res))
+        ).alias("_ix"),
+        _grid_clamp_col(iy0, res).alias("_iy0"),
+        _grid_clamp_col(iy1, res).alias("_iy1"),
     ).select(
         "_pid",
         F.explode(F.sequence(F.col("_iy0"), F.col("_iy1"))).alias("_iy"),
         "_ix",
     )
-    cell_id = (
-        (F.lit(res).cast("long") * (1 << RES_SHIFT))
-        + (F.col("_ix") * (1 << X_SHIFT))
-        + F.col("_iy")
-    )
+    cell_id = _grid_pack_col(res, F.col("_ix"), F.col("_iy"))
     return cells.select("_pid", cell_id.alias("cell_id"))
 
 

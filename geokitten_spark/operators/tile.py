@@ -1,4 +1,4 @@
-"""J3/A6 — cell-equi tiling join + tile aggregation (SURVEY.md §2.4/§2.5).
+"""A6 — tile aggregation (SURVEY.md §2.5).
 
 Scale design:
 * tile aggregates are plain ``groupBy(cell_id)`` hash aggregates — Catalyst
@@ -6,23 +6,23 @@ Scale design:
   row per (partition, cell), not per doc;
 * multi-resolution rollups re-aggregate PARENT tiles from the finest tiles
   (sums/counts compose), never re-scanning the docs table — the second and
-  later resolutions cost O(#tiles), not O(#docs);
-* the cell-equi join (docs × polygon cover cells) is a sort-merge join on a
-  BIGINT key; dense-cell skew is handled by salting (operators/skew.py) and
-  AQE skew-join as backstop.
+  later resolutions cost O(#tiles), not O(#docs).
+
+The J3 cell-equi join (docs × polygon cover cells on the BIGINT cell key)
+lives in ``operators/pip_join.py`` (``PolygonCover`` broadcasts the cover,
+``partitioned_pip_join`` shuffles both sides on the cell id).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..cells.grid import RES_SHIFT, X_SHIFT
-from ..functions.cells_udfs import grid_cell_col
+from ..cells.grid import _grid_pack_sql, _idiv_pow2_sql, grid_cell_sql, grid_decode_sql
+from ..functions.cells_udfs import _grid_decode_col, _grid_pack_col, grid_cell_col
 
-__all__ = ["tile_aggregate", "tile_rollup", "tile_distinct_rollup", "grid_parent_col", "cell_cover_df", "cell_equi_join", "geo_aggregates", "tile_vectorize", "tile_wkt_sql"]
+__all__ = ["tile_aggregate", "tile_rollup", "tile_distinct_rollup", "grid_parent_col", "geo_aggregates", "tile_vectorize", "tile_wkt_sql"]
 
 
 def tile_aggregate(
@@ -31,7 +31,9 @@ def tile_aggregate(
     count_distinct_col: str | None = None,
 ) -> DataFrame:
     """Per-cell doc counts (+ optional approx distinct) — partial+final hash
-    aggregate; one shuffle of pre-aggregated rows."""
+    aggregate; one shuffle of pre-aggregated rows. Docs whose cell is NULL
+    (``grid_cell_col`` of a NULL/NaN/±Inf coordinate) form one NULL-key
+    row."""
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     if count_distinct_col:
         aggs.append(F.approx_count_distinct(count_distinct_col).alias("n_distinct"))
@@ -42,18 +44,8 @@ def grid_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:
     """Arithmetic parent derivation for the packed grid id (no re-encode from
     lon/lat needed — pure integer ops on the tile table)."""
     shift = child_res - parent_res
-    # exact bit-shift decode (double division flips FLOOR for cells >= 2^53)
-    ix = F.shiftright(cell.cast("long"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = cell.cast("long") % F.lit(1 << X_SHIFT)
-    nix = F.shiftright(ix, shift)
-    niy = F.shiftright(iy, shift)
-    return (
-        F.lit(parent_res).cast("long") * F.lit(1 << RES_SHIFT)
-        + nix * F.lit(1 << X_SHIFT)
-        + niy
-    )
+    ix, iy = _grid_decode_col(cell)
+    return _grid_pack_col(parent_res, F.shiftright(ix, shift), F.shiftright(iy, shift))
 
 
 def tile_rollup(
@@ -70,7 +62,10 @@ def tile_rollup(
 
     (A union of per-res group-bys would rescan/re-aggregate the docs once
     per resolution — 3x the work at 3 levels; this shape costs
-    O(docs) + O(#tiles x levels).)"""
+    O(docs) + O(#tiles x levels).)
+
+    Docs with a NULL/NaN/±Inf coordinate have a NULL cell and count in
+    one NULL-``cell_id`` row per resolution."""
     finest = max(resolutions)
     base = (
         docs.select(grid_cell_col(F.col(lon_col), F.col(lat_col), finest).alias("cell_id"))
@@ -305,8 +300,6 @@ def adaptive_tiles_sql(
     points_query: str, *, base_res: int, max_res: int, threshold: int
 ) -> str:
     """DuckDB twin of :func:`adaptive_tiles` over a (lon, lat) query."""
-    from ..cells.grid import grid_cell_sql
-
     parts = [
         f"c{max_res} AS (SELECT {grid_cell_sql('lon', 'lat', max_res)} AS cell_id, "
         f"COUNT(*) AS n_docs FROM ({points_query}) GROUP BY 1)"
@@ -345,56 +338,13 @@ def adaptive_tiles_sql(
 def _parent_sql(cell_expr: str, child_res: int, parent_res: int) -> str:
     """Arithmetic parent of a packed grid id, portable SQL (exact pow-2
     integer division)."""
-    from ..cells.grid import _idiv_pow2_sql
-
     shift = child_res - parent_res
-    ix = _idiv_pow2_sql(f"(({cell_expr}) % {1 << RES_SHIFT})", 1 << X_SHIFT)
-    iy = f"(({cell_expr}) % {1 << X_SHIFT})"
-    pix = _idiv_pow2_sql(ix, 1 << shift)
-    piy = _idiv_pow2_sql(iy, 1 << shift)
-    return (
-        f"(CAST({parent_res} AS BIGINT) * {1 << RES_SHIFT} "
-        f"+ ({pix}) * {1 << X_SHIFT} + ({piy}))"
+    dec = grid_decode_sql(cell_expr)
+    return _grid_pack_sql(
+        parent_res,
+        _idiv_pow2_sql(dec["ix"], 1 << shift),
+        _idiv_pow2_sql(dec["iy"], 1 << shift),
     )
-
-
-def cell_cover_df(spark, boundaries_pdf: pd.DataFrame, id_col: str, wkt_col: str, level: int, use_s2: bool = True) -> DataFrame:
-    """Polygon → covering-cell table (id, cell_id): the small side of the
-    tiling join, computed driver-side (boundary sets are small) and usable
-    either broadcast or sort-merge."""
-    from ..cells import s2 as s2mod
-    from ..cells.grid import grid_cell
-    from ..geom import parse_wkt
-
-    rows = []
-    for _, row in boundaries_pdf.iterrows():
-        g = parse_wkt(row[wkt_col])
-        for rings in g.parts:
-            if use_s2:
-                cells = s2mod.polygon_cover_cells(rings, level)
-            else:
-                ext = np.asarray(rings[0])
-                step = 180.0 / (1 << level)
-                xs = np.arange(ext[:, 0].min(), ext[:, 0].max() + step, step / 2)
-                ys = np.arange(ext[:, 1].min(), ext[:, 1].max() + step, step / 2)
-                gx, gy = np.meshgrid(xs, ys)
-                cells = np.unique(grid_cell(gx.ravel(), gy.ravel(), level))
-            for c in cells:
-                rows.append((row[id_col], int(c)))
-    pdf = pd.DataFrame(rows, columns=[id_col, "cell_id"]).drop_duplicates()
-    return spark.createDataFrame(pdf)
-
-
-def cell_equi_join(
-    docs_with_cell: DataFrame,
-    cover: DataFrame,
-    cell_col: str = "cell_id",
-    broadcast_cover: bool = True,
-) -> DataFrame:
-    """The tiling join: docs × polygon cover cells on the BIGINT cell key.
-    Broadcast when the cover fits (usual); else sort-merge on cell_id."""
-    right = F.broadcast(cover) if broadcast_cover else cover.repartition(cell_col)
-    return docs_with_cell.join(right, on=cell_col, how="inner")
 
 
 # ---------------------------------------------------------------------------
@@ -461,8 +411,6 @@ def tile_wkt_sql(cell_expr: str) -> str:
     Decode uses ``grid_decode_sql`` (exact integer division — plain
     FLOOR(x/2^29) through DOUBLE mis-decodes cells >= 2^53, i.e. res>=27
     ids with iy near 0)."""
-    from ..cells.grid import grid_decode_sql
-
     dec = grid_decode_sql(cell_expr)
     res, ix, iy = dec["res"], dec["ix"], dec["iy"]
     n = f"POWER(2.0, {res})"

@@ -165,42 +165,15 @@ def _bounds_of(blob: bytes) -> tuple:
     )
 
 
-def _file_stats(blobs: list) -> tuple:
-    """-> (geometry_type_names, bbox[4]) for one file's blobs.
+def _file_stats(col) -> tuple:
+    """-> (geometry_type_names, bbox[4]) for one file's Arrow (chunked)
+    binary geometry column.
 
     Fast path: an all-2D-POINT column (the dominant shape for web-doc
-    tables — one geocoded point per page) is one numpy pass over the
-    fixed 21-byte little-endian layout, no per-row parse. Everything
-    else takes the general per-blob parse."""
-    if not blobs:
-        return [], [float("nan")] * 4
-    if all(len(b) == 21 and b[0] == 1 for b in blobs):
-        arr = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(-1, 21)
-        if (arr[:, 1:5] == np.frombuffer(
-            np.uint32(1).tobytes(), dtype=np.uint8
-        )).all():
-            xy = np.ascontiguousarray(arr[:, 5:21]).view("<f8").reshape(-1, 2)
-            return ["Point"], [
-                float(np.nanmin(xy[:, 0])),
-                float(np.nanmin(xy[:, 1])),
-                float(np.nanmax(xy[:, 0])),
-                float(np.nanmax(xy[:, 1])),
-            ]
-    kinds = sorted({_KIND_NAMES[wkb_kind(b)] for b in blobs})
-    bounds = [_bounds_of(b) for b in blobs]
-    return kinds, [
-        min(b[0] for b in bounds),
-        min(b[1] for b in bounds),
-        max(b[2] for b in bounds),
-        max(b[3] for b in bounds),
-    ]
-
-
-def _file_stats_arrow(col) -> tuple:
-    """`_file_stats` straight off an Arrow (chunked) binary column: the
-    all-2D-POINT fast path reads offsets/data buffers with numpy — no
-    per-row Python objects; anything else falls back to the per-blob
-    parse."""
+    tables — one geocoded point per page) is one numpy gather over the
+    Arrow offsets/data buffers and the fixed 21-byte little-endian
+    layout, no per-row Python objects. Everything else takes the general
+    per-blob parse."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
@@ -209,24 +182,30 @@ def _file_stats_arrow(col) -> tuple:
     n = len(arr)
     if n == 0:
         return [], [float("nan")] * 4
-    if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
-        off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        bufs = arr.buffers()  # [validity, offsets, data]
-        offsets = np.frombuffer(bufs[1], dtype=off_dt)[arr.offset : arr.offset + n + 1]
-        lengths = np.diff(offsets)
-        if (lengths == 21).all():
-            vals = np.frombuffer(bufs[2], dtype=np.uint8)
-            mat = vals[offsets[:-1, None] + np.arange(21)]
-            hdr = np.frombuffer(np.uint32(1).tobytes(), dtype=np.uint8)
-            if (mat[:, 0] == 1).all() and (mat[:, 1:5] == hdr).all():
-                xy = np.ascontiguousarray(mat[:, 5:21]).view("<f8").reshape(-1, 2)
-                return ["Point"], [
-                    float(np.nanmin(xy[:, 0])),
-                    float(np.nanmin(xy[:, 1])),
-                    float(np.nanmax(xy[:, 0])),
-                    float(np.nanmax(xy[:, 1])),
-                ]
-    return _file_stats([bytes(b) for b in arr.to_pylist()])
+    off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    bufs = arr.buffers()  # [validity, offsets, data]
+    offsets = np.frombuffer(bufs[1], dtype=off_dt)[arr.offset : arr.offset + n + 1]
+    if (np.diff(offsets) == 21).all():
+        vals = np.frombuffer(bufs[2], dtype=np.uint8)
+        mat = vals[offsets[:-1, None] + np.arange(21)]
+        hdr = np.frombuffer(np.uint32(1).tobytes(), dtype=np.uint8)
+        if (mat[:, 0] == 1).all() and (mat[:, 1:5] == hdr).all():
+            xy = np.ascontiguousarray(mat[:, 5:21]).view("<f8").reshape(-1, 2)
+            return ["Point"], [
+                float(np.nanmin(xy[:, 0])),
+                float(np.nanmin(xy[:, 1])),
+                float(np.nanmax(xy[:, 0])),
+                float(np.nanmax(xy[:, 1])),
+            ]
+    blobs = arr.to_pylist()
+    kinds = sorted({_KIND_NAMES[wkb_kind(b)] for b in blobs})
+    bounds = [_bounds_of(b) for b in blobs]
+    return kinds, [
+        min(b[0] for b in bounds),
+        min(b[1] for b in bounds),
+        max(b[2] for b in bounds),
+        max(b[3] for b in bounds),
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -286,7 +265,7 @@ def write_geoparquet(
         if not batches or sum(b.num_rows for b in batches) == 0:
             return  # empty partition -> no file
         table = pa.Table.from_batches(batches)
-        kinds, bbox = _file_stats_arrow(table.column(geometry_col))
+        kinds, bbox = _file_stats(table.column(geometry_col))
         table = table.replace_schema_metadata(
             {GEO_KEY: _geo_metadata(geometry_col, kinds, bbox)}
         )

@@ -12,13 +12,19 @@ discipline as the JPEG/PNG/WAV codecs.
   key/value attribute pools, extent 4096. The decoder exists so tests can
   verify the bytes semantically (same encoder+decoder pattern as the
   media codecs) and so MVT is a *source* too.
-* :func:`lonlat_to_tile_px` — WGS84 → web-mercator tile-local integer
-  pixels (vectorized numpy; y grows downward per spec).
-* :func:`mvt_cells` — the distributed sink: a (cell_id, n_docs) tile
-  aggregate → one MVT blob per (z, x, y) web-mercator tile via ONE
-  grouped ``applyInPandas`` pass. The aggregate is already tiny relative
-  to the corpus (O(cells), not O(docs)); grouping by tile id shuffles
-  only (cell_id, count) pairs, and each task renders its tiles
+* ``_mercator`` — the package's ONE web-mercator projection (lat
+  clamped to the square-world band, y down). :func:`lonlat_to_tile_px`
+  (tile-local MVT pixels), :func:`tile_of` (tile indices) and
+  ``viz/raster.py:point_pixel`` (global heat-map pixels) all call it.
+  It flags rows whose lon or lat is not finite (NULL arrives as NaN):
+  their coordinates are meaningless, and the raster sink drops them.
+* :func:`mvt_pyramid` — the distributed sink (:func:`mvt_cells` is its
+  one-zoom case): a (cell_id, n_docs) tile aggregate → one MVT blob per
+  (z, x, y) web-mercator tile via ONE grouped ``applyInPandas`` pass.
+  Its NULL-``cell_id`` row (the docs with a non-finite coordinate, see
+  ``grid_cell_col``) draws nothing. The aggregate is already tiny
+  relative to the corpus (O(cells), not O(docs)); grouping by tile id
+  shuffles only (cell_id, count) pairs, and each task renders its tiles
   independently — features sorted by cell_id so the bytes are a pure
   function of the group's row multiset (partitioning-independent,
   hash-comparable against the driver-side oracle replica).
@@ -367,18 +373,42 @@ def _decode_layer(data: bytes) -> dict:
 _MERC_LAT_MAX = 85.0511287798066  # atan(sinh(pi)) — the square-world cut
 
 
+def _mercator(lon, lat, n: float):
+    """The one WGS84 → web-mercator projection: fractional world
+    coordinates (gx, gy) with ``n`` units per axis, latitude clamped to
+    the square-world band, y growing DOWNWARD (the tile scheme and the MVT
+    spec). Also returns ``finite``, the rows whose lon and lat are both
+    finite — NULL (NaN in numpy), NaN and ±Inf rows get meaningless
+    coordinates that callers must drop."""
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    finite = np.isfinite(lon) & np.isfinite(lat)
+    lat = np.clip(lat, -_MERC_LAT_MAX, _MERC_LAT_MAX)
+    gx = (lon + 180.0) / 360.0 * n
+    sin = np.sin(np.radians(lat))
+    gy = (0.5 - np.log((1.0 + sin) / (1.0 - sin)) / (4.0 * math.pi)) * n
+    return gx, gy, finite
+
+
+def _mercator_pixel(lon, lat, z: int, tile_px: int):
+    """Integer global pixel (gx, gy) at zoom ``z`` with ``tile_px`` pixels
+    per tile edge (``tile_px=1`` gives tile indices), clamped to the pixel
+    range, plus the ``finite`` mask of :func:`_mercator`."""
+    hi = (tile_px << z) - 1
+    gx, gy, finite = _mercator(lon, lat, float(tile_px << z))
+    return (
+        np.clip(np.floor(gx).astype(np.int64), 0, hi),
+        np.clip(np.floor(gy).astype(np.int64), 0, hi),
+        finite,
+    )
+
+
 def lonlat_to_tile_px(lon, lat, z: int, tx: int, ty: int,
                       extent: int = EXTENT):
     """WGS84 → integer pixel coords local to web-mercator tile (z, tx, ty)
     (y grows DOWNWARD, per both the tile scheme and the MVT spec).
     Vectorized; quantization is floor(v * n + 0.5) in float64."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64),
-                  -_MERC_LAT_MAX, _MERC_LAT_MAX)
-    n = float(1 << z)
-    gx = (lon + 180.0) / 360.0 * n
-    sin = np.sin(np.radians(lat))
-    gy = (0.5 - np.log((1.0 + sin) / (1.0 - sin)) / (4.0 * math.pi)) * n
+    gx, gy, _ = _mercator(lon, lat, float(1 << z))
     px = np.floor((gx - tx) * extent + 0.5).astype(np.int64)
     py = np.floor((gy - ty) * extent + 0.5).astype(np.int64)
     return px, py
@@ -386,16 +416,8 @@ def lonlat_to_tile_px(lon, lat, z: int, tx: int, ty: int,
 
 def tile_of(lon, lat, z: int):
     """Containing web-mercator tile indices (vectorized)."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64),
-                  -_MERC_LAT_MAX, _MERC_LAT_MAX)
-    n = 1 << z
-    tx = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    sin = np.sin(np.radians(lat))
-    ty = np.floor(
-        (0.5 - np.log((1.0 + sin) / (1.0 - sin)) / (4.0 * math.pi)) * n
-    ).astype(np.int64)
-    return np.clip(tx, 0, n - 1), np.clip(ty, 0, n - 1)
+    tx, ty, _ = _mercator_pixel(lon, lat, z, 1)
+    return tx, ty
 
 
 # ---------------------------------------------------------------------------
@@ -444,40 +466,8 @@ def render_cells_tile(z: int, tx: int, ty: int,
 def mvt_cells(tiles: DataFrame, z: int, layer: str = "cells") -> DataFrame:
     """(cell_id, n_docs, lon0, lat0, lon1, lat1) aggregate → one MVT blob
     per containing (z, x, y) web-mercator tile (assignment by cell
-    center). ONE grouped applyInPandas pass; only O(cells) rows shuffle."""
-    with_tile = tiles.withColumn(
-        "_clon", (F.col("lon0") + F.col("lon1")) / 2
-    ).withColumn("_clat", (F.col("lat0") + F.col("lat1")) / 2)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tx, ty = tile_of(
-                pdf["_clon"].to_numpy(), pdf["_clat"].to_numpy(), z
-            )
-            pdf = pdf.drop(columns=["_clon", "_clat"])
-            pdf["x"] = tx
-            pdf["y"] = ty
-            yield pdf
-
-    assigned_schema = StructType(
-        [f for f in tiles.schema.fields]
-        + [StructField("x", LongType()), StructField("y", LongType())]
-    )
-    assigned = with_tile.mapInPandas(assign, schema=assigned_schema)
-
-    def render(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        rows = list(
-            zip(pdf["cell_id"], pdf["n_docs"], pdf["lon0"], pdf["lat0"],
-                pdf["lon1"], pdf["lat1"])
-        )
-        blob = render_cells_tile(z, tx, ty, rows, layer=layer)
-        return pd.DataFrame(
-            [(z, tx, ty, len(rows), blob)],
-            columns=["z", "x", "y", "n_features", "pbf"],
-        )
-
-    return assigned.groupBy("x", "y").applyInPandas(render, schema=_MVT_SCHEMA)
+    center): the one-level :func:`mvt_pyramid`."""
+    return mvt_pyramid(tiles, [z], layer=layer)
 
 
 def mvt_pyramid(tiles: DataFrame, zooms: Sequence[int],
@@ -491,11 +481,16 @@ def mvt_pyramid(tiles: DataFrame, zooms: Sequence[int],
     L levels costs one exchange of L·O(cells) rows, not L aggregate
     recomputations; coarser zooms pack more cells per tile but hold the
     same total rows, so no level is a hot key beyond the z=0 world tile
-    (bounded by the cell count)."""
+    (bounded by the cell count).
+
+    The NULL-``cell_id`` row a grid aggregate holds for docs with a
+    NULL/NaN/±Inf coordinate is dropped first: it has no corners, and a
+    NULL in the int64 column would turn the whole Arrow batch into
+    float64, rounding every packed id of 2^53 or more."""
     zs = sorted({int(z) for z in zooms}, reverse=True)
     if not zs:
         raise ValueError("mvt_pyramid needs at least one zoom level")
-    with_c = tiles.withColumn(
+    with_c = tiles.filter(F.col("cell_id").isNotNull()).withColumn(
         "_clon", (F.col("lon0") + F.col("lon1")) / 2
     ).withColumn("_clat", (F.col("lat0") + F.col("lat1")) / 2)
 

@@ -17,12 +17,14 @@ form of that sink (S7/A6 in SURVEY §2), same argument as ``viz/mvt.py``.
 Pipeline shape (scale notes — this is what survives 100 TB):
 
 * point → global-pixel encode is ONE Arrow ``pandas_udf`` pass sharing
-  the exact numpy web-mercator kernel (:func:`point_pixel`) with the
-  driver-side oracle replica — the same shared-kernel pattern as the
-  S2/H3 encodes in ``functions/cells_udfs.py``, so Spark and oracle do
-  bit-identical float64 math (JVM ``sin``/``log`` never enter the
-  plan, which is what makes the floor() at pixel boundaries safe to
-  hash-compare).
+  the exact numpy web-mercator kernel (:func:`point_pixel`, i.e.
+  ``viz/mvt.py``'s one projection) with the driver-side oracle replica —
+  the same shared-kernel pattern as the S2/H3 encodes in
+  ``functions/cells_udfs.py``, so Spark and oracle do bit-identical
+  float64 math (JVM ``sin``/``log`` never enter the plan, which is what
+  makes the floor() at pixel boundaries safe to hash-compare). A point
+  whose lon or lat is NULL, NaN or ±Inf gets a NULL pixel id; its one
+  aggregate row is dropped before the render, so it draws nothing.
 * per-pixel counts: a single hash aggregate on the packed int64 pixel
   id — partial (map-side) combine collapses the corpus to at most
   ``tile_px²`` rows per occupied tile BEFORE the only O(docs)-input
@@ -46,7 +48,6 @@ Pipeline shape (scale notes — this is what survives 100 TB):
 
 from __future__ import annotations
 
-import math
 from typing import Sequence, Tuple
 
 import numpy as np
@@ -62,7 +63,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .mvt import _MERC_LAT_MAX
+from .mvt import _mercator_pixel
 
 __all__ = [
     "point_pixel",
@@ -79,34 +80,27 @@ def point_pixel(lon, lat, z: int, tile_px: int) -> Tuple[np.ndarray, np.ndarray]
     """WGS84 → (global pixel x, global pixel y) at zoom ``z`` with
     ``tile_px`` pixels per tile edge (y grows downward, slippy-map
     convention). Vectorized float64, clamped to the web-mercator band
-    and the pixel range. Shared VERBATIM by the Spark UDF and the
-    DuckDB-side oracle replica — same floats, same floors."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64),
-                  -_MERC_LAT_MAX, _MERC_LAT_MAX)
-    n = float(tile_px << z)
-    gx = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    sin = np.sin(np.radians(lat))
-    gy = np.floor(
-        (0.5 - np.log((1.0 + sin) / (1.0 - sin)) / (4.0 * math.pi)) * n
-    ).astype(np.int64)
-    hi = (tile_px << z) - 1
-    return np.clip(gx, 0, hi), np.clip(gy, 0, hi)
+    and the pixel range (``viz/mvt.py``'s one projection). Shared
+    VERBATIM by the Spark UDF and the DuckDB-side oracle replica — same
+    floats, same floors. Finite input only: a NaN/±Inf row lands on an
+    arbitrary edge pixel (:func:`pixel_id_udf` makes it NULL instead)."""
+    gx, gy, _ = _mercator_pixel(lon, lat, z, tile_px)
+    return gx, gy
 
 
 def pixel_id_udf(z: int, tile_px: int):
     """UDF factory: (lon, lat) → packed int64 global pixel id at zoom
-    ``z`` (``(gx << 32) | gy``). One Arrow batch pass, no per-row
-    Python."""
+    ``z`` (``(gx << 32) | gy``); NULL where lon or lat is NULL, NaN or
+    ±Inf. One Arrow batch pass, no per-row Python."""
     if tile_px << z > (1 << 31):
         raise ValueError(f"tile_px<<z = {tile_px << z} overflows the 31-bit pack")
 
     @pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        gx, gy = point_pixel(
+        gx, gy, finite = _mercator_pixel(
             lon.to_numpy(np.float64), lat.to_numpy(np.float64), z, tile_px
         )
-        return pd.Series((gx << _PACK_SHIFT) | gy)
+        return pd.Series(pd.arrays.IntegerArray((gx << _PACK_SHIFT) | gy, ~finite))
 
     return _enc
 
@@ -198,7 +192,15 @@ def raster_heat_tiles(points: DataFrame, zooms: Sequence[int],
     lv = F.explode(
         F.array(*[_zoom_struct(F.col("pid"), zf - z, z, tile_px) for z in zooms])
     ).alias("lv")
-    levels = base.select(lv, "n").select("lv.z", "lv.x", "lv.y", "lv.pix", "n")
+    # non-finite points (NULL pid, one aggregate row) draw nothing. The
+    # filter tests the exploded struct: Spark would push a predicate on
+    # pid below the aggregate into the encode's projection and run the
+    # Python UDF twice
+    levels = (
+        base.select(lv, "n")
+        .select("lv.z", "lv.x", "lv.y", "lv.pix", "n")
+        .filter(F.col("x").isNotNull())
+    )
 
     # (r6 audit: a collect_list(struct)+batched-pandas_udf render and a
     # packed-int64 variant were measured against this grouped form —

@@ -17,8 +17,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,7 +38,12 @@ PLANS_DIR = os.path.join(
 
 
 def leg_builders(spark, docs):
-    """{leg_name: () -> DataFrame} mirroring bench.py's run_queries."""
+    """{leg_name: () -> DataFrame} mirroring bench.py's run_queries: one
+    key per ``timed(...)`` leg name and ``inner_reps`` query there
+    (tests/test_bench_fence.py pins the two sets equal). Nothing touches
+    ``spark`` or ``docs`` until a builder is called. The geoparquet leg
+    returns the ``write_geoparquet`` manifest for a fresh temp dir (the
+    write runs when the manifest is materialized)."""
     import __spark_entry__ as entrymod
     from geokitten_spark.fixtures import admin_rects_pdf, bench_boundaries_pdf
     from geokitten_spark.functions.cells_udfs import (
@@ -46,7 +55,7 @@ def leg_builders(spark, docs):
     from geokitten_spark.operators.linkgraph import extract_links, pagerank
     from geokitten_spark.operators.pip_join import PolygonCover, pip_join
     from geokitten_spark.operators.tile import tile_distinct_rollup, tile_rollup
-    from geokitten_spark.sources.geoparquet import points_to_wkb
+    from geokitten_spark.sources.geoparquet import points_to_wkb, write_geoparquet
     from geokitten_spark.viz.raster import raster_heat_tiles
 
     def flagship():
@@ -65,16 +74,18 @@ def leg_builders(spark, docs):
             F.approx_count_distinct("s2_cell").alias("n_s2_cells"),
         )
 
-    cover = PolygonCover(
-        spark,
-        bench_boundaries_pdf(),
-        id_col="region_key",
-        wkt_col="geometry_wkt",
-        res=10,
-    )
+    @functools.lru_cache(maxsize=None)
+    def cover():
+        return PolygonCover(
+            spark,
+            bench_boundaries_pdf(),
+            id_col="region_key",
+            wkt_col="geometry_wkt",
+            res=10,
+        )
 
     def flagship_cover():
-        located = cover.join(docs.select("lon", "lat"))
+        located = cover().join(docs.select("lon", "lat"))
         tiled = located.withColumn(
             "cell_id", grid_cell_col(F.col("lon"), F.col("lat"), 7)
         )
@@ -86,6 +97,14 @@ def leg_builders(spark, docs):
         nodes = docs.select(F.col("doc_id").alias("node"))
         edges = extract_links(docs.select("doc_id", "html"))
         return pagerank(nodes, edges, n_iters=3)
+
+    def geoparquet_leg():
+        loc = tempfile.mkdtemp(prefix="gk_probe_geoparquet_")
+        atexit.register(shutil.rmtree, loc, ignore_errors=True)
+        pts = docs.select(
+            "doc_id", points_to_wkb(F.col("lon"), F.col("lat")).alias("geometry")
+        )
+        return write_geoparquet(pts, loc, geometry_col="geometry")
 
     builders = {
         "flagship_pip_tile": flagship,
@@ -105,13 +124,11 @@ def leg_builders(spark, docs):
             docs.filter(F.col("lang") == "de"), id_col="doc_id", k=3, res=7, ring_k=1
         ),
         "link_pagerank": pagerank_leg,
-        "geoparquet_points": lambda: docs.select(
-            "doc_id", points_to_wkb(F.col("lon"), F.col("lat")).alias("geometry")
-        ),
+        "geoparquet_write": geoparquet_leg,
         "raster_tiles": lambda: raster_heat_tiles(
             docs.select("lon", "lat"), zooms=(6, 5, 4)
         ),
-        "tile_distinct": lambda: tile_distinct_rollup(
+        "tile_distinct_x3": lambda: tile_distinct_rollup(
             docs, "lon", "lat", "url", [7, 5, 3]
         ),
     }

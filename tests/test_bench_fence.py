@@ -190,3 +190,38 @@ def test_package_import_keeps_bench_fence_cpus_match(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.strip() == "(None, None)"
+
+
+def test_bench_probe_legs_match_bench_legs():
+    """scripts/bench_probe.py mirrors bench.py's run_queries by hand: its
+    leg keys must equal the ``timed("...")`` leg names plus the
+    ``inner_reps`` queries there (read with ``ast``, no Spark)."""
+    import ast
+    import importlib.util
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    tree = ast.parse((root / "bench.py").read_text())
+    run_queries = next(
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "run_queries"
+    )
+    legs = {
+        c.args[0].value
+        for c in ast.walk(run_queries)
+        if isinstance(c, ast.Call) and getattr(c.func, "id", None) == "timed"
+        and isinstance(c.args[0], ast.Constant)
+    }
+    inner_reps = next(
+        n.value for n in ast.walk(run_queries)
+        if isinstance(n, ast.Assign)
+        and any(getattr(t, "id", None) == "inner_reps" for t in n.targets)
+    )
+    legs |= {k.value for k in inner_reps.keys}
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_probe", root / "scripts" / "bench_probe.py"
+    )
+    probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probe)
+    assert set(probe.leg_builders(None, None)) == legs

@@ -261,3 +261,19 @@ def test_knn_bound_prune_identity(spark):
         got = sorted(map(tuple, a.collect()))
         want = sorted(map(tuple, b.collect()))
         assert got == want, (k, res, ring_k, inc, len(got), len(want))
+
+    # points with a NULL, NaN or ±Inf coordinate get no rows and are no
+    # point's neighbor, pruned or not
+    nan, inf = float("nan"), float("inf")
+    bad = spark.createDataFrame(
+        [(-1, None, 10.0), (-2, 10.0, None), (-3, nan, 10.0), (-4, 10.0, nan),
+         (-5, inf, 10.0), (-6, -inf, 10.0), (-7, 10.0, inf), (-8, 10.0, -inf)],
+        "doc_id long, lon double, lat double",
+    )
+    for prune in (True, False):
+        def knn(df):
+            return sorted(map(tuple, knn_join(
+                df, id_col="doc_id", k=3, res=5, ring_k=1, prune=prune,
+            ).collect()))
+
+        assert knn(pts.unionByName(bad)) == knn(pts), prune

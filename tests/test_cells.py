@@ -396,12 +396,17 @@ def test_h3_parent_col_matches_kernel(spark):
 
 
 def test_cell_encode_udfs_null_on_nonfinite(spark):
-    """Every (lon, lat) cell-encode UDF is NULL where either coordinate is
-    NULL, NaN or ±Inf, and equals its numpy kernel on the finite rows."""
+    """Every (lon, lat) cell encode — the UDFs, the grid Column and the
+    grid SQL in DuckDB — is NULL where either coordinate is NULL, NaN or
+    ±Inf, and equals its numpy kernel on the finite rows."""
+    import duckdb
+
     from geokitten_spark.cells import h3core
     from geokitten_spark.cells.geohash import geohash_encode
+    from geokitten_spark.cells.grid import grid_cell_sql
     from geokitten_spark.functions.cells_udfs import (
         geohash_cell,
+        grid_cell_col,
         h3_cell,
         hex_cell_udf,
         s2_cell,
@@ -420,6 +425,7 @@ def test_cell_encode_udfs_null_on_nonfinite(spark):
         "s2": s2_cell(12),
         "hex": hex_cell_udf(6),
         "geohash": geohash_cell(6),
+        "grid": lambda lon, lat: grid_cell_col(lon, lat, 5),
     }
     got = df.select(
         "i", *[f(df.lon, df.lat).alias(n) for n, f in cols.items()]
@@ -431,7 +437,19 @@ def test_cell_encode_udfs_null_on_nonfinite(spark):
         "s2": s2.lat_lng_to_cell(lat, lon, 12).astype(np.int64),
         "hex": hex_cell(lon, lat, 6).astype(np.int64),
         "geohash": geohash_encode(lon, lat, 6),
+        "grid": grid_cell(lon, lat, 5),
     }
     for n in cols:
         assert all(r[n] is None for r in got[: len(bad)]), n
         assert [r[n] for r in got[len(bad):]] == list(want[n]), n
+
+    def sql_double(v):
+        return "NULL" if v is None else f"CAST('{v!r}' AS DOUBLE)"
+
+    values = ", ".join(f"({i}, {sql_double(lo)}, {sql_double(la)})" for i, lo, la in rows)
+    con = duckdb.connect()
+    duck = con.sql(
+        f"SELECT {grid_cell_sql('lon', 'lat', 5)} AS c "
+        f"FROM (VALUES {values}) t(i, lon, lat) ORDER BY i"
+    ).fetchall()
+    assert [r[0] for r in duck] == [None] * len(bad) + list(want["grid"])

@@ -288,9 +288,9 @@ def test_h3_cover_compaction_parity_and_shrink(spark):
 
 def test_pip_paths_match_brute_on_degenerate_docs(spark):
     """Every PIP path equals brute pip_join on edge and bad coordinates:
-    lon ±180, lat ±90, the near-corners, NULL and NaN lon/lat, and an
+    lon ±180, lat ±90, the near-corners, NULL, NaN and ±Inf lon/lat, and an
     empty frame, against a whole-world rectangle plus the bench
-    boundaries. A NULL/NaN coordinate leaves its doc unmatched (kept once
+    boundaries. A NULL/NaN/±Inf coordinate leaves its doc unmatched (kept once
     with a null id under how='left') instead of failing the job."""
     from collections import Counter
 
@@ -305,13 +305,14 @@ def test_pip_paths_match_brute_on_degenerate_docs(spark):
         pip_join,
     )
 
-    nan, e = float("nan"), 179.9999999
+    nan, inf, e = float("nan"), float("inf"), 179.9999999
     pts = [
         (180.0, 0.0), (-180.0, 0.0), (0.0, 90.0), (0.0, -90.0),
         (180.0, 90.0), (-180.0, -90.0),
         (e, 89.9999999), (-e, 89.9999999), (e, -89.9999999), (-e, -89.9999999),
         (None, 10.0), (10.0, None), (nan, 10.0), (10.0, nan),
         (0.0, 0.0), (12.5, 41.0),
+        (inf, 10.0), (-inf, 10.0), (10.0, inf), (10.0, -inf),
     ]
     schema = "doc_id long, lon double, lat double"
     world = "POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))"
@@ -348,9 +349,11 @@ def test_pip_paths_match_brute_on_degenerate_docs(spark):
         for name, g in got_left.items():
             assert g == brute_left, name
         if docs is full:
-            # the NULL/NaN docs (ids 10-13) stay unmatched, kept once by 'left'
-            assert {d for d, _ in brute}.isdisjoint({10, 11, 12, 13})
-            assert all(brute_left[(d, None)] == 1 for d in (10, 11, 12, 13))
+            # the NULL/NaN/±Inf docs (ids 10-13, 16-19) stay unmatched,
+            # kept once by 'left'
+            bad = (10, 11, 12, 13, 16, 17, 18, 19)
+            assert {d for d, _ in brute}.isdisjoint(bad)
+            assert all(brute_left[(d, None)] == 1 for d in bad)
             assert (14, -1) in brute
         else:
             assert not brute and not brute_left

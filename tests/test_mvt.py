@@ -102,12 +102,14 @@ def test_projection_fixed_points():
 # distributed sink
 # ---------------------------------------------------------------------------
 
-def _corner_tiles(spark, sf_dir):
+def _corner_tiles(spark, sf_dir, extra=None):
     from geokitten_spark.cells.grid import RES_SHIFT, X_SHIFT
     from geokitten_spark.fixtures import web_documents
     from geokitten_spark.functions.cells_udfs import grid_cell_col
 
-    docs = web_documents(spark, sf_dir)
+    docs = web_documents(spark, sf_dir).select("lon", "lat")
+    if extra is not None:
+        docs = docs.unionByName(extra)
     tiles = (
         docs.select(grid_cell_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"))
         .groupBy("cell_id")
@@ -172,6 +174,22 @@ def test_mvt_pyramid_levels_equal_per_level_renders(spark):
         assert feats == n_cells
     tiles_per_z = {z: sum(1 for k in pyr if k[0] == z) for z in (1, 2, 3)}
     assert tiles_per_z[1] <= tiles_per_z[2] <= tiles_per_z[3]
+
+    # docs with a NULL, NaN or ±Inf coordinate share one NULL-cell_id
+    # aggregate row, which draws nothing: the blobs equal the finite-only
+    nan, inf = float("nan"), float("inf")
+    bad = spark.createDataFrame(
+        [(None, 10.0), (10.0, None), (nan, 10.0), (10.0, nan),
+         (inf, 10.0), (-inf, 10.0), (10.0, inf), (10.0, -inf)],
+        "lon double, lat double",
+    )
+    with_bad = _corner_tiles(spark, SF_SMOKE, extra=bad)
+    assert with_bad.filter(F.col("cell_id").isNull()).count() == 1
+    got = {
+        (r.z, r.x, r.y): bytes(r.pbf)
+        for r in mvt_pyramid(with_bad, zooms=(3, 2, 1)).collect()
+    }
+    assert got == pyr
 
 
 def test_mvt_pyramid_partitioning_invariant_and_single_shuffle(spark):

@@ -84,15 +84,24 @@ def _synth_points(spark, n=400, parts=1):
 
 def test_raster_tiles_partitioning_invariance(spark):
     """Tile bytes are a pure function of the point multiset — the same
-    input at 1 and 7 partitions renders identical (z,x,y)->md5 maps."""
-    def run(parts):
-        out = raster_heat_tiles(_synth_points(spark, parts=parts), zooms=(3, 2))
+    input at 1 and 7 partitions renders identical (z,x,y)->md5 maps — and
+    points with a NULL, NaN or ±Inf coordinate draw nothing."""
+    def run(points):
+        out = raster_heat_tiles(points, zooms=(3, 2))
         return {
             (r["z"], r["x"], r["y"]): (r["n_points"], hashlib.md5(r["png"]).hexdigest())
             for r in out.collect()
         }
 
-    assert run(1) == run(7)
+    finite = run(_synth_points(spark, parts=1))
+    assert run(_synth_points(spark, parts=7)) == finite
+    nan, inf = float("nan"), float("inf")
+    bad = spark.createDataFrame(
+        [(None, 10.0), (10.0, None), (nan, 10.0), (10.0, nan),
+         (inf, 10.0), (-inf, 10.0), (10.0, inf), (10.0, -inf)],
+        "lon double, lat double",
+    )
+    assert run(_synth_points(spark, parts=3).unionByName(bad)) == finite
 
 
 def test_raster_tiles_pyramid_consistency(spark):
