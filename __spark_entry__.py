@@ -27,7 +27,8 @@ def entry(spark: SparkSession) -> DataFrame:
     per-tile counts. Returns a small aggregate DataFrame."""
     from geokitten_spark.fixtures import web_documents, admin_rects_pdf
     from geokitten_spark.operators.pip_join import pip_join
-    from geokitten_spark.functions.cells_udfs import grid_cell_col, h3_cell, s2_cell
+    from geokitten_spark.cells.grid import grid_cell_sql
+    from geokitten_spark.functions.cells_udfs import h3_cell, s2_cell
 
     docs = web_documents(spark, SF_SMOKE)
     rects = admin_rects_pdf()
@@ -38,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
         wkt_col="geometry_wkt",
     )
     tiled = (
-        located.withColumn("cell_id", grid_cell_col(F.col("lon"), F.col("lat"), 5))
+        located.withColumn("cell_id", F.expr(grid_cell_sql("lon", "lat", 5)))
         .withColumn("s2_cell", s2_cell(9)(F.col("lon"), F.col("lat")))
         .withColumn("h3_cell", h3_cell(5)(F.col("lon"), F.col("lat")))
     )
@@ -979,11 +980,11 @@ def q_agg_minmax_distinct(spark, sf_dir):
 
 def q_web_tile_agg(spark, sf_dir):
     """A6: per-cell doc counts at grid res 7 (the tile aggregate)."""
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
+    from geokitten_spark.cells.grid import grid_cell_sql
 
     docs = _web_docs(spark, sf_dir)
     return (
-        docs.select(grid_cell_col(F.col("lon"), F.col("lat"), 7).alias("cell_id"))
+        docs.select(F.expr(f"{grid_cell_sql('lon', 'lat', 7)} AS cell_id"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -1014,20 +1015,20 @@ def q_tile_distinct_rollup(spark, sf_dir):
 
 def _cell_corners(spark, sf_dir):
     """Res-6 tile aggregate with each cell's corners: (cell_id, n_docs,
-    lon0, lat0, lon1, lat1) — exact bit-shift id decode, dyadic corner
+    lon0, lat0, lon1, lat1) — exact integer id decode, dyadic corner
     math (Spark, numpy and DuckDB produce identical doubles)."""
-    from geokitten_spark.functions.cells_udfs import _grid_bounds_col, grid_cell_col
+    from geokitten_spark.cells.grid import grid_bounds_sql, grid_cell_sql
 
     docs = _web_docs(spark, sf_dir)
     tiles = (
-        docs.select(grid_cell_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"))
+        docs.select(F.expr(f"{grid_cell_sql('lon', 'lat', 6)} AS cell_id"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    corners = _grid_bounds_col(F.col("cell_id"), 6)
+    corners = grid_bounds_sql("cell_id", 6)
     names = ("lon0", "lat0", "lon1", "lat1")
-    return tiles.select(
-        "cell_id", "n_docs", *[c.alias(a) for c, a in zip(corners, names)]
+    return tiles.selectExpr(
+        "cell_id", "n_docs", *[f"{c} AS {a}" for c, a in zip(corners, names)]
     )
 
 
@@ -1115,12 +1116,14 @@ def q_tile_percentiles(spark, sf_dir):
     Spark's `percentile` and DuckDB's `quantile_cont` share the same
     linear-interpolation definition, and the inputs are integers, so the
     values agree bit-for-bit. One partial+final aggregate shuffle."""
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
+    from geokitten_spark.cells.grid import grid_cell_sql
 
     docs = _web_docs(spark, sf_dir)
-    cell = grid_cell_col(F.col("lon"), F.col("lat"), 4)
     return (
-        docs.select(cell.alias("cell_id"), F.length("text").alias("n_chars"))
+        docs.select(
+            F.expr(f"{grid_cell_sql('lon', 'lat', 4)} AS cell_id"),
+            F.length("text").alias("n_chars"),
+        )
         .groupBy("cell_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1137,14 +1140,13 @@ def q_zorder_layout(spark, sf_dir):
     range — whose width == quad size proves z-sorted rows land in
     contiguous runs (the min/max file-statistics pruning story,
     DEPLOY.md). Pure integer expressions shared verbatim with DuckDB."""
-    from geokitten_spark.cells.grid import morton_sql
-    from geokitten_spark.functions.cells_udfs import _grid_clamp_col, _grid_xy_col
+    from geokitten_spark.cells.grid import _grid_clamp_sql, _grid_xy_sql, morton_sql
 
     res, drop = 8, 3
     docs = _web_docs(spark, sf_dir)
-    ix, iy = _grid_xy_col(F.col("lon"), F.col("lat"), res)
-    proj = docs.select(
-        _grid_clamp_col(ix, res).alias("ix"), _grid_clamp_col(iy, res).alias("iy")
+    ix, iy = _grid_xy_sql("lon", "lat", res)
+    proj = docs.selectExpr(
+        f"{_grid_clamp_sql(ix, res)} AS ix", f"{_grid_clamp_sql(iy, res)} AS iy"
     )
     z = F.expr(morton_sql("ix", "iy", res))
     quad = 1 << (2 * drop)
@@ -2033,12 +2035,12 @@ def q_cell_join_bucketed(spark, sf_dir):
     tests/test_bucketize.py). Output: per-lang weighted doc counts."""
     import uuid
 
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
+    from geokitten_spark.cells.grid import grid_cell_sql
     from geokitten_spark.operators.bucketize import read_table, write_bucketed
 
     tag = uuid.uuid4().hex[:8]
     docs = _web_docs(spark, sf_dir).select(
-        "doc_id", "lang", grid_cell_col(F.col("lon"), F.col("lat"), 5).alias("cell_id")
+        "doc_id", "lang", F.expr(f"{grid_cell_sql('lon', 'lat', 5)} AS cell_id")
     )
     poi = docs.select("cell_id").distinct().withColumn(
         "poi_weight", (F.col("cell_id") % 97).cast("long")
@@ -2651,8 +2653,8 @@ def q_stream_geo_tiles(spark, sf_dir):
         LongType, StringType, StructField, StructType,
     )
 
+    from geokitten_spark.cells.grid import grid_cell_sql
     from geokitten_spark.fixtures import derive_web_documents
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
     from geokitten_spark.streaming import run_to_memory
 
     src = os.path.join(tempfile.gettempdir(), f"gk_geo_{uuid.uuid4().hex[:8]}")
@@ -2673,7 +2675,7 @@ def q_stream_geo_tiles(spark, sf_dir):
         .parquet(src)
     )
     tiled = derive_web_documents(stream).select(
-        grid_cell_col(F.col("lon"), F.col("lat"), 7).alias("cell_id")
+        F.expr(f"{grid_cell_sql('lon', 'lat', 7)} AS cell_id")
     )
     agg = tiled.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_docs"))
     name = f"q_geo_{uuid.uuid4().hex[:8]}"
@@ -3608,7 +3610,7 @@ def q_skew_salted_join(spark, sf_dir):
     per-density-level counts; the oracle is the PLAIN unsalted
     join+aggregate, so the driver's hash match IS the salted==plain
     equivalence proof at driver grade."""
-    from geokitten_spark.functions.cells_udfs import grid_cell_col
+    from geokitten_spark.cells.grid import grid_cell_sql
     from geokitten_spark.operators.skew import (
         cell_histogram,
         choose_salt_factor,
@@ -3617,7 +3619,7 @@ def q_skew_salted_join(spark, sf_dir):
 
     docs = _web_docs(spark, sf_dir)
     pts = docs.select(
-        "doc_id", grid_cell_col(F.col("lon"), F.col("lat"), 3).alias("cell_id")
+        "doc_id", F.expr(f"{grid_cell_sql('lon', 'lat', 3)} AS cell_id")
     )
     hist = cell_histogram(pts)
     salt = choose_salt_factor(hist, target_rows_per_task=8, max_salt=16)

@@ -1,38 +1,36 @@
-"""Cell-encode pandas UDFs (F12/F13) + the pure-SQL grid encode column.
+"""Cell-encode pandas UDFs (F12/F13), the H3 cell-id kernels and the
+Column grid encode.
 
-S2/hex encodes are numpy-vectorized per Arrow batch (no per-row Python).
-The square-grid encode is a pure Spark SQL expression (``grid_cell_col``) so
-it stays inside whole-stage codegen AND matches the DuckDB oracle formula.
-This module is the Column home of the grid layout (``cells/grid.py`` holds
-the numpy and SQL dialects): ``_grid_xy_col``, ``_grid_clamp_col``,
-``_grid_world_col``, ``_grid_pack_col``, ``_grid_decode_col`` and
-``_grid_bounds_col`` are the only Column code that knows
-``cell_id = res·2^58 + ix·2^29 + iy``. Every (lon, lat) encode here is
-NULL where lon or lat is NULL, NaN or ±Inf; ``_grid_key_col`` is the
-non-nullable join-key form of ``grid_cell_col``.
+S2/hex/H3/geohash encodes are numpy-vectorized per Arrow batch (no
+per-row Python); every (lon, lat) encode here is NULL where lon or lat is
+NULL, NaN or ±Inf. The H3 cell → cell kernels (``h3_parent``,
+``h3_kring``, ``h3_boundary_wkt``) are Arrow UDFs: NULL in gives NULL
+out, and ids stay exact int64.
+
+The square grid (``cells/grid.py``) has three dialects: numpy; SQL, run by
+Spark through ``F.expr`` over column names and by DuckDB; and
+``grid_cell_col`` here, the one Column code that knows
+``cell_id = res·2^58 + ix·2^29 + iy``, for callers that hold Columns.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from ..cells import s2 as s2mod
 from ..cells.grid import RES_SHIFT, X_SHIFT
-from ..cells.hexgrid import hex_cell as _hex_cell, hex_kring as _hex_kring
+from ..cells.hexgrid import hex_cell as _hex_cell
 
 __all__ = [
     "s2_cell",
-    "s2_parent",
-    "s2_kring",
     "hex_cell_udf",
-    "hex_kring_udf",
     "grid_cell_col",
-    "grid_kring_col",
     "geohash_cell",
 ]
 
@@ -62,25 +60,6 @@ def s2_cell(level: int):
     return _enc
 
 
-def s2_parent(level: int):
-    @pandas_udf(LongType())
-    def _par(cell: pd.Series) -> pd.Series:
-        return pd.Series(s2mod.parent(cell.to_numpy(np.int64), level))
-
-    return _par
-
-
-def s2_kring(k: int = 1):
-    """UDF factory: cell id → array of same-level neighbor ids (incl. self)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def _ring(cell: pd.Series) -> pd.Series:
-        rings = s2mod.all_neighbors(cell.to_numpy(np.int64), k=k)
-        return pd.Series([r.tolist() for r in rings])
-
-    return _ring
-
-
 def hex_cell_udf(res: int):
     @pandas_udf(LongType())
     def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -89,109 +68,22 @@ def hex_cell_udf(res: int):
     return _enc
 
 
-def hex_kring_udf(k: int = 1):
-    @pandas_udf(ArrayType(LongType()))
-    def _ring(cell: pd.Series) -> pd.Series:
-        rings = _hex_kring(cell.to_numpy(np.int64), k=k)
-        return pd.Series([row.tolist() for row in rings])
-
-    return _ring
-
-
-def _grid_xy_col(lon: Column, lat: Column, res: int):
-    """Column twin of ``cells.grid._grid_xy``: lon/lat → UNCLAMPED integer
-    grid coordinates (ix, iy) at ``res`` (callers clamp with
-    ``_grid_clamp_col``, as the numpy callers clip)."""
-    n = 1 << res
-    ix = F.floor((lon + F.lit(180.0)) / 360.0 * n).cast("long")
-    iy = F.floor((lat + F.lit(90.0)) / 180.0 * n).cast("long")
-    return ix, iy
-
-
-def _grid_clamp_col(v: Column, res: int) -> Column:
-    """An integer grid coordinate clamped to the world range [0, 2^res)."""
-    return F.least(F.lit((1 << res) - 1), F.greatest(F.lit(0), v))
-
-
-def _grid_pack_col(res: int, ix: Column, iy: Column) -> Column:
-    """Column twin of ``cells.grid._grid_pack``: (res, ix, iy) → cell id."""
-    return (F.lit(res).cast("long") * F.lit(1 << RES_SHIFT)) + ix * F.lit(1 << X_SHIFT) + iy
-
-
-def _grid_decode_col(cell: Column):
-    """Column twin of ``cells.grid.grid_decode``: cell id → (ix, iy) by
-    exact bit ops (double division flips FLOOR for cells >= 2^53)."""
-    ix = F.shiftright(cell.cast("long"), X_SHIFT).bitwiseAND(
-        F.lit((1 << (RES_SHIFT - X_SHIFT)) - 1)
-    )
-    iy = cell.cast("long") % F.lit(1 << X_SHIFT)
-    return ix, iy
-
-
-def _grid_bounds_col(cell: Column, res: int):
-    """Cell id at ``res`` → its corners (lon0, lat0, lon1, lat1). All
-    corner math is dyadic, so every form of it yields the same doubles
-    in Spark, numpy and DuckDB."""
-    ix, iy = _grid_decode_col(cell)
-    w, h = 360.0 / (1 << res), 180.0 / (1 << res)
-    return (
-        F.lit(-180.0) + ix * w,
-        F.lit(-90.0) + iy * h,
-        F.lit(-180.0) + (ix + 1) * w,
-        F.lit(-90.0) + (iy + 1) * h,
-    )
-
-
-def _grid_world_col(lon: Column, lat: Column, res: int) -> Column:
-    """lon/lat → cell id at ``res`` with (ix, iy) clamped to the world; no
-    finite test (``_grid_finite_col`` guards it)."""
-    ix, iy = _grid_xy_col(lon, lat, res)
-    return _grid_pack_col(res, _grid_clamp_col(ix, res), _grid_clamp_col(iy, res))
-
-
-def _grid_finite_col(lon: Column, lat: Column) -> Column:
-    """True where lon and lat are both finite; never true where either is
-    NULL, NaN or ±Inf.
-    Callers encoding several resolutions build it once: every Column call
-    is a driver round trip to the JVM."""
-    inf = float("inf")
-    return (F.abs(lon) < inf) & (F.abs(lat) < inf)
-
-
 def grid_cell_col(lon: Column, lat: Column, res: int) -> Column:
-    """Square-grid encode as a pure Spark SQL column (JVM-side; identical to
-    ``cells.grid.grid_cell`` and to ``grid_cell_sql`` for the oracle);
-    NULL where lon or lat is NULL, NaN or ±Inf, so a group-by on it
-    (``tile_aggregate``, ``tile_rollup``) puts such docs in one NULL-key
-    row (per level) instead of on a real cell."""
-    return F.when(_grid_finite_col(lon, lat), _grid_world_col(lon, lat, res))
+    """Square-grid encode as a Spark Column (JVM-side; identical to
+    ``cells.grid.grid_cell`` and to ``grid_cell_sql``); NULL where lon or
+    lat is NULL, NaN or ±Inf, so a group-by on it (``tile_aggregate``,
+    ``tile_rollup``) puts such docs in one NULL-key row (per level)
+    instead of on a real cell. Code that has column names builds
+    ``F.expr(grid_cell_sql(...))`` instead: one JVM call, not ~30."""
+    n, inf = 1 << res, float("inf")
 
+    def world(v: Column, span: float) -> Column:
+        v = F.floor((v + F.lit(span / 2)) / span * n).cast("long")
+        return F.least(F.lit(n - 1), F.greatest(F.lit(0), v))
 
-def _grid_key_col(
-    lon: Column, lat: Column, res: int, finite: Column | None = None
-) -> Column:
-    """``grid_cell_col`` as a NON-nullable equi-join key: -1, which no grid
-    cell has, where the encode is NULL. An inner join on a nullable key
-    makes Spark infer ``isnotnull(key)`` and push the finite test below a
-    computed lon/lat, which then runs twice per row; a -1 key matches no
-    cover or cell row, so such docs still join nothing. ``finite`` reuses
-    a ``_grid_finite_col`` already built for the same lon/lat."""
-    if finite is None:
-        finite = _grid_finite_col(lon, lat)
-    return F.when(finite, _grid_world_col(lon, lat, res)).otherwise(F.lit(-1))
-
-
-def grid_kring_col(cell: Column, res: int, k: int = 1) -> Column:
-    """kRing as a pure SQL array expression over the packed grid id
-    (lon wraps, lat clamps — same as ``cells.grid.grid_kring``)."""
-    n = 1 << res
-    ix, iy = _grid_decode_col(cell)
-    cells = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            nx = (ix + F.lit(dx) + F.lit(n)) % F.lit(n)
-            cells.append(_grid_pack_col(res, nx, _grid_clamp_col(iy + F.lit(dy), res)))
-    return F.array_distinct(F.array(*cells))
+    ix, iy = world(lon, 360.0), world(lat, 180.0)
+    cell = (F.lit(res).cast("long") * F.lit(1 << RES_SHIFT)) + ix * F.lit(1 << X_SHIFT) + iy
+    return F.when((F.abs(lon) < inf) & (F.abs(lat) < inf), cell)
 
 
 def geohash_cell(precision: int):
@@ -228,18 +120,33 @@ def h3_cell(res: int):
     return _enc
 
 
+def _h3_cell_kernel(return_type, kernel):
+    """Arrow UDF, named as ``kernel``, over an H3 cell-id column:
+    ``kernel`` maps the non-NULL ids (uint64 numpy) to a pyarrow array of
+    the same length. NULL in gives NULL out (``h3_cell`` is NULL for
+    non-finite coordinates), and ids stay exact int64: a pandas UDF gets a
+    nullable bigint batch that holds a NULL as float64, which rounds H3
+    ids (they exceed 2^53)."""
+
+    def udf(cell: pa.Array) -> pa.Array:
+        out = kernel(cell.drop_null().to_numpy().astype(np.uint64))
+        if cell.null_count == 0:
+            return out
+        ok = cell.is_valid().to_numpy(zero_copy_only=False)
+        return out.take(pa.array(np.cumsum(ok) - 1, mask=~ok))
+
+    udf.__name__ = kernel.__name__
+    return arrow_udf(udf, return_type)
+
+
 def h3_parent(parent_res: int):
     """UDF factory: H3 cell id → ancestor id at ``parent_res``."""
     from ..cells import h3core
 
-    @pandas_udf(LongType())
-    def _par(cell: pd.Series) -> pd.Series:
-        out = h3core.cell_to_parent(
-            cell.to_numpy(np.int64).astype(np.uint64), parent_res
-        )
-        return pd.Series(out.astype(np.int64))
+    def _par(ids):
+        return pa.array(h3core.cell_to_parent(ids, parent_res).astype(np.int64))
 
-    return _par
+    return _h3_cell_kernel(LongType(), _par)
 
 
 def h3_kring(k: int = 1):
@@ -248,14 +155,14 @@ def h3_kring(k: int = 1):
     + dedupe semantics)."""
     from ..cells import h3core
 
-    @pandas_udf(ArrayType(LongType()))
-    def _ring(cell: pd.Series) -> pd.Series:
-        rings = h3core.grid_disk_arrays(
-            cell.to_numpy(np.int64).astype(np.uint64), k
-        )
-        return pd.Series([r.astype(np.int64).tolist() for r in rings])
+    def _ring(ids):
+        disks = h3core.grid_disk_arrays(ids, k)
+        offsets = np.zeros(len(disks) + 1, dtype=np.int32)
+        np.cumsum([len(d) for d in disks], out=offsets[1:])
+        values = np.concatenate(disks) if disks else np.empty(0, np.uint64)
+        return pa.ListArray.from_arrays(offsets, pa.array(values.astype(np.int64)))
 
-    return _ring
+    return _h3_cell_kernel(ArrayType(LongType()), _ring)
 
 
 def h3_boundary_wkt():
@@ -267,17 +174,15 @@ def h3_boundary_wkt():
 
     from ..cells import h3core
 
-    @pandas_udf(StringType())
-    def _wkt(cell: pd.Series) -> pd.Series:
+    def _wkt(ids):
         out = []
-        for c in cell.to_numpy(np.int64).astype(np.uint64):
-            b = h3core.cell_to_boundary(c)
-            pts = [f"{lng:.7f} {lat:.7f}" for lat, lng in b]
+        for c in ids:
+            pts = [f"{lng:.7f} {lat:.7f}" for lat, lng in h3core.cell_to_boundary(c)]
             pts.append(pts[0])
             out.append("POLYGON ((" + ", ".join(pts) + "))")
-        return pd.Series(out)
+        return pa.array(out, pa.string())
 
-    return _wkt
+    return _h3_cell_kernel(StringType(), _wkt)
 
 
 def h3_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:

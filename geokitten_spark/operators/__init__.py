@@ -1,7 +1,7 @@
 """Distributed operators (SURVEY.md §2.4-§2.8)."""
 
 from .pip_join import pip_join, BoundaryIndex
-from .tile import tile_aggregate, tile_rollup, grid_parent_col
+from .tile import tile_aggregate, tile_rollup
 from .knn import knn_join
 
 __all__ = [
@@ -9,6 +9,5 @@ __all__ = [
     "BoundaryIndex",
     "tile_aggregate",
     "tile_rollup",
-    "grid_parent_col",
     "knn_join",
 ]

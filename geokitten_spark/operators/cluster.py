@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells.grid import _grid_pack_sql, grid_cell_sql, grid_decode_sql
-from ..functions.cells_udfs import grid_cell_col, grid_kring_col
+from ..cells.grid import grid_cell_sql, grid_kring_sql, grid_neighbor_sql, spark_col_sql
 from .dedup import connected_components
 
 __all__ = ["grid_dbscan", "grid_dbscan_sql"]
@@ -57,16 +56,15 @@ def grid_dbscan(
     RAISES instead of returning truncated labels when the budget is
     exhausted — raise ``max_iters`` for continent-spanning dense regions.
     """
+    cell = grid_cell_sql(spark_col_sql(lon_col), spark_col_sql(lat_col), res)
     cells = (
-        points.groupBy(
-            grid_cell_col(F.col(lon_col), F.col(lat_col), res).alias("cell_id")
-        )
+        points.groupBy(F.expr(f"{cell} AS cell_id"))
         .agg(F.count(F.lit(1)).alias("n_pts"))
         .filter(F.col("n_pts") >= min_pts)
     )
     nb = cells.select(
         "cell_id",
-        F.explode(grid_kring_col(F.col("cell_id"), res, 1)).alias("nb"),
+        F.expr(f"explode({grid_kring_sql('cell_id', res, 1)}) AS nb"),
     ).filter(F.col("nb") > F.col("cell_id"))
     edges = nb.join(
         cells.select(F.col("cell_id").alias("nb")), on="nb"
@@ -89,14 +87,8 @@ def grid_dbscan_sql(
     labels via WITH RECURSIVE closure."""
     from .dedup import connected_components_sql
 
-    n = 1 << res
     cell = grid_cell_sql("lon", "lat", res)
-    dec = grid_decode_sql("c.cell_id")
-    neighbor = _grid_pack_sql(
-        res,
-        f"(({dec['ix']}) + d.dx + {n}) % {n}",
-        f"LEAST({n - 1}, GREATEST(0, ({dec['iy']}) + d.dy))",
-    )
+    neighbor = grid_neighbor_sql("c.cell_id", res, "d.dx", "d.dy")
     dense = (
         f"SELECT {cell} AS cell_id, COUNT(*) AS n_pts "
         f"FROM ({points_query}) GROUP BY 1 HAVING COUNT(*) >= {min_pts}"

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.cells_udfs import _grid_bounds_col, grid_cell_col, grid_kring_col
+from ..cells.grid import grid_bounds_sql, grid_cell_sql, grid_kring_sql
 
 __all__ = ["knn_join"]
 
@@ -83,7 +83,7 @@ def knn_join(
             F.col(id_col).alias("id"),
             F.col(lon_col).alias("lon"),
             F.col(lat_col).alias("lat"),
-        ).withColumn("cell_id", grid_cell_col(F.col("lon"), F.col("lat"), res))
+        ).withColumn("cell_id", F.expr(grid_cell_sql("lon", "lat", res)))
 
     pre = pts
     if prune and ring_k > 0:
@@ -125,7 +125,7 @@ def knn_join(
         "lon",
         "lat",
         *(["__bound"] if prune and ring_k > 0 else []),
-        F.explode(grid_kring_col(F.col("cell_id"), res, ring_k)).alias("nb_cell"),
+        F.expr(f"explode({grid_kring_sql('cell_id', res, ring_k)}) AS nb_cell"),
     )
     if prune and ring_k > 0:
         # Cell-box mindist prune (still codegen, BEFORE the candidate
@@ -139,12 +139,11 @@ def knn_join(
         # so output is bit-identical. At O(10-100) points/cell density
         # this cuts the exploded side from (2k+1)^2 cells/point to the
         # 1-3 cells the bound circle actually touches.
-        lon0, lat0, lon1, lat1 = _grid_bounds_col(F.col("nb_cell"), res)
-        ddx = F.greatest(F.lit(0.0), lon0 - F.col("lon"), F.col("lon") - lon1)
-        ddy = F.greatest(F.lit(0.0), lat0 - F.col("lat"), F.col("lat") - lat1)
+        lon0, lat0, lon1, lat1 = grid_bounds_sql("nb_cell", res)
+        ddx = f"GREATEST(CAST(0.0 AS DOUBLE), {lon0} - lon, lon - {lon1})"
+        ddy = f"GREATEST(CAST(0.0 AS DOUBLE), {lat0} - lat, lat - {lat1})"
         left = left.filter(
-            F.col("__bound").isNull()
-            | ((ddx * ddx + ddy * ddy) <= F.col("__bound"))
+            F.expr(f"__bound IS NULL OR ({ddx} * {ddx} + {ddy} * {ddy}) <= __bound")
         )
     right = pts.select(
         F.col("id").alias("neighbor_id"),

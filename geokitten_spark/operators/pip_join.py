@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..cells.grid import _grid_pack, _grid_xy, grid_decode
-from ..functions.cells_udfs import _grid_finite_col, _grid_key_col, h3_cell, h3_parent_col
+from ..cells.grid import _grid_pack, _grid_xy, grid_decode, grid_key_sql, spark_col_sql
+from ..functions.cells_udfs import h3_cell, h3_parent_col
 from ..geom import parse_wkt, points_in_rings
 from ..geom.rtree import STRtree
 
@@ -343,9 +343,9 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
 class _BroadcastCover:
     """Shared half of the broadcast cover-refine joins: the two cover
     tables, the ring broadcast and ``join``. A subclass classifies cells
-    and supplies two hooks: ``_cell`` (a doc's cell at ``res``) and
-    ``_ancestors`` (the ids it probes the multi-level inside cover with,
-    given the doc's coordinates and its ``_cell`` column)."""
+    and supplies two hooks over column names: ``_cell`` (a doc's cell at
+    ``res``) and ``_ancestors`` (the ids it probes the multi-level inside
+    cover with, given the doc's coordinates and its ``_cell`` column)."""
 
     def _publish(self, spark, boundaries_pdf: pd.DataFrame, geoms: list,
                  in_cells, in_pos, bd_cells, bd_pos) -> None:
@@ -370,14 +370,13 @@ class _BroadcastCover:
 
     def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
         id_col, bc = self.id_col, self._bc
-        lon, lat = F.col(lon_col), F.col(lat_col)
-        tagged = docs.withColumn("__cell", self._cell(lon, lat))
+        tagged = docs.withColumn("__cell", self._cell(lon_col, lat_col))
 
         # fast path: pure-JVM broadcast hash join against the multi-level
         # inside cover — each doc probes with its ancestor at every cover
         # level (explode is codegen; a doc matches a region at <=1 level
         # because the cover is disjoint per region)
-        anc = self._ancestors(lon, lat, F.col("__cell"))
+        anc = self._ancestors(lon_col, lat_col, "__cell")
         probe = tagged.withColumn("__cell", F.explode(anc))
         fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
 
@@ -423,13 +422,12 @@ class PolygonCover(_BroadcastCover):
         self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
 
     def _cell(self, lon, lat):
-        return _grid_key_col(lon, lat, self.res)
+        return F.expr(grid_key_sql(spark_col_sql(lon), spark_col_sql(lat), self.res))
 
     def _ancestors(self, lon, lat, cell):
-        finite = _grid_finite_col(lon, lat)
-        return F.array(*[
-            _grid_key_col(lon, lat, r, finite) for r in range(self.min_res, self.res + 1)
-        ])
+        lon, lat = spark_col_sql(lon), spark_col_sql(lat)
+        keys = ", ".join(grid_key_sql(lon, lat, r) for r in range(self.min_res, self.res + 1))
+        return F.expr(f"array({keys})")
 
 
 def partitioned_pip_join(
@@ -510,7 +508,7 @@ def partitioned_pip_join(
     cover = boundaries.mapInPandas(build_cover, schema=cover_schema)
 
     tagged = docs.withColumn(
-        "__cell", _grid_key_col(F.col(lon_col), F.col(lat_col), res)
+        "__cell", F.expr(grid_key_sql(spark_col_sql(lon_col), spark_col_sql(lat_col), res))
     )
     # ONE join against the whole cover, then route rows by the border flag
     # (__wkt null = fully-inside cell → direct match). The two branches
@@ -643,6 +641,7 @@ class H3PolygonCover(_BroadcastCover):
 
     def _ancestors(self, lon, lat, cell):
         # the COMPACTED cover's levels as pure-JVM digit truncation
+        cell = F.col(cell)
         return F.array(
             cell, *[h3_parent_col(cell, self.res, r) for r in range(self.res - 1, self.min_res - 1, -1)]
         )

@@ -77,27 +77,20 @@ def wkt_bbox(wkt: pd.Series) -> pd.Series:
 def bbox_cell_cover(df: DataFrame, id_col: str, wkt_col: str, res: int) -> DataFrame:
     """(id, cell_id) cover of each polygon's bbox at grid ``res`` — the
     bbox parse is one Arrow pass; the cell explode is pure Catalyst."""
-    from ..functions.cells_udfs import _grid_clamp_col, _grid_pack_col, _grid_xy_col
+    from ..cells.grid import _grid_clamp_sql, _grid_pack_sql, _grid_xy_sql
 
     b = df.select(
         F.col(id_col).alias("_pid"), wkt_bbox(F.col(wkt_col)).alias("_bb")
     ).filter(F.col("_bb").isNotNull())
-    ix0, iy0 = _grid_xy_col(F.element_at("_bb", 1), F.element_at("_bb", 2), res)
-    ix1, iy1 = _grid_xy_col(F.element_at("_bb", 3), F.element_at("_bb", 4), res)
-    cells = b.select(
+    ix0, iy0 = _grid_xy_sql("element_at(_bb, 1)", "element_at(_bb, 2)", res)
+    ix1, iy1 = _grid_xy_sql("element_at(_bb, 3)", "element_at(_bb, 4)", res)
+    cells = b.selectExpr(
         "_pid",
-        F.explode(
-            F.sequence(_grid_clamp_col(ix0, res), _grid_clamp_col(ix1, res))
-        ).alias("_ix"),
-        _grid_clamp_col(iy0, res).alias("_iy0"),
-        _grid_clamp_col(iy1, res).alias("_iy1"),
-    ).select(
-        "_pid",
-        F.explode(F.sequence(F.col("_iy0"), F.col("_iy1"))).alias("_iy"),
-        "_ix",
-    )
-    cell_id = _grid_pack_col(res, F.col("_ix"), F.col("_iy"))
-    return cells.select("_pid", cell_id.alias("cell_id"))
+        f"explode(sequence({_grid_clamp_sql(ix0, res)}, {_grid_clamp_sql(ix1, res)})) AS _ix",
+        f"{_grid_clamp_sql(iy0, res)} AS _iy0",
+        f"{_grid_clamp_sql(iy1, res)} AS _iy1",
+    ).selectExpr("_pid", "explode(sequence(_iy0, _iy1)) AS _iy", "_ix")
+    return cells.selectExpr("_pid", f"{_grid_pack_sql(res, '_ix', '_iy')} AS cell_id")
 
 
 @pandas_udf(DoubleType())

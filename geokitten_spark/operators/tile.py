@@ -16,13 +16,12 @@ lives in ``operators/pip_join.py`` (``PolygonCover`` broadcasts the cover,
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells.grid import _grid_pack_sql, _idiv_pow2_sql, grid_cell_sql, grid_decode_sql
-from ..functions.cells_udfs import _grid_decode_col, _grid_pack_col, grid_cell_col
+from ..cells.grid import grid_cell_sql, grid_decode_sql, grid_parent_sql, spark_col_sql
 
-__all__ = ["tile_aggregate", "tile_rollup", "tile_distinct_rollup", "grid_parent_col", "geo_aggregates", "tile_vectorize", "tile_wkt_sql"]
+__all__ = ["tile_aggregate", "tile_rollup", "tile_distinct_rollup", "geo_aggregates", "tile_vectorize", "tile_wkt_sql"]
 
 
 def tile_aggregate(
@@ -40,12 +39,21 @@ def tile_aggregate(
     return docs.groupBy(cell_col).agg(*aggs)
 
 
-def grid_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:
-    """Arithmetic parent derivation for the packed grid id (no re-encode from
-    lon/lat needed — pure integer ops on the tile table)."""
-    shift = child_res - parent_res
-    ix, iy = _grid_decode_col(cell)
-    return _grid_pack_col(parent_res, F.shiftright(ix, shift), F.shiftright(iy, shift))
+def _cell_sql(lon_col: str, lat_col: str, res: int) -> str:
+    """Spark SQL grid encode of a caller's lon/lat column names."""
+    return grid_cell_sql(spark_col_sql(lon_col), spark_col_sql(lat_col), res)
+
+
+def _levels_sql(finest: int, resolutions: list) -> str:
+    """Explode of a finest-res ``cell_id`` row into one ``lv`` struct
+    (res, cell_id) per resolution: the cell itself and its arithmetic
+    parents (integer ops on the tile table, no re-encode)."""
+    levels = ", ".join(
+        f"struct({r} AS res, "
+        f"{'cell_id' if r == finest else grid_parent_sql('cell_id', finest, r)} AS cell_id)"
+        for r in sorted(resolutions, reverse=True)
+    )
+    return f"explode(array({levels})) AS lv"
 
 
 def tile_rollup(
@@ -68,25 +76,12 @@ def tile_rollup(
     one NULL-``cell_id`` row per resolution."""
     finest = max(resolutions)
     base = (
-        docs.select(grid_cell_col(F.col(lon_col), F.col(lat_col), finest).alias("cell_id"))
+        docs.select(F.expr(f"{_cell_sql(lon_col, lat_col, finest)} AS cell_id"))
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    levels = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                (
-                    F.col("cell_id")
-                    if r == finest
-                    else grid_parent_col(F.col("cell_id"), finest, r)
-                ).alias("cell_id"),
-            )
-            for r in sorted(resolutions, reverse=True)
-        ]
-    )
     return (
-        base.select(F.explode(levels).alias("lv"), "n_docs")
+        base.select(F.expr(_levels_sql(finest, resolutions)), "n_docs")
         .groupBy(F.col("lv.res").alias("res"), F.col("lv.cell_id").alias("cell_id"))
         .agg(F.sum("n_docs").alias("n_docs"))
     )
@@ -127,25 +122,12 @@ def tile_distinct_rollup(
 
     finest = max(resolutions)
     base = docs.select(
-        grid_cell_col(F.col(lon_col), F.col(lat_col), finest).alias("cell_id"),
+        F.expr(f"{_cell_sql(lon_col, lat_col, finest)} AS cell_id"),
         F.col(key_col).alias("__k"),
     )
     regs = hll_registers(base, "__k", ["cell_id"], m=m, salt=salt)
-    levels = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                (
-                    F.col("cell_id")
-                    if r == finest
-                    else grid_parent_col(F.col("cell_id"), finest, r)
-                ).alias("cell_id"),
-            )
-            for r in sorted(resolutions, reverse=True)
-        ]
-    )
     merged = (
-        regs.select(F.explode(levels).alias("lv"), "__reg", "__R")
+        regs.select(F.expr(_levels_sql(finest, resolutions)), "__reg", "__R")
         .groupBy(
             F.col("lv.res").alias("res"),
             F.col("lv.cell_id").alias("cell_id"),
@@ -178,7 +160,8 @@ def adaptive_tiles(
     doc-sized shuffle — same cost as ``tile_rollup``); every coarser
     level's counts AND the split/keep decisions run on the tiny tile
     tables (semi/anti joins on parent cell ids). Deterministic: the leaf
-    set is a pure function of the counts.
+    set is a pure function of the counts. Docs whose lon or lat is NULL,
+    NaN or ±Inf have no cell and are in no leaf.
 
     EAGERNESS TRADEOFF (``eager``, default True): with ``eager=True`` the
     operator runs Spark jobs AT BUILD TIME via ``localCheckpoint()`` —
@@ -194,8 +177,8 @@ def adaptive_tiles(
     """
     return _adaptive_tiles_generic(
         docs,
-        encode_col=lambda: grid_cell_col(F.col(lon_col), F.col(lat_col), max_res),
-        parent_col=lambda c, fr, to: grid_parent_col(c, fr, to),
+        encode_col=lambda: F.expr(_cell_sql(lon_col, lat_col, max_res)),
+        parent_col=lambda c, fr, to: F.expr(grid_parent_sql(c, fr, to)),
         base_res=base_res,
         max_res=max_res,
         threshold=threshold,
@@ -217,7 +200,8 @@ def h3_adaptive_tiles(
     splits into its 7 children (6 for pentagons) while it holds more than
     ``threshold`` docs — same scale shape and eagerness tradeoff as
     ``adaptive_tiles`` (one doc-sized aggregate at ``max_res``, decisions
-    on tile tables), with the H3 digit-truncation parent."""
+    on tile tables), with the H3 digit-truncation parent. Docs whose lon
+    or lat is NULL, NaN or ±Inf are in no leaf."""
     from ..functions.cells_udfs import h3_cell, h3_parent
 
     return _adaptive_tiles_generic(
@@ -251,10 +235,15 @@ def _adaptive_tiles_generic(
     # 125 exchanges, only 4 reused, 17s at 500 docs → 1 doc shuffle +
     # per-level tile shuffles, sub-second, after truncation). The
     # checkpointed tables are #tiles-sized, never doc-sized.
+    # docs with a non-finite coordinate (NULL cell) are in no leaf: only
+    # non-NULL cells count, so their one row has n_docs = 0 and is dropped.
+    # A filter on cell_id itself would be pushed below the aggregate into
+    # the encode's projection and run the encode twice per doc.
     finest = (
         docs.select(encode_col().alias("cell_id"))
         .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .agg(F.count("cell_id").alias("n_docs"))
+        .filter(F.col("n_docs") > 0)
     )
     finest = ckpt(finest)
     # counts per level, finest -> coarsest, each derived from the previous
@@ -262,7 +251,7 @@ def _adaptive_tiles_generic(
     for r in range(max_res - 1, base_res - 1, -1):
         counts[r] = ckpt(
             counts[r + 1]
-            .groupBy(parent_col(F.col("cell_id"), r + 1, r).alias("cell_id"))
+            .groupBy(parent_col("cell_id", r + 1, r).alias("cell_id"))
             .agg(F.sum("n_docs").alias("n_docs"))
         )
     out = []
@@ -273,7 +262,7 @@ def _adaptive_tiles_generic(
             # only children of split cells are live at this level
             t = ckpt(
                 t.withColumn(
-                    "__parent", parent_col(F.col("cell_id"), r, r - 1)
+                    "__parent", parent_col("cell_id", r, r - 1)
                 ).join(
                     split_prev.select(F.col("cell_id").alias("__parent")),
                     on="__parent",
@@ -301,11 +290,12 @@ def adaptive_tiles_sql(
 ) -> str:
     """DuckDB twin of :func:`adaptive_tiles` over a (lon, lat) query."""
     parts = [
-        f"c{max_res} AS (SELECT {grid_cell_sql('lon', 'lat', max_res)} AS cell_id, "
-        f"COUNT(*) AS n_docs FROM ({points_query}) GROUP BY 1)"
+        f"c{max_res} AS (SELECT * FROM (SELECT {grid_cell_sql('lon', 'lat', max_res)} "
+        f"AS cell_id, COUNT(*) AS n_docs FROM ({points_query}) GROUP BY 1) "
+        f"WHERE cell_id IS NOT NULL)"
     ]
     for r in range(max_res - 1, base_res - 1, -1):
-        parent = _parent_sql("cell_id", r + 1, r)
+        parent = grid_parent_sql("cell_id", r + 1, r)
         parts.append(
             f"c{r} AS (SELECT {parent} AS cell_id, SUM(n_docs) AS n_docs "
             f"FROM c{r + 1} GROUP BY 1)"
@@ -319,7 +309,7 @@ def adaptive_tiles_sql(
                 f"CAST(n_docs AS BIGINT) AS n_docs FROM l{r} "
                 f"WHERE n_docs <= {threshold}"
             )
-            parent = _parent_sql("c.cell_id", r + 1, r)
+            parent = grid_parent_sql("c.cell_id", r + 1, r)
             live.append(
                 f"l{r + 1} AS (SELECT c.* FROM c{r + 1} c "
                 f"WHERE {parent} IN "
@@ -332,18 +322,6 @@ def adaptive_tiles_sql(
             )
     return (
         "WITH " + ",\n".join(parts + live) + "\n" + " UNION ALL ".join(sel)
-    )
-
-
-def _parent_sql(cell_expr: str, child_res: int, parent_res: int) -> str:
-    """Arithmetic parent of a packed grid id, portable SQL (exact pow-2
-    integer division)."""
-    shift = child_res - parent_res
-    dec = grid_decode_sql(cell_expr)
-    return _grid_pack_sql(
-        parent_res,
-        _idiv_pow2_sql(dec["ix"], 1 << shift),
-        _idiv_pow2_sql(dec["iy"], 1 << shift),
     )
 
 

@@ -8,13 +8,17 @@ repr of every cell (including its Python type), per query.
 
 Usage: python scripts/strict_hash_check.py [query ...]   (default: all)
 Set STRICT_JSON_OUT=/path.json to also write a machine-readable record
-{query: {"ok": bool, "spark_rows": N, "oracle_rows": N}} for the round
-archive (BENCH/STRICT_r*.json), diffable across rounds.
+{query: {"ok": bool, "spark_rows": N, "oracle_rows": N, "plan": str}} for
+the round archive (BENCH/STRICT_r*.json), diffable across rounds. "plan"
+is the query's executed physical plan with the per-session expression
+ids (``#12``) and exchange ids (``plan_id=34``) stripped, so the records
+of two commits diff to the plan changes alone.
 """
 
 import hashlib
 import json
 import os
+import re
 import sys
 
 import duckdb
@@ -43,6 +47,12 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def normalized_plan(df) -> str:
+    """The executed plan of an already-run DataFrame, ids stripped."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "", plan))
+
+
 def main():
     from geokitten_spark.session import get_spark
 
@@ -60,12 +70,15 @@ def main():
             print(f"{name}: NO ORACLE")
             record[name] = {"ok": None, "note": "no oracle"}
             continue
-        s = queries[name](spark, SF_DIR).toPandas()
+        df = queries[name](spark, SF_DIR)
+        s = df.toPandas()
         o = con.sql(oracles[name]).df()
         hs, ho = value_hash(s), value_hash(o)
         ok = hs == ho
         bad += 0 if ok else 1
-        record[name] = {"ok": ok, "spark_rows": len(s), "oracle_rows": len(o)}
+        record[name] = {
+            "ok": ok, "spark_rows": len(s), "oracle_rows": len(o), "plan": normalized_plan(df),
+        }
         print(f"{name}: {'OK' if ok else 'HASH-MISMATCH'}  rows {len(s)}/{len(o)}")
         if not ok:
             cs, co = canon(s), canon(o)

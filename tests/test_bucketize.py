@@ -106,22 +106,35 @@ def test_raster_to_vector_to_geojson_sink(spark, tmp_path):
     assert got == want
 
 
+def _nonfinite_docs(spark):
+    """Three docs whose cell is NULL: a NULL, a NaN and a ±Inf coordinate."""
+    nan, inf = float("nan"), float("inf")
+    return spark.createDataFrame(
+        [(None, 10.0), (10.0, nan), (inf, -inf)], "lon double, lat double"
+    )
+
+
 def test_adaptive_tiles_conservation_and_leaf_purity(spark):
     """Adaptive quadtree: leaf counts conserve the total; no leaf exceeds
     the threshold unless it is at max_res; no leaf is a descendant of
-    another leaf (the tiling is a partition of occupied space)."""
-    from pyspark.sql import functions as F
+    another leaf (the tiling is a partition of occupied space). Docs with
+    a NULL, NaN or ±Inf coordinate are in no leaf."""
     from geokitten_spark.fixtures import web_documents
     from geokitten_spark.operators.tile import adaptive_tiles
     from geokitten_spark.cells.grid import grid_decode
     from tests.conftest import SF_SMOKE
 
-    docs = web_documents(spark, SF_SMOKE)
+    docs = web_documents(spark, SF_SMOKE).select("lon", "lat")
     n = docs.count()
     leaves = adaptive_tiles(
         docs, "lon", "lat", base_res=2, max_res=7, threshold=4
     ).collect()
     assert sum(r["n_docs"] for r in leaves) == n
+    with_bad = adaptive_tiles(
+        docs.unionByName(_nonfinite_docs(spark)), "lon", "lat",
+        base_res=2, max_res=7, threshold=4,
+    ).collect()
+    assert sorted(map(tuple, with_bad)) == sorted(map(tuple, leaves))
     assert all(r["n_docs"] <= 4 or r["res"] == 7 for r in leaves)
     # descendant check: ancestor (res, ix>>d, iy>>d) of any leaf must not
     # itself be a leaf
@@ -208,7 +221,8 @@ def test_pipeline_stage_bucketing_exchange_free(spark, tmp_path):
 
 def test_h3_adaptive_tiles_conservation_and_leaf_purity(spark):
     """Aperture-7 adaptive tiling on H3 ids: leaf counts conserve the
-    corpus total; no leaf is an ancestor of another leaf."""
+    corpus total; no leaf is an ancestor of another leaf. Docs with a
+    NULL, NaN or ±Inf coordinate are in no leaf."""
     import numpy as np
 
     from geokitten_spark.cells import h3core
@@ -216,12 +230,17 @@ def test_h3_adaptive_tiles_conservation_and_leaf_purity(spark):
     from geokitten_spark.operators.tile import h3_adaptive_tiles
     from tests.conftest import SF_SMOKE
 
-    docs = web_documents(spark, SF_SMOKE)
+    docs = web_documents(spark, SF_SMOKE).select("lon", "lat")
     total = docs.count()
     leaves = h3_adaptive_tiles(
         docs, "lon", "lat", base_res=1, max_res=3, threshold=6
     ).collect()
     assert sum(r["n_docs"] for r in leaves) == total
+    with_bad = h3_adaptive_tiles(
+        docs.unionByName(_nonfinite_docs(spark)), "lon", "lat",
+        base_res=1, max_res=3, threshold=6,
+    ).collect()
+    assert sorted(map(tuple, with_bad)) == sorted(map(tuple, leaves))
     by_res = {}
     for r in leaves:
         by_res.setdefault(r["res"], set()).add(np.uint64(r["cell_id"]))

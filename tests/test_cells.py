@@ -230,10 +230,19 @@ def test_hex_parent_child_hierarchy():
 def test_grid_decode_sql_exact_at_high_res(spark):
     """grid_decode_sql must match the numpy bit-op decode for res>=27 ids
     (where the packed remainder exceeds 2^53 and a DOUBLE FLOOR can flip),
-    identically in Spark SQL and DuckDB."""
+    identically in Spark SQL and DuckDB — and so must the kRing, parent
+    and bounds builders that decode through it."""
     import duckdb
+    import pyspark.sql.functions as F
 
-    from geokitten_spark.cells.grid import grid_decode_sql
+    from geokitten_spark.cells.grid import (
+        _grid_pack,
+        grid_bounds_sql,
+        grid_decode_sql,
+        grid_kring_sql,
+        grid_neighbor_sql,
+        grid_parent_sql,
+    )
 
     cells = [int(grid_cell(lon, -89.9999999, 28)) for lon in (-179.9, -1.0, 0.001, 179.9)]
     cells += [int(grid_cell(179.999, lat, 27)) for lat in (-89.99999, -0.001, 89.99999)]
@@ -254,6 +263,38 @@ def test_grid_decode_sql_exact_at_high_res(spark):
         f"SELECT {sel} FROM (SELECT unnest({cells}::BIGINT[]) AS cell_id)"
     ).fetchall()
     assert [tuple(map(int, t)) for t in got_duck] == expected
+
+    # the kRing, parent and bounds builders over the same exact decode, in
+    # Spark, across the antimeridian wrap and the pole clamp; the shared
+    # neighbor pack in DuckDB too
+    pts = [(-180.0, -90.0), (179.9999999999, 89.9999999999), (-180.0, 89.9999999999),
+           (179.9999999999, -90.0), (-1.0, -89.99999), (0.001, 0.0), (123.4, 45.6)]
+    for res in (27, 28):
+        cells = [int(c) for c in grid_cell(*map(np.array, zip(*pts)), res)]
+        _, ix, iy = grid_decode(np.asarray(cells, dtype=np.int64))
+        sdf = spark.createDataFrame([(c,) for c in cells], "cell_id long")
+        w, h = 360.0 / (1 << res), 180.0 / (1 << res)
+        want_bounds = list(zip(-180.0 + ix * w, -90.0 + iy * h,
+                               -180.0 + (ix + 1) * w, -90.0 + (iy + 1) * h))
+        got = sdf.select(*[F.expr(e) for e in grid_bounds_sql("cell_id", res)]).collect()
+        assert [tuple(r) for r in got] == want_bounds, res
+        for p in (0, res - 5, res - 1):
+            s = res - p
+            got = [r[0] for r in sdf.select(F.expr(grid_parent_sql("cell_id", res, p))).collect()]
+            assert got == _grid_pack(p, ix >> s, iy >> s).tolist(), (res, p)
+        for k in (1, 2):
+            want = [list(dict.fromkeys(row.tolist())) for row in grid_kring(cells, k)]
+            got = [r[0] for r in sdf.select(F.expr(grid_kring_sql("cell_id", res, k))).collect()]
+            assert got == want, (res, k)
+
+        deltas = ", ".join(f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+        duck = con.sql(
+            f"SELECT i, {grid_neighbor_sql('cell_id', res, 'd.dx', 'd.dy')} "
+            f"FROM (SELECT unnest({cells}::BIGINT[]) AS cell_id, "
+            f"unnest(range({len(cells)})) AS i) c, (VALUES {deltas}) d(dx, dy) "
+            f"ORDER BY i, dx, dy"
+        ).fetchall()
+        assert [int(r[1]) for r in duck] == grid_kring(cells, 1).ravel().tolist(), res
 
 
 # ---------------------------------------------------------------------------
@@ -339,6 +380,48 @@ def test_grid_dbscan_two_blobs_and_wrap(spark):
     assert out[a1]["n_pts"] == 3
 
 
+def test_grid_operators_take_any_column_name(spark):
+    """The grid operators build Spark SQL over the caller's lon/lat column
+    names, so a name ``F.col`` accepts but that is no bare SQL identifier
+    (a space, a hyphen) and a dotted struct-field path give the same rows
+    as plain ``lon``/``lat``."""
+    from geokitten_spark.fixtures import bench_boundaries_pdf, web_documents
+    from geokitten_spark.operators.cluster import grid_dbscan
+    from geokitten_spark.operators.pip_join import PolygonCover, partitioned_pip_join
+    from geokitten_spark.operators.tile import adaptive_tiles, tile_distinct_rollup, tile_rollup
+    from pyspark.sql import functions as F
+
+    from tests.conftest import SF_SMOKE
+
+    docs = web_documents(spark, SF_SMOKE).select("doc_id", "lon", "lat")
+    odd = docs.select("doc_id", F.col("lon").alias("lon deg"), F.col("lat").alias("lat-deg"))
+    nested = docs.select("doc_id", F.struct("lon", "lat").alias("p"))
+    bnd_pdf = bench_boundaries_pdf()
+    kw = dict(id_col="region_key", wkt_col="geometry_wkt")
+    cover = PolygonCover(spark, bnd_pdf, res=7, **kw)
+
+    def ops(df, lon, lat):
+        out = {
+            "rollup": tile_rollup(df, lon, lat, [6, 4]),
+            "distinct": tile_distinct_rollup(df, lon, lat, "doc_id", [6, 4]),
+            "adaptive": adaptive_tiles(df, lon, lat, base_res=2, max_res=6, threshold=20),
+            "dbscan": grid_dbscan(df, lon_col=lon, lat_col=lat, res=5, min_pts=3),
+        }
+        if "." not in lon:  # the refine reads pdf[lon_col]: top-level names only
+            xy = dict(lon_col=lon, lat_col=lat)
+            out["cover"] = cover.join(df, **xy).select("doc_id", "region_key")
+            out["partitioned"] = partitioned_pip_join(
+                df, spark.createDataFrame(bnd_pdf), res=7, **xy, **kw
+            ).select("doc_id", "region_key")
+        return {n: sorted(map(tuple, d.collect())) for n, d in out.items()}
+
+    want = ops(docs, "lon", "lat")
+    assert all(want.values())
+    assert ops(odd, "lon deg", "lat-deg") == want
+    got = ops(nested, "p.lon", "p.lat")
+    assert got == {n: want[n] for n in got}
+
+
 def test_morton_prefix_property_and_sql_parity():
     """morton(ix,iy) >> 2 == morton(ix>>1, iy>>1): a 2k-bit z-prefix IS
     the res-k ancestor quad; DuckDB evaluation of morton_sql is
@@ -397,9 +480,12 @@ def test_h3_parent_col_matches_kernel(spark):
 
 def test_cell_encode_udfs_null_on_nonfinite(spark):
     """Every (lon, lat) cell encode — the UDFs, the grid Column and the
-    grid SQL in DuckDB — is NULL where either coordinate is NULL, NaN or
-    ±Inf, and equals its numpy kernel on the finite rows."""
+    grid SQL in Spark and DuckDB — is NULL where either coordinate is
+    NULL, NaN or ±Inf, and equals its numpy kernel on the finite rows.
+    The H3 cell → cell kernels keep those NULLs and the exact int64 ids
+    of the finite rows when both share one Arrow batch."""
     import duckdb
+    import pyspark.sql.functions as F
 
     from geokitten_spark.cells import h3core
     from geokitten_spark.cells.geohash import geohash_encode
@@ -407,7 +493,10 @@ def test_cell_encode_udfs_null_on_nonfinite(spark):
     from geokitten_spark.functions.cells_udfs import (
         geohash_cell,
         grid_cell_col,
+        h3_boundary_wkt,
         h3_cell,
+        h3_kring,
+        h3_parent,
         hex_cell_udf,
         s2_cell,
     )
@@ -426,6 +515,7 @@ def test_cell_encode_udfs_null_on_nonfinite(spark):
         "hex": hex_cell_udf(6),
         "geohash": geohash_cell(6),
         "grid": lambda lon, lat: grid_cell_col(lon, lat, 5),
+        "grid_sql": lambda lon, lat: F.expr(grid_cell_sql("lon", "lat", 5)),
     }
     got = df.select(
         "i", *[f(df.lon, df.lat).alias(n) for n, f in cols.items()]
@@ -438,10 +528,29 @@ def test_cell_encode_udfs_null_on_nonfinite(spark):
         "hex": hex_cell(lon, lat, 6).astype(np.int64),
         "geohash": geohash_encode(lon, lat, 6),
         "grid": grid_cell(lon, lat, 5),
+        "grid_sql": grid_cell(lon, lat, 5),
     }
     for n in cols:
         assert all(r[n] is None for r in got[: len(bad)]), n
         assert [r[n] for r in got[len(bad):]] == list(want[n]), n
+
+    # NULL and finite H3 ids in ONE partition, so they share a batch
+    h3 = df.coalesce(1).select("i", h3_cell(7)("lon", "lat").alias("h3"))
+    kern = h3.select(
+        "i",
+        h3_parent(3)("h3").alias("parent"),
+        h3_kring(1)("h3").alias("ring"),
+        h3_boundary_wkt()("h3").alias("wkt"),
+    ).orderBy("i").collect()
+    assert all(r.parent is None and r.ring is None and r.wkt is None for r in kern[: len(bad)])
+    ids = want["h3"].astype(np.uint64)
+    fin = kern[len(bad):]
+    assert [r.parent for r in fin] == h3core.cell_to_parent(ids, 3).astype(np.int64).tolist()
+    rings = h3core.grid_disk_arrays(ids, 1)
+    assert [r.ring for r in fin] == [d.astype(np.int64).tolist() for d in rings]
+    for r, c in zip(fin, ids):
+        pts = [f"{lng:.7f} {lat:.7f}" for lat, lng in h3core.cell_to_boundary(c)]
+        assert r.wkt == "POLYGON ((" + ", ".join(pts + pts[:1]) + "))"
 
     def sql_double(v):
         return "NULL" if v is None else f"CAST('{v!r}' AS DOUBLE)"
