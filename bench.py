@@ -135,8 +135,9 @@ def run_queries(spark, sf_dir: str, flagship_only: bool = False) -> tuple[dict, 
     FLAGSHIP_INNER = 2
     timed("flagship_pip_tile", flagship, reps=2, inner=FLAGSHIP_INNER)
 
-    # cover-refine variant: interior-cell docs match in pure JVM; only
-    # boundary-cell docs cross the Arrow exchange (the 10^12-row design)
+    # cover-refine variant: one Arrow pass over each doc's lon/lat;
+    # interior-cell docs match by an index lookup, only boundary-cell docs
+    # run the exact ray-cast
     from geokitten_spark.operators.pip_join import PolygonCover
     from geokitten_spark.fixtures import bench_boundaries_pdf
 
@@ -155,8 +156,7 @@ def run_queries(spark, sf_dir: str, flagship_only: bool = False) -> tuple[dict, 
         )
 
     timed("flagship_cover_refine", flagship_cover, reps=2, inner=FLAGSHIP_INNER)
-    # the engine picks the best operator for the scale: brute PIP wins at
-    # suite scale (fixed cover costs), cover-refine wins >=3x at 200M rows
+    # the reported throughput is the faster of the two joins
     extra["docs_per_sec"] = round(
         n_docs * FLAGSHIP_INNER
         / min(
@@ -649,9 +649,7 @@ def _scaling_leg(cpus: int, n_rows: int, reps: int) -> list[dict]:
 # that: stage 1 (extract+score+geocode → parquet checkpoint) and stage 2
 # (cover-refine PIP join + tile aggregate from the checkpoint), end-to-end
 # docs/sec at local[2] vs local[8]. The stage boundary is not a bench
-# trick: it is the pipeline's own design (plans/snapshot.py), and it also
-# means the Arrow-side extraction runs exactly once per doc even though
-# the cover join consumes its output through two plan branches.
+# trick: it is the pipeline's own design (plans/snapshot.py).
 #
 # The r1 measurement (200M-row bare (lon,lat) scan → join) is kept as
 # --scaling-scan: it measures a scan whose per-doc compute is ~zero, i.e.

@@ -249,17 +249,19 @@ def centroid(g: Geometry):
     return Mx / A, My / A
 
 
-def _ray_crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd crossing counts for points vs one ring."""
-    r = np.asarray(ring, dtype=np.float64)[:, :2]
-    x0, y0 = r[:-1, 0], r[:-1, 1]
-    x1, y1 = r[1:, 0], r[1:, 1]
-    px = px[:, None]
-    py = py[:, None]
+def ray_hits(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """Elementwise (broadcasting): the ray from (px, py) toward +x crosses
+    the edge (x0, y0)-(x1, y1) — the even-odd test of one point-edge pair."""
     cond = (y0 > py) != (y1 > py)  # half-open edge rule
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-    hits = cond & (px < xint)
+    return cond & (px < xint)
+
+
+def _ray_crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
+    """Vectorized even-odd crossing counts for points vs one ring."""
+    r = np.asarray(ring, dtype=np.float64)[:, :2]
+    hits = ray_hits(px[:, None], py[:, None], r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1])
     return hits.sum(axis=1)
 
 

@@ -12,11 +12,24 @@ Strategy (scale rationale):
   not to key frequency (no hot-cell shuffle key exists in this operator).
 
 Equivalently expressible as cell-cover prefilter + refine: ``PolygonCover``
-(square grid) and ``H3PolygonCover`` (H3 cells) broadcast the cover and
-send only boundary-cell docs to the Arrow refine; ``partitioned_pip_join``
-computes the cover in the executors and shuffles on the cell id — kept for
-the case where the boundary set is too big to broadcast (SURVEY §4
-"custom Catalyst rule? none — explicit API").
+(square grid) and ``H3PolygonCover`` (H3 cells) broadcast the cover as
+one hash index over its cells, with the polygons' edges. Their ``join`` is
+ONE scalar Arrow UDF, ``refine``, over (lon, lat) only — 16 B per doc in,
+a list of polygon ids out — and a JVM ``explode`` of the lists: per batch,
+numpy keys every doc at each cover level and looks the keys up in the
+index; an inside-cell hit needs no exact test, a border-cell hit runs the
+exact ray-cast (one vectorized pass over every candidate's edges). Every
+other doc column stays in the JVM. The earlier shape, a JVM
+broadcast-hash-join fast path for inside-cell docs unioned with a second
+broadcast join into a ``mapInPandas`` refine for border-cell docs, scanned
+and geocoded the docs twice and ran two broadcasts per query; on the
+120k-doc ``geo_tile`` benchmark job (4 vCPUs) its join alone cost
+1.1-1.3 s, more than the 0.72 s of brute ``pip_join`` over every doc, and
+on 20M bare lon/lat docs (``local[4]``) it was no faster than one pass
+(~7 s each).
+``partitioned_pip_join`` computes the cover in the executors and shuffles
+on the cell id — kept for the case where the boundary set is too big to
+broadcast (SURVEY §4 "custom Catalyst rule? none — explicit API").
 """
 
 from __future__ import annotations
@@ -26,13 +39,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-from ..cells.grid import _grid_pack, _grid_xy, grid_decode, grid_key_sql, spark_col_sql
-from ..functions.cells_udfs import h3_cell, h3_parent_col
+from ..cells.grid import _grid_pack, _grid_xy, grid_cell, grid_decode, grid_key_sql, spark_col_sql
 from ..geom import parse_wkt, points_in_rings
+from ..geom.kernels import ray_hits
 from ..geom.rtree import STRtree
 
 __all__ = [
@@ -49,19 +64,55 @@ def _parts(g) -> list:
     return [[np.asarray(r, dtype=np.float64)[:, :2] for r in rings] for rings in g.parts]
 
 
-def _inside(lons: np.ndarray, lats: np.ndarray, owner: np.ndarray, parts_of) -> np.ndarray:
-    """Row mask: point ``i`` lies inside polygon ``owner[i]``, whose parts
-    ``parts_of(owner[i])`` returns. Rows are grouped by owner, so each
-    polygon ray-casts all its rows in one vectorized call."""
+def _ranges(offsets: np.ndarray, keys: np.ndarray):
+    """CSR fan-out: (i, j) for every j in ``offsets[keys[i]]`` up to
+    ``offsets[keys[i] + 1]``."""
+    lo = offsets[keys]
+    n = offsets[keys + 1] - lo
+    at = np.repeat(np.arange(len(keys)), n)
+    return at, np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(len(at))
+
+
+def _edge_table(polygons: list) -> tuple:
+    """Flat ray-cast table of polygons, each a list of parts (a part: its
+    ring arrays, exterior first): CSR offsets polygon → part → edge, then
+    the edges' (x0, y0, x1, y1)."""
+    parts = [part for polygon in polygons for part in polygon]
+    rings = [r for part in parts for r in part] or [np.zeros((1, 2))]
+    part_off = np.cumsum([0] + [len(polygon) for polygon in polygons])
+    edge_off = np.cumsum([0] + [sum(len(r) - 1 for r in part) for part in parts])
+    a, b = (np.concatenate(e) for e in zip(*((r[:-1], r[1:]) for r in rings)))
+    return part_off, edge_off, a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+
+
+_PAIRS_PER_PASS = 1 << 20
+
+
+def _inside(lons: np.ndarray, lats: np.ndarray, owner: np.ndarray, edges: tuple) -> np.ndarray:
+    """Row mask: point ``i`` lies inside polygon ``owner[i]`` of the
+    ``_edge_table`` ``edges`` (even-odd over each part's rings, any part).
+    One vectorized test over every (point, edge) pair, in passes of at most
+    ``_PAIRS_PER_PASS`` pairs (a point with more edges gets a pass alone)."""
+    part_off, edge_off = edges[:2]
+    pairs = np.zeros(len(owner) + 1, dtype=np.int64)
+    np.cumsum(edge_off[part_off[owner + 1]] - edge_off[part_off[owner]], out=pairs[1:])
     keep = np.zeros(len(owner), dtype=bool)
-    if len(owner) == 0:
-        return keep
-    order = np.argsort(owner, kind="stable")
-    bounds = np.flatnonzero(np.diff(owner[order])) + 1
-    for chunk in np.split(order, bounds):
-        for rings in parts_of(owner[chunk[0]]):
-            keep[chunk] |= points_in_rings(lons[chunk], lats[chunk], rings)
+    lo = 0
+    while lo < len(owner):
+        hi = max(lo + 1, int(np.searchsorted(pairs, pairs[lo] + _PAIRS_PER_PASS, "right")) - 1)
+        keep[lo:hi] = _ray_cast(lons[lo:hi], lats[lo:hi], owner[lo:hi], edges)
+        lo = hi
     return keep
+
+
+def _ray_cast(lons, lats, owner, edges) -> np.ndarray:
+    """One pass of ``_inside``."""
+    part_off, edge_off, x0, y0, x1, y1 = edges
+    pt, part = _ranges(part_off, owner)
+    pp, e = _ranges(edge_off, part)
+    hits = ray_hits(lons[pt][pp], lats[pt][pp], x0[e], y0[e], x1[e], y1[e])
+    odd = np.bincount(pp, weights=hits, minlength=len(part)) % 2 == 1
+    return np.bincount(pt[odd], minlength=len(owner)) > 0
 
 
 def _edge_pieces(ring: np.ndarray, step: float):
@@ -77,9 +128,25 @@ def _edge_pieces(ring: np.ndarray, step: float):
     return ax + dx * starts, ay + dy * starts, ax + dx * ends, ay + dy * ends
 
 
+def _flat_coords(df: DataFrame, lon_col: str, lat_col: str):
+    """(df, lon, lat): ``df`` and the names of flat columns holding its
+    coordinates, for a pandas kernel to read. A top-level column is read as
+    it is; a struct-field path such as ``p.lon``, which names no pandas
+    column, is projected to a hidden ``__lon``/``__lat`` double column that
+    the caller drops after the kernel."""
+    names = []
+    for col, hidden in ((lon_col, "__lon"), (lat_col, "__lat")):
+        if col not in df.columns:
+            df = df.withColumn(hidden, F.col(spark_col_sql(col)).cast("double"))
+            col = hidden
+        names.append(col)
+    return (df, *names)
+
+
 def _left(matched: DataFrame, docs: DataFrame, how: str, doc_key_cols, id_col: str, id_type):
-    """``how`` tail of the two-path joins: 'left' adds every unmatched doc
-    once with a null ``id_col`` — a key anti-join against the matched set."""
+    """``how`` tail of ``partitioned_pip_join``, whose matches come from two
+    paths: 'left' adds every unmatched doc once with a null ``id_col`` — a
+    key anti-join against the matched set."""
     if how == "inner":
         return matched
     if how != "left":
@@ -100,18 +167,19 @@ class BoundaryIndex:
         self.ids = list(ids)
         self.geoms = [parse_wkt(w) for w in wkts]
         # one entry per polygon PART so candidate refine touches only the part
-        self.part_rings = [rings for g in self.geoms for rings in _parts(g)]
+        part_rings = [rings for g in self.geoms for rings in _parts(g)]
         self.part_owner = np.asarray(
             [gi for gi, g in enumerate(self.geoms) for _ in g.parts], dtype=np.int64
         )
-        part_boxes = [(*rings[0].min(axis=0), *rings[0].max(axis=0)) for rings in self.part_rings]
+        part_boxes = [(*rings[0].min(axis=0), *rings[0].max(axis=0)) for rings in part_rings]
         self.tree = STRtree(np.asarray(part_boxes, dtype=np.float64))
+        self.edges = _edge_table([[rings] for rings in part_rings])
 
     def locate(self, lons: np.ndarray, lats: np.ndarray):
         """(point_idx, polygon_idx) matches; a point inside k overlapping
         polygons yields k pairs (join semantics, not first-wins)."""
         pi, part_i = self.tree.query_points(lons, lats)
-        hit = _inside(lons[pi], lats[pi], part_i, lambda k: self.part_rings[k : k + 1])
+        hit = _inside(lons[pi], lats[pi], part_i, self.edges)
         out_p, out_g = pi[hit], self.part_owner[part_i[hit]]
         # a MULTIPOLYGON hit in 2 parts would duplicate: dedupe (point, geom)
         key = out_p * (len(self.geoms) + 1) + out_g
@@ -143,8 +211,9 @@ def pip_join(
     bc = spark.sparkContext.broadcast(index)
     id_type = StringType() if boundaries_pdf[id_col].dtype == object else LongType()
     extra_fields = [StructField(c, LongType(), True) for c in (s2_cells or {})]
+    flat, lon, lat = _flat_coords(docs, lon_col, lat_col)
     out_schema = StructType(
-        docs.schema.fields + [StructField(id_col, id_type, True)] + extra_fields
+        flat.schema.fields + [StructField(id_col, id_type, True)] + extra_fields
     )
 
     left = how == "left"
@@ -157,8 +226,8 @@ def pip_join(
             from ..cells.s2 import lat_lng_to_cell
 
         for pdf in batches:
-            lons = pdf[lon_col].to_numpy(np.float64)
-            lats = pdf[lat_col].to_numpy(np.float64)
+            lons = pdf[lon].to_numpy(np.float64)
+            lats = pdf[lat].to_numpy(np.float64)
             pi, gi = idx.locate(lons, lats)
             matched = pdf.iloc[pi].copy()
             matched[id_col] = ids[gi]
@@ -171,14 +240,14 @@ def pip_join(
             for out_col, level in s2_spec.items():
                 matched[out_col] = np.asarray(
                     lat_lng_to_cell(
-                        matched[lat_col].to_numpy(np.float64),
-                        matched[lon_col].to_numpy(np.float64),
+                        matched[lat].to_numpy(np.float64),
+                        matched[lon].to_numpy(np.float64),
                         level,
                     )
                 ).astype("int64")
             yield matched
 
-    return docs.mapInPandas(run, schema=out_schema)
+    return flat.mapInPandas(run, schema=out_schema).drop("__lon", "__lat")
 
 
 # ---------------------------------------------------------------------------
@@ -268,18 +337,17 @@ def cover_refine_pip_join(
     res: int = 10,
     cover: "PolygonCover | None" = None,
     how: str = "inner",
-    doc_key_cols: list[str] | None = None,
 ) -> DataFrame:
     """Exact PIP join via cell-cover prefilter + boundary-cell refine.
 
     Scale design (SURVEY §4, north_rule): the driver classifies every grid
-    cell covering each polygon as fully-inside or boundary. Docs in
-    fully-inside cells match through a pure-JVM broadcast hash join — no
-    Python, no shuffle of the docs side. Only docs in boundary cells (the
-    polygon-perimeter fraction, ~O(perimeter·cell/area) of rows) cross the
-    Arrow exchange for the exact ray-cast refine — the same kernel
-    ``pip_join`` uses, so results are identical. At 10^12 rows this turns
-    the Python exchange from O(N) to O(N·ε).
+    cell covering each polygon as fully-inside or boundary. Every doc
+    crosses the Arrow boundary once, as its lon/lat only (16 B), with no
+    shuffle of the docs side; the wide doc columns stay in the JVM. In
+    Python a doc in a fully-inside cell matches by a hash-index lookup
+    with no exact test; only docs in boundary cells (the polygon-perimeter
+    fraction, ~O(perimeter·cell/area) of rows) run the exact ray-cast — the
+    same kernel ``pip_join`` uses, so results are identical.
 
     Pass a prebuilt ``PolygonCover`` to amortize the driver-side cover
     construction + broadcast across many joins (one boundary set serves the
@@ -287,19 +355,17 @@ def cover_refine_pip_join(
 
     Semantics match ``pip_join(how=...)``: one output row per
     (doc, polygon) containment pair; ``how='left'`` additionally keeps
-    each unmatched doc once, with a null ``id_col``. Because matches come
-    from TWO paths (JVM fast join + Arrow refine), 'left' needs a doc
-    identity — pass ``doc_key_cols`` (a unique doc key, e.g.
-    ``['doc_id']``); the unmatched set is a key anti-join against the
-    matched set (one extra shuffle on the doc key — the inherent price of
-    left semantics on a fan-out join).
+    each unmatched doc once, with a null ``id_col`` — every doc gets one
+    list of ids, so an outer explode of it is the left join.
     """
+    if how not in ("inner", "left"):
+        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     if cover is None:
         cover = PolygonCover(
             docs.sparkSession, boundaries_pdf, id_col=id_col, wkt_col=wkt_col, res=res
         )
-    matched = cover.join(docs, lon_col=lon_col, lat_col=lat_col)
-    return _left(matched, docs, how, doc_key_cols, id_col, cover.id_type)
+    explode = F.explode_outer if how == "left" else F.explode
+    return cover._join(docs, lon_col, lat_col, explode)
 
 
 def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: int):
@@ -340,75 +406,87 @@ def _promote_cover(in_cells: np.ndarray, in_pos: np.ndarray, res: int, min_res: 
     return np.concatenate(out_cells), np.concatenate(out_pos)
 
 
+def _cell_index(in_cells, in_pos, bd_cells, bd_pos) -> tuple:
+    """The inside and border covers as one hash index over their distinct
+    cells: (``pd.Index`` of the cells, CSR offsets into the rows, each
+    row's polygon position, each row's border flag). A cell shared by
+    several polygons has one row per polygon."""
+    cells = np.concatenate([np.asarray(c, dtype=np.int64) for c in (in_cells, bd_cells)])
+    pos = np.concatenate([np.asarray(p, dtype=np.int64) for p in (in_pos, bd_pos)])
+    border = np.arange(len(cells)) >= len(in_cells)
+    order = np.argsort(cells, kind="stable")
+    distinct, starts = np.unique(cells[order], return_index=True)
+    return pd.Index(distinct), np.append(starts, len(order)), pos[order], border[order]
+
+
 class _BroadcastCover:
-    """Shared half of the broadcast cover-refine joins: the two cover
-    tables, the ring broadcast and ``join``. A subclass classifies cells
-    and supplies two hooks over column names: ``_cell`` (a doc's cell at
-    ``res``) and ``_ancestors`` (the ids it probes the multi-level inside
-    cover with, given the doc's coordinates and its ``_cell`` column)."""
+    """Shared half of the broadcast cover-refine joins: one broadcast of
+    the polygons' edge table, their ids and the cover index, and ``join``.
+    A subclass classifies cells and sets ``_probe``, a numpy function of
+    finite (lon, lat) arrays that returns the doc's cover keys, one int64
+    array per cover level, the ``res`` level first. It is a closure over plain values, never a bound method:
+    the refine kernel pickles it, and ``self`` holds the SparkContext."""
 
     def _publish(self, spark, boundaries_pdf: pd.DataFrame, geoms: list,
                  in_cells, in_pos, bd_cells, bd_pos) -> None:
         ids = boundaries_pdf[self.id_col].tolist()
         self.n_inside_cells = len(in_cells)
         self.n_border_cells = len(bd_cells)
-        self.id_type = (
-            StringType() if boundaries_pdf[self.id_col].dtype == object else LongType()
-        )
-        cell = StructField("__cell", LongType())
-        self.inside_df = spark.createDataFrame(
-            pd.DataFrame({"__cell": np.asarray(in_cells, dtype=np.int64),
-                          self.id_col: [ids[p] for p in in_pos]}),
-            schema=StructType([cell, StructField(self.id_col, self.id_type)]),
-        )
-        self.border_df = spark.createDataFrame(
-            pd.DataFrame({"__cell": np.asarray(bd_cells, dtype=np.int64),
-                          "__pos": np.asarray(bd_pos, dtype=np.int64)}),
-            schema=StructType([cell, StructField("__pos", LongType())]),
-        )
-        self._bc = spark.sparkContext.broadcast(([_parts(g) for g in geoms], ids))
+        string_ids = boundaries_pdf[self.id_col].dtype == object
+        self.id_type = StringType() if string_ids else LongType()
+        self._bc = spark.sparkContext.broadcast((
+            _edge_table([_parts(g) for g in geoms]),
+            pa.array(ids, type=pa.string() if string_ids else pa.int64()),
+            *_cell_index(in_cells, in_pos, bd_cells, bd_pos),
+        ))
 
     def join(self, docs: DataFrame, *, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-        id_col, bc = self.id_col, self._bc
-        tagged = docs.withColumn("__cell", self._cell(lon_col, lat_col))
+        return self._join(docs, lon_col, lat_col, F.explode)
 
-        # fast path: pure-JVM broadcast hash join against the multi-level
-        # inside cover — each doc probes with its ancestor at every cover
-        # level (explode is codegen; a doc matches a region at <=1 level
-        # because the cover is disjoint per region)
-        anc = self._ancestors(lon_col, lat_col, "__cell")
-        probe = tagged.withColumn("__cell", F.explode(anc))
-        fast = probe.join(F.broadcast(self.inside_df), on="__cell").drop("__cell")
+    def _join(self, docs: DataFrame, lon_col: str, lat_col: str, explode) -> DataFrame:
+        """``docs`` with ``id_col``: ``explode`` (inner) or ``explode_outer``
+        (left) of each doc's list of containing polygon ids."""
+        bc, probe = self._bc, self._probe
 
-        # refine path: only boundary-cell docs reach the Arrow exchange
-        cand = tagged.join(F.broadcast(self.border_df), on="__cell").drop("__cell")
+        def refine(lon: pa.Array, lat: pa.Array) -> pa.Array:
+            """Each doc's list of containing polygon ids: its keys at every
+            level probe the cover index; an inside row matches with no
+            exact test, a border row (only ``res``-level keys meet one) is
+            kept or dropped by the exact ray-cast. NULL/NaN/±Inf docs get
+            an empty list."""
+            edges, ids, cells, rows_of, pos, border = bc.value
+            lo = lon.to_numpy(zero_copy_only=False)
+            la = lat.to_numpy(zero_copy_only=False)
+            ok = np.flatnonzero(np.isfinite(lo) & np.isfinite(la))
+            lo, la = lo[ok], la[ok]
+            levels = np.stack(probe(lo, la), axis=1)
+            cell = cells.get_indexer(levels.ravel())
+            key = np.flatnonzero(cell >= 0)
+            at, rows = _ranges(rows_of, cell[key])
+            doc, hit, keep = key[at] // levels.shape[1], pos[rows], ~border[rows]
+            test = np.flatnonzero(~keep)
+            keep[test] = _inside(lo[doc[test]], la[doc[test]], hit[test], edges)
+            doc, hit = doc[keep], hit[keep]
+            offsets = np.zeros(len(lon) + 1, dtype=np.int32)
+            np.cumsum(np.bincount(ok[doc], minlength=len(lon)), out=offsets[1:])
+            return pa.ListArray.from_arrays(
+                offsets, ids.take(hit[np.argsort(doc, kind="stable")])
+            )
 
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts_all, ids_local = bc.value
-            ids_arr = np.asarray(ids_local, dtype=object)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pos = pdf["__pos"].to_numpy(np.int64)
-                keep = _inside(
-                    pdf[lon_col].to_numpy(np.float64),
-                    pdf[lat_col].to_numpy(np.float64),
-                    pos,
-                    parts_all.__getitem__,
-                )
-                out = pdf.loc[keep].copy()
-                out[id_col] = ids_arr[pos[keep]]
-                yield out.drop(columns=["__pos"])
-
-        refine_schema = StructType(docs.schema.fields + [StructField(id_col, self.id_type, True)])
-        return fast.unionByName(cand.mapInPandas(refine, schema=refine_schema))
+        located = arrow_udf(refine, ArrayType(self.id_type))(
+            F.col(spark_col_sql(lon_col)).cast("double"),
+            F.col(spark_col_sql(lat_col)).cast("double"),
+        )
+        return docs.withColumn(self.id_col, explode(located))
 
 
 class PolygonCover(_BroadcastCover):
     """Reusable cell-cover index over a boundary set: driver-side cover
-    classification (multi-resolution quadtree), the two broadcast-able
-    cover tables, and the refine kernel broadcast — built once, used by
-    every ``join``."""
+    classification (multi-resolution quadtree from ``min_res`` to ``res``)
+    and one broadcast of the inside and border covers' cell index with
+    the polygons' edges — built once, used by every ``join``. ``join`` keys each doc
+    with ``grid_cell`` at every level, the numpy twin of ``grid_key_sql``
+    that built the cover."""
 
     def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
                  wkt_col: str, res: int = 10, min_res: int = 6):
@@ -420,14 +498,10 @@ class PolygonCover(_BroadcastCover):
         if len(in_cells) and min_res < res:
             in_cells, in_pos = _promote_cover(in_cells, in_pos, res, min_res)
         self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
-
-    def _cell(self, lon, lat):
-        return F.expr(grid_key_sql(spark_col_sql(lon), spark_col_sql(lat), self.res))
-
-    def _ancestors(self, lon, lat, cell):
-        lon, lat = spark_col_sql(lon), spark_col_sql(lat)
-        keys = ", ".join(grid_key_sql(lon, lat, r) for r in range(self.min_res, self.res + 1))
-        return F.expr(f"array({keys})")
+        # the grid_key_sql encode, in the same float operations, at every
+        # level the promoted inside cover holds
+        levels = range(res, min(min_res, res) - 1, -1)
+        self._probe = lambda lon, lat: [grid_cell(lon, lat, r) for r in levels]
 
 
 def partitioned_pip_join(
@@ -467,7 +541,8 @@ def partitioned_pip_join(
     disjoint and a doc has one res-``res`` cell.
 
     ``how='left'`` keeps unmatched docs once with a null ``id_col``
-    (requires ``doc_key_cols``, as in ``cover_refine_pip_join``).
+    (requires ``doc_key_cols``, a unique doc key: the unmatched set is a
+    key anti-join against the matches of both paths).
     """
     id_field = boundaries.schema[id_col]
     cover_schema = StructType(
@@ -517,10 +592,8 @@ def partitioned_pip_join(
     # shuffle of the docs table total.
     joined = tagged.join(cover, on="__cell").drop("__cell")
     fast = joined.filter(F.col("__wkt").isNull()).drop("__wkt")
-    cand = joined.filter(F.col("__wkt").isNotNull())
-    refine_schema = StructType(
-        docs.schema.fields + [StructField(id_col, id_field.dataType, True)]
-    )
+    cand, lon, lat = _flat_coords(joined.filter(F.col("__wkt").isNotNull()), lon_col, lat_col)
+    refine_schema = cand.drop("__wkt").schema
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # parse each polygon once per task; bound the cache by TOTAL vertex
@@ -547,14 +620,15 @@ def partitioned_pip_join(
                 continue
             codes, wkts = pd.factorize(pdf["__wkt"])
             keep = _inside(
-                pdf[lon_col].to_numpy(np.float64),
-                pdf[lat_col].to_numpy(np.float64),
+                pdf[lon].to_numpy(np.float64),
+                pdf[lat].to_numpy(np.float64),
                 codes,
-                lambda c: parts_of(wkts[c]),
+                _edge_table([parts_of(w) for w in wkts]),
             )
             yield pdf.loc[keep, [c for c in pdf.columns if c != "__wkt"]].copy()
 
-    matched = fast.unionByName(cand.mapInPandas(refine, schema=refine_schema))
+    refined = cand.mapInPandas(refine, schema=refine_schema).drop("__lon", "__lat")
+    matched = fast.unionByName(refined)
     return _left(matched, docs, how, doc_key_cols, id_col, id_field.dataType)
 
 
@@ -578,10 +652,10 @@ class H3PolygonCover(_BroadcastCover):
       ring away from every boundary-crossed cell is provably contained,
       so its docs match with NO exact test.
 
-    ``join`` runs ONE vectorized H3 encode over the docs (Arrow), a
-    pure-JVM broadcast equi-join on the bigint cell id for the interior
-    fast path, and the exact ray-cast refine only for dilated-border
-    docs — identical results to ``pip_join``, Python exchange O(N·ε).
+    ``join`` runs ONE Arrow pass over the docs' lon/lat: a vectorized H3
+    encode, ``cell_to_parent`` down to ``min_res`` to probe the compacted
+    inside cover, and the exact ray-cast only for dilated-border docs —
+    identical results to ``pip_join``.
     """
 
     def __init__(self, spark, boundaries_pdf: pd.DataFrame, *, id_col: str,
@@ -618,8 +692,8 @@ class H3PolygonCover(_BroadcastCover):
             inside = np.array(sorted(inside_raw - dilated), dtype=np.uint64)
             # compactCells shrinks the interior broadcast ~3-7x (complete
             # sibling sets fold into parents down to min_res); H3 ids carry
-            # their res, so the mixed-res cover stays ONE bigint column and
-            # docs probe it with pure-JVM digit-truncation ancestors
+            # their res, so the mixed-res cover stays ONE sorted int64 array
+            # and docs probe it with their cell_to_parent ancestors
             if inside.size and min_res < res:
                 comp = h3core.compact_cells(inside)
                 keep = h3core.get_resolution(comp) >= min_res
@@ -635,13 +709,10 @@ class H3PolygonCover(_BroadcastCover):
             bd_pos += [pos] * len(dilated)
         self._publish(spark, boundaries_pdf, geoms, in_cells, in_pos, bd_cells, bd_pos)
 
-    def _cell(self, lon, lat):
-        # ONE Arrow encode per doc; the ancestors below derive from it
-        return h3_cell(self.res)(lon, lat)
+        def probe(lon, lat):
+            # the doc's cell, then its ancestors at the compacted cover's levels
+            cell = h3core.latlng_to_cell(lat, lon, res)
+            parents = [h3core.cell_to_parent(cell, r) for r in range(res - 1, min_res - 1, -1)]
+            return [c.astype(np.int64) for c in (cell, *parents)]
 
-    def _ancestors(self, lon, lat, cell):
-        # the COMPACTED cover's levels as pure-JVM digit truncation
-        cell = F.col(cell)
-        return F.array(
-            cell, *[h3_parent_col(cell, self.res, r) for r in range(self.res - 1, self.min_res - 1, -1)]
-        )
+        self._probe = probe

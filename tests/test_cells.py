@@ -387,7 +387,7 @@ def test_grid_operators_take_any_column_name(spark):
     as plain ``lon``/``lat``."""
     from geokitten_spark.fixtures import bench_boundaries_pdf, web_documents
     from geokitten_spark.operators.cluster import grid_dbscan
-    from geokitten_spark.operators.pip_join import PolygonCover, partitioned_pip_join
+    from geokitten_spark.operators.pip_join import PolygonCover, partitioned_pip_join, pip_join
     from geokitten_spark.operators.tile import adaptive_tiles, tile_distinct_rollup, tile_rollup
     from pyspark.sql import functions as F
 
@@ -407,19 +407,19 @@ def test_grid_operators_take_any_column_name(spark):
             "adaptive": adaptive_tiles(df, lon, lat, base_res=2, max_res=6, threshold=20),
             "dbscan": grid_dbscan(df, lon_col=lon, lat_col=lat, res=5, min_pts=3),
         }
-        if "." not in lon:  # the refine reads pdf[lon_col]: top-level names only
-            xy = dict(lon_col=lon, lat_col=lat)
-            out["cover"] = cover.join(df, **xy).select("doc_id", "region_key")
-            out["partitioned"] = partitioned_pip_join(
-                df, spark.createDataFrame(bnd_pdf), res=7, **xy, **kw
-            ).select("doc_id", "region_key")
+        xy = dict(lon_col=lon, lat_col=lat)
+        out["cover"] = cover.join(df, **xy).select("doc_id", "region_key")
+        out["partitioned"] = partitioned_pip_join(
+            df, spark.createDataFrame(bnd_pdf), res=7, **xy, **kw
+        ).select("doc_id", "region_key")
+        out["brute"] = pip_join(df, bnd_pdf, **xy, **kw).select("doc_id", "region_key")
         return {n: sorted(map(tuple, d.collect())) for n, d in out.items()}
 
     want = ops(docs, "lon", "lat")
     assert all(want.values())
+    assert want["cover"] == want["partitioned"] == want["brute"]
     assert ops(odd, "lon deg", "lat-deg") == want
-    got = ops(nested, "p.lon", "p.lat")
-    assert got == {n: want[n] for n in got}
+    assert ops(nested, "p.lon", "p.lat") == want
 
 
 def test_morton_prefix_property_and_sql_parity():

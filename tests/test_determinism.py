@@ -75,8 +75,7 @@ def test_cover_refine_left_matches_brute_left(spark):
         docs, bnd, id_col="region_key", wkt_col="geometry_wkt", how="left"
     )
     cover = cover_refine_pip_join(
-        docs, bnd, id_col="region_key", wkt_col="geometry_wkt", res=9,
-        how="left", doc_key_cols=["doc_id"],
+        docs, bnd, id_col="region_key", wkt_col="geometry_wkt", res=9, how="left"
     )
     b = sorted((r.doc_id, r.region_key) for r in brute.collect())
     c = sorted((r.doc_id, r.region_key) for r in cover.collect())
@@ -341,7 +340,7 @@ def test_pip_paths_match_brute_on_degenerate_docs(spark):
         got_left = {
             "partitioned": rows(partitioned_pip_join(docs, bnd, res=7, **left, **kw)),
             "cover_refine": rows(
-                cover_refine_pip_join(docs, bnd_pdf, cover=grid, **left, **kw)
+                cover_refine_pip_join(docs, bnd_pdf, cover=grid, how="left", **kw)
             ),
         }
         for name, g in got.items():
@@ -357,3 +356,115 @@ def test_pip_paths_match_brute_on_degenerate_docs(spark):
             assert (14, -1) in brute
         else:
             assert not brute and not brute_left
+
+
+def test_cover_probe_matches_sql_encode_on_cell_edges(spark):
+    """The broadcast covers key each doc with a numpy probe, not the Spark
+    SQL encode: on points exactly on the grid lines of every cover level,
+    on lon ±180 / lat ±90 and on the polygon vertices, ``grid_cell`` and
+    ``PolygonCover``'s probe equal ``grid_key_sql`` run by Spark, and both
+    broadcast covers equal brute pip_join row for row, also for a doc in
+    an inside cell of one polygon and a border cell of an overlapping one."""
+    from collections import Counter
+
+    import numpy as np
+    import pandas as pd
+
+    from geokitten_spark.cells.grid import grid_cell, grid_key_sql
+    from geokitten_spark.fixtures import bench_boundaries_pdf
+    from geokitten_spark.geom import parse_wkt
+    from geokitten_spark.operators.pip_join import H3PolygonCover, PolygonCover, pip_join
+
+    res, min_res = 7, 4
+    # a 40° square, and a 2.4° one inside it whose west edge crosses the
+    # res-7 cell of (11, 11): that doc is in the big square's inside cover
+    # and in the small one's border cover
+    big = "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0))"
+    small = "POLYGON ((10.3 10.3, 12.7 10.3, 12.7 12.7, 10.3 12.7, 10.3 10.3))"
+    bnd_pdf = pd.concat(
+        [pd.DataFrame({"region_key": [-1, -2], "geometry_wkt": [big, small]}),
+         bench_boundaries_pdf()],
+        ignore_index=True,
+    )
+    pts = [(11.0, 11.0), (10.0, 10.0)]
+    for r in range(min_res, res + 1):
+        k = np.arange((1 << r) + 1)
+        lon, lat = np.meshgrid(k * 360.0 / (1 << r) - 180.0, k * 180.0 / (1 << r) - 90.0)
+        pts += zip(lon.ravel(), lat.ravel())
+    # every vertex, also those past lon ±180, which the encode clamps
+    for w in bnd_pdf["geometry_wkt"]:
+        pts += [(x, y) for rings in parse_wkt(w).parts for ring in rings
+                for x, y in np.asarray(ring)[:, :2]]
+    pts = sorted(set(pts))
+    assert any(abs(x) > 180 for x, _ in pts)
+    assert (180.0, 90.0) in pts and (-180.0, -90.0) in pts
+
+    kw = dict(id_col="region_key", wkt_col="geometry_wkt")
+    docs = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "doc_id long, lon double, lat double",
+    )
+    grid = PolygonCover(spark, bnd_pdf, res=res, min_res=min_res, **kw)
+    h3 = H3PolygonCover(spark, bnd_pdf, res=3, **kw)
+
+    levels = range(res, min_res - 1, -1)
+    sql = docs.orderBy("doc_id").select(
+        *[F.expr(grid_key_sql("lon", "lat", r)).alias(f"k{r}") for r in levels]
+    ).toPandas()
+    lon, lat = (np.array(c, dtype=np.float64) for c in zip(*pts))
+    probe = grid._probe(lon, lat)
+    for i, r in enumerate(levels):
+        want = sql[f"k{r}"].to_numpy(np.int64)
+        assert np.array_equal(grid_cell(lon, lat, r), want), r
+        assert np.array_equal(probe[i], want), r
+
+    def rows(df):
+        return Counter((r.doc_id, r.region_key) for r in df.collect())
+
+    brute = rows(pip_join(docs, bnd_pdf, **kw))
+    both, outer = pts.index((11.0, 11.0)), pts.index((10.0, 10.0))
+    assert {(both, -1), (both, -2), (outer, -1)} <= set(brute) and (outer, -2) not in brute
+    assert rows(grid.join(docs)) == brute
+    # H3 wraps a lon past ±180 onto the other side of the antimeridian,
+    # where the planar ray-cast does not: compare it on the world only
+    world = {i for i, (x, y) in enumerate(pts) if abs(x) <= 180 and abs(y) <= 90}
+    in_world = (F.abs("lon") <= 180) & (F.abs("lat") <= 90)
+    assert rows(h3.join(docs.filter(in_world))) == Counter(
+        {k: n for k, n in brute.items() if k[0] in world}
+    )
+
+
+def test_inside_matches_per_part_ray_cast_in_any_pass_size(monkeypatch):
+    """``_inside`` (one vectorized test over every (point, edge) pair) equals
+    ``points_in_rings`` part by part, with holes and multi-part polygons,
+    also when the pairs are split into passes smaller than one polygon."""
+    import importlib
+
+    import numpy as np
+
+    from geokitten_spark.fixtures import bench_boundaries_pdf
+    from geokitten_spark.geom import parse_wkt, points_in_rings
+
+    pj = importlib.import_module("geokitten_spark.operators.pip_join")
+    wkts = list(bench_boundaries_pdf()["geometry_wkt"]) + [
+        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3)),"
+        " ((20 20, 30 20, 30 30, 20 30, 20 20)))"
+    ]
+    polygons = [pj._parts(parse_wkt(w)) for w in wkts]
+    rng = np.random.default_rng(7)
+    owner = np.concatenate([rng.integers(0, len(polygons), 3000), np.full(500, len(polygons) - 1)])
+    lo = np.array([min(r[:, 0].min() for p in polygons[o] for r in p) for o in owner]) - 1
+    hi = np.array([max(r[:, 0].max() for p in polygons[o] for r in p) for o in owner]) + 1
+    lon = rng.uniform(lo, hi)
+    lo = np.array([min(r[:, 1].min() for p in polygons[o] for r in p) for o in owner]) - 1
+    hi = np.array([max(r[:, 1].max() for p in polygons[o] for r in p) for o in owner]) + 1
+    lat = rng.uniform(lo, hi)
+    want = np.array([
+        any(points_in_rings(lon[i : i + 1], lat[i : i + 1], rings)[0] for rings in polygons[o])
+        for i, o in enumerate(owner)
+    ])
+    assert want.any() and not want.all()
+    edges = pj._edge_table(polygons)
+    for pairs in (1 << 20, 7):
+        monkeypatch.setattr(pj, "_PAIRS_PER_PASS", pairs)
+        assert np.array_equal(pj._inside(lon, lat, owner, edges), want), pairs

@@ -67,6 +67,29 @@ def test_partitioned_pip_no_driver_broadcast_and_bounded_exchanges(spark):
     assert _n_exchanges(df) <= 2
 
 
+def test_broadcast_cover_join_is_one_arrow_pass(spark):
+    """PolygonCover.join is one scan of the docs, one Arrow ``refine``
+    over lon/lat and one JVM explode of its id lists: no broadcast hash
+    join, union or pandas map, so the docs are neither scanned nor
+    geocoded twice."""
+    from geokitten_spark.fixtures import bench_boundaries_pdf
+    from geokitten_spark.operators.pip_join import PolygonCover
+
+    docs = web_documents(spark, SF_SMOKE).select("doc_id", "url", "lon", "lat")
+    cover = PolygonCover(
+        spark, bench_boundaries_pdf(), id_col="region_key", wkt_col="geometry_wkt", res=7
+    )
+    df = cover.join(docs)
+    df.write.mode("overwrite").format("noop").save()
+    plan = _physical(df)
+    assert len(re.findall(r"\bArrowEvalPython \[refine\(", plan)) == 1
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1
+    assert len(re.findall(r"\bGenerate explode\(", plan)) == 1
+    assert len(re.findall(r"\bFileScan\b", plan)) == 1
+    for node in ("BroadcastHashJoin", "Union", "MapInPandas"):
+        assert node not in plan, node
+
+
 def test_split_assign_is_pure_projection(spark):
     from geokitten_spark.operators.sampling import split_assign
 
