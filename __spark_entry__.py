@@ -3572,16 +3572,15 @@ def q_geoparquet_roundtrip(spark, sf_dir):
 
 def q_raster_tiles(spark, sf_dir):
     """Raster heat-tile PYRAMID (viz/raster.py): the vector→RASTER half
-    of the north_rule's raster↔vector loop. Webdoc points → packed
-    global-pixel ids at zoom 3 (one Arrow pass through the shared
-    numpy mercator kernel) → ONE map-side-combined pixel aggregate
-    (the only O(docs) shuffle) → zooms 3 and 2 projected from the
-    finest pixels by integer shifts (pure codegen, counts add exactly)
-    → one (z, x, y)-keyed grouped render into grayscale PNGs via the
-    from-scratch encoder. Blobs are byte-deterministic (integer gray
-    ramp, tile-max normalized); oracle = the same pure kernels
-    driver-side with numpy binning (oracles.raster_tiles_sql), one
-    VALUES row per (z, x, y), md5 per blob."""
+    of the north_rule's raster↔vector loop. Webdoc points → one
+    map-side Arrow pass (the shared numpy mercator kernel at zoom 3,
+    int64 pixel sums per partition, shifted to zooms 3 and 2 — counts
+    add exactly) → ONE (z, x, y) exchange of the pixel sums → one
+    batched Arrow render into grayscale PNGs via the from-scratch
+    encoder. Blobs are byte-deterministic (integer gray ramp, tile-max
+    normalized); oracle = the same pure kernels driver-side with numpy
+    binning (oracles.raster_tiles_replica), one VALUES row per
+    (z, x, y), md5 per blob."""
     from geokitten_spark.viz.raster import raster_heat_tiles
 
     docs = _web_docs(spark, sf_dir)

@@ -496,36 +496,31 @@ def decode_png(payload: bytes) -> np.ndarray:
 
 
 def _png_filter_scanlines(flat: np.ndarray, bpp: int) -> bytes:
-    """Filter (n_rows, row_bytes) int64 sample-byte rows for one
-    (sub-)image. Filter type cycles per row (y % 5) so decoders exercise
-    every defilter path; fully deterministic."""
+    """Filter (n_rows, row_bytes) sample-byte rows for one (sub-)image.
+    Filter type cycles per row (y % 5) so decoders exercise every
+    defilter path; fully deterministic. Whole-image numpy: each filter
+    type's rows (``k::5``) get their predictor in one pass, Paeth
+    included; int16 holds every byte sum and difference."""
     n_rows, row_bytes = flat.shape
-    lines = []
-    prev = np.zeros(row_bytes, dtype=np.int64)
-    for y in range(n_rows):
-        cur = flat[y]
-        ftype = y % 5
-        if ftype == 0:
-            enc = cur
-        elif ftype == 1:
-            left = np.concatenate([np.zeros(bpp, dtype=np.int64), cur[:-bpp]])
-            enc = cur - left
-        elif ftype == 2:
-            enc = cur - prev
-        elif ftype == 3:
-            left = np.concatenate([np.zeros(bpp, dtype=np.int64), cur[:-bpp]])
-            enc = cur - (left + prev) // 2
-        else:
-            left = np.concatenate([np.zeros(bpp, dtype=np.int64), cur[:-bpp]])
-            ul = np.concatenate([np.zeros(bpp, dtype=np.int64), prev[:-bpp]])
-            pred = np.array(
-                [_paeth(left[i], prev[i], ul[i]) for i in range(row_bytes)],
-                dtype=np.int64,
-            )
-            enc = cur - pred
-        lines.append(bytes([ftype]) + (enc & 0xFF).astype(np.uint8).tobytes())
-        prev = cur
-    return b"".join(lines)
+    cur = np.asarray(flat).astype(np.int16)
+    up = np.zeros_like(cur)
+    up[1:] = cur[:-1]
+    left = np.zeros_like(cur)
+    left[:, bpp:] = cur[:, :-bpp]
+    pred = np.zeros_like(cur)
+    pred[1::5] = left[1::5]
+    pred[2::5] = up[2::5]
+    pred[3::5] = (left[3::5] + up[3::5]) // 2
+    a, b = left[4::5], up[4::5]
+    c = np.zeros_like(b)
+    c[:, bpp:] = b[:, :-bpp]
+    p = a + b - c
+    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
+    pred[4::5] = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
+    out = np.empty((n_rows, row_bytes + 1), dtype=np.uint8)
+    out[:, 0] = np.arange(n_rows) % 5
+    out[:, 1:] = (cur - pred) & 0xFF
+    return out.tobytes()
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -559,7 +554,7 @@ def encode_png(img: np.ndarray) -> bytes:
 
     img, color, ch = _png_color_type(img)
     h, w = img.shape[:2]
-    body = _png_filter_scanlines(img.reshape(h, w * ch).astype(np.int64), ch)
+    body = _png_filter_scanlines(img.reshape(h, w * ch), ch)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
     return (
         _PNG_SIG
@@ -584,9 +579,7 @@ def encode_png_adam7(img: np.ndarray) -> bytes:
         if sub.shape[0] == 0 or sub.shape[1] == 0:
             continue
         ph, pw = sub.shape[:2]
-        body += _png_filter_scanlines(
-            sub.reshape(ph, pw * ch).astype(np.int64), ch
-        )
+        body += _png_filter_scanlines(sub.reshape(ph, pw * ch), ch)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 1)
     return (
         _PNG_SIG
@@ -606,7 +599,7 @@ def encode_png16(img: np.ndarray) -> bytes:
     img, color, ch = _png_color_type(img)
     h, w = img.shape[:2]
     wide = np.repeat(img.reshape(h, w * ch), 2, axis=1)  # hi, lo = v, v
-    body = _png_filter_scanlines(wide.astype(np.int64), ch * 2)
+    body = _png_filter_scanlines(wide, ch * 2)
     ihdr = struct.pack(">IIBBBBB", w, h, 16, color, 0, 0, 0)
     return (
         _PNG_SIG
@@ -631,7 +624,7 @@ def encode_png_palette(idx: np.ndarray, palette: np.ndarray, depth: int = 8) -> 
         raise ValueError("palette index out of range for depth")
     h, w = idx.shape
     if depth == 8:
-        rows = idx.astype(np.int64)
+        rows = idx
     else:
         bits = (
             (idx[:, :, None] >> np.arange(depth - 1, -1, -1)) & 1
@@ -639,7 +632,7 @@ def encode_png_palette(idx: np.ndarray, palette: np.ndarray, depth: int = 8) -> 
         pad = (-bits.shape[1]) % 8
         if pad:
             bits = np.pad(bits, ((0, 0), (0, pad)))
-        rows = np.packbits(bits, axis=1).astype(np.int64)
+        rows = np.packbits(bits, axis=1)
     body = _png_filter_scanlines(rows, 1)
     ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
     return (

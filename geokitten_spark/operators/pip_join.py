@@ -636,6 +636,11 @@ def partitioned_pip_join(
 # cover-refine PIP on true H3 cells (north-star flagship shape on H3 ids)
 # ---------------------------------------------------------------------------
 
+# border key, never an H3 id, of the docs off the world and of the
+# polygons that reach past lon ±180 or lat ±90 (H3PolygonCover)
+_OFF_WORLD = -2
+
+
 class H3PolygonCover(_BroadcastCover):
     """Cover-refine PIP join on canonical H3 cells.
 
@@ -647,6 +652,10 @@ class H3PolygonCover(_BroadcastCover):
       set conservative: a corner-clipped cell whose boundary arc is
       shorter than the sampling step is always within one ring of a
       sampled cell, so no sliver is ever misclassified.
+    * ``off-world`` — one border row keyed ``_OFF_WORLD`` for a polygon
+      reaching past lon ±180 or lat ±90. A doc there keys only that row
+      (H3 would wrap it back onto the sphere), so the exact ray-cast
+      decides it, as brute ``pip_join`` does.
     * ``inside``  — polygon_to_cells (center containment) minus the
       dilated border. A cell whose center is inside and which is a full
       ring away from every boundary-crossed cell is provably contained,
@@ -672,8 +681,11 @@ class H3PolygonCover(_BroadcastCover):
         for pos, g in enumerate(geoms):
             sampled: set = set()
             inside_raw: set = set()
+            dilated: set = set()
             for rings in _parts(g):
                 (x0, y0), (x1, y1) = rings[0].min(axis=0), rings[0].max(axis=0)
+                if x0 < -180 or x1 > 180 or y0 < -90 or y1 > 90:
+                    dilated.add(_OFF_WORLD)
                 # a part reaching lon ±180 is cut there for the planar
                 # refine, while H3 cells wrap: the antimeridian is boundary
                 seam = [np.array([[180.0, y0], [180.0, y1]])] if x0 <= -180 or x1 >= 180 else []
@@ -685,7 +697,6 @@ class H3PolygonCover(_BroadcastCover):
                 )
                 inside_raw.update(int(c) for c in part_cells)
             bd_arr = np.array(sorted(sampled), dtype=np.uint64)
-            dilated: set = set()
             if bd_arr.size:
                 for d in h3core.grid_disk_arrays(bd_arr, 1):
                     dilated.update(int(x) for x in d)
@@ -713,6 +724,15 @@ class H3PolygonCover(_BroadcastCover):
             # the doc's cell, then its ancestors at the compacted cover's levels
             cell = h3core.latlng_to_cell(lat, lon, res)
             parents = [h3core.cell_to_parent(cell, r) for r in range(res - 1, min_res - 1, -1)]
-            return [c.astype(np.int64) for c in (cell, *parents)]
+            keys = [c.astype(np.int64) for c in (cell, *parents)]
+            # H3 wraps a doc past lon ±180 / lat ±90 back onto the sphere,
+            # the planar ray-cast does not: such a doc keys only the
+            # off-world border rows, so it is tested exactly against the
+            # polygons that reach off the world and nothing else
+            off = (np.abs(lon) > 180) | (np.abs(lat) > 90)
+            keys[0][off] = _OFF_WORLD
+            for k in keys[1:]:
+                k[off] = -1
+            return keys
 
         self._probe = probe

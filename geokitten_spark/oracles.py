@@ -1128,24 +1128,23 @@ def mvt_pyramid_sql(sf_dir: str = ORACLE_SF_DIR,
     )
 
 
-def raster_tiles_sql(sf_dir: str = ORACLE_SF_DIR, zooms: tuple = (3, 2),
-                     tile_px: int = 64) -> str:
-    """Expected (z, x, y, n_points, png_len, png_md5) for q_raster_tiles:
-    the webdocs points pushed through the SAME pure numpy kernels
-    (viz/raster.py point_pixel + render_heat_tile) driver-side — numpy
-    binning instead of the Spark aggregate, so the distributed plumbing
-    (Arrow pixel encode, packed-id aggregate, per-zoom shift projection,
-    grouped render) is what the hash compare exercises. One VALUES row
-    per (z, x, y) blob, md5-compared byte-for-byte."""
-    import hashlib
-
+def raster_tiles_replica(lons, lats, zooms, tile_px: int = 64, weights=None) -> list:
+    """(z, x, y, n_points, png) per tile, sorted: points pushed through the
+    SAME pure numpy kernels as ``viz/raster.py`` (point_pixel +
+    render_heat_tile) driver-side, with numpy binning instead of the Spark
+    plan. ``weights`` (int64, default 1 per point) are summed exactly;
+    points with a NaN or ±Inf coordinate draw nothing."""
     from .viz.raster import point_pixel, render_heat_tile
 
-    lons, lats = _webdocs_lonlat(sf_dir)
+    lons, lats = np.asarray(lons, np.float64), np.asarray(lats, np.float64)
+    w = np.ones(len(lons), np.int64) if weights is None else np.asarray(weights, np.int64)
+    ok = np.isfinite(lons) & np.isfinite(lats)
     zs = sorted({int(z) for z in zooms}, reverse=True)
     zf = zs[0]
-    gx, gy = point_pixel(lons, lats, zf, tile_px)
-    uniq, counts = np.unique((gx << 32) | gy, return_counts=True)
+    gx, gy = point_pixel(lons[ok], lats[ok], zf, tile_px)
+    uniq, inv = np.unique((gx << 32) | gy, return_inverse=True)
+    counts = np.zeros(len(uniq), np.int64)
+    np.add.at(counts, inv, w[ok])
     ugx, ugy = uniq >> 32, uniq & 0xFFFFFFFF
     log2t = tile_px.bit_length() - 1
     rows = []
@@ -1163,10 +1162,24 @@ def raster_tiles_sql(sf_dir: str = ORACLE_SF_DIR, zooms: tuple = (3, 2),
             blob = render_heat_tile(
                 [p for p, _ in rws], [c for _, c in rws], tile_px
             )
-            rows.append(
-                (z, gtx, gty, sum(c for _, c in rws), len(blob),
-                 hashlib.md5(blob).hexdigest())
-            )
+            rows.append((z, gtx, gty, sum(c for _, c in rws), blob))
+    return rows
+
+
+def raster_tiles_sql(sf_dir: str = ORACLE_SF_DIR, zooms: tuple = (3, 2),
+                     tile_px: int = 64) -> str:
+    """Expected (z, x, y, n_points, png_len, png_md5) for q_raster_tiles:
+    the webdocs points through :func:`raster_tiles_replica`, so the
+    distributed plumbing (map-side Arrow pixel sums, the (z, x, y)
+    exchange, batched render) is what the hash compare exercises. One
+    VALUES row per (z, x, y) blob, md5-compared byte-for-byte."""
+    import hashlib
+
+    lons, lats = _webdocs_lonlat(sf_dir)
+    rows = [
+        (z, x, y, n, len(blob), hashlib.md5(blob).hexdigest())
+        for z, x, y, n, blob in raster_tiles_replica(lons, lats, zooms, tile_px)
+    ]
     return values_sql(
         rows,
         [("z", "INTEGER"), ("x", "BIGINT"), ("y", "BIGINT"),

@@ -124,6 +124,21 @@ class SnapshotStore:
     def read(self, spark: SparkSession, stage: str, snapshot_id: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self._snap_dir(stage, snapshot_id), "data"))
 
+    @staticmethod
+    def _read_parquet(spark: SparkSession, data_dir: str, manifest: dict) -> DataFrame:
+        """A committed parquet stage, read with the data schema its
+        manifest records, so no schema-inference job runs over the
+        footers. Partition columns are left to Spark's driver-side
+        directory parse, which types and orders them (last) exactly as
+        an inferred read does."""
+        from pyspark.sql.types import StructType
+
+        parts = set(manifest.get("partition_by") or ())
+        st = StructType.fromJson(manifest["schema"])
+        return spark.read.schema(
+            StructType([f for f in st.fields if f.name not in parts])
+        ).parquet(data_dir)
+
     # -- the core API --------------------------------------------------
 
     def _bucket_table_name(self, stage: str, snapshot_id: str) -> str:
@@ -187,7 +202,7 @@ class SnapshotStore:
             elif manifest.get("bucket_by"):
                 df = self._ensure_bucketed_table(spark, stage, sid, data_dir, manifest)
             else:
-                df = spark.read.parquet(data_dir)
+                df = self._read_parquet(spark, data_dir, manifest)
             res = StageResult(stage, sid, data_dir, manifest, df, resumed=True)
             self.lineage.append(manifest)
             return res
@@ -252,6 +267,8 @@ class SnapshotStore:
         }
         if bucket_by:
             manifest["bucket_by"] = [bucket_by[0], int(bucket_by[1])]
+        if partition_by:
+            manifest["partition_by"] = list(partition_by)
         if observed_rows != manifest["row_count"]:  # lineage self-check
             raise RuntimeError(
                 f"stage {stage}: observed {observed_rows} rows but parquet "
@@ -293,7 +310,7 @@ class SnapshotStore:
         elif bucket_by:
             out_df = self._ensure_bucketed_table(spark, stage, sid, data_dir, manifest)
         else:
-            out_df = spark.read.parquet(data_dir)
+            out_df = self._read_parquet(spark, data_dir, manifest)
         return StageResult(stage, sid, data_dir, manifest, out_df, resumed=False)
 
     @staticmethod

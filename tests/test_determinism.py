@@ -425,13 +425,10 @@ def test_cover_probe_matches_sql_encode_on_cell_edges(spark):
     both, outer = pts.index((11.0, 11.0)), pts.index((10.0, 10.0))
     assert {(both, -1), (both, -2), (outer, -1)} <= set(brute) and (outer, -2) not in brute
     assert rows(grid.join(docs)) == brute
-    # H3 wraps a lon past ±180 onto the other side of the antimeridian,
-    # where the planar ray-cast does not: compare it on the world only
-    world = {i for i, (x, y) in enumerate(pts) if abs(x) <= 180 and abs(y) <= 90}
-    in_world = (F.abs("lon") <= 180) & (F.abs("lat") <= 90)
-    assert rows(h3.join(docs.filter(in_world))) == Counter(
-        {k: n for k, n in brute.items() if k[0] in world}
-    )
+    # also on the vertices past lon ±180, where H3 would wrap the doc
+    # onto the other side of the antimeridian
+    assert any(abs(pts[i][0]) > 180 for i, _ in brute)
+    assert rows(h3.join(docs)) == brute
 
 
 def test_inside_matches_per_part_ray_cast_in_any_pass_size(monkeypatch):

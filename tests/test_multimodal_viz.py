@@ -380,6 +380,81 @@ def test_png_adam7_16bit_palette_roundtrips():
             assert (decode_png(encode_png_palette(idx, pal, d)) == pal[idx]).all()
 
 
+# sha256 of each PNG encoder's bytes on seeded images (gray, RGB, RGBA,
+# 1x1, one row, odd widths, a 64x64 heat-tile-sized gray), pinned so a
+# change to the scanline filter or the chunk writer cannot move a byte
+_PNG_GOLDEN = {
+    "encode_png/gray": "76ace8f471296d595e571031626957127c4454d484d3bc91909625ffc7e064c9",
+    "encode_png_adam7/gray": "e426a7a44f5b32f8c45876faf1822578b372c011f1014c3da402142ec2c08f62",
+    "encode_png16/gray": "7b23983813afbcc47969e7fb77ad96e1b8e03f5f786c850e51528ce3550ac9e8",
+    "encode_png/rgb": "8a38fab50331f8a96bbb90ebab723ca20a0e41d8f3b7bc213fbe46776c3b9262",
+    "encode_png_adam7/rgb": "b8d09f6e9f245af5f275a9cd79b16491514c9077535882b8015e2fb01f94e45d",
+    "encode_png16/rgb": "a8a97f7f79ddeed14ace794aeb1a468c42fcfb028ae3bdd11088c23a834bfee7",
+    "encode_png/rgba": "7e4aca65ff0707e5d0b1c4325839f0da07772a569648aff20c9c7333efd53426",
+    "encode_png_adam7/rgba": "789b1f9fad804e97f831c9030270f3989de25b9904ddb4b680c0ea181a062b9c",
+    "encode_png16/rgba": "53243f583deb3b3353796151ad7835886a11f162c202a2b082124f4c1cd96b01",
+    "encode_png/one": "046fb18b8504ac547779957434137df73f4534995d018fc359c287b743892805",
+    "encode_png_adam7/one": "4dd0a473906085c20bf14f90bd62538c6e075efdccf1e4b3e4010d2f85ac9e31",
+    "encode_png16/one": "39a780a55f0b7220d7d49dc275a3312fe8eae1978d4aa31321f0255c2a7c7f66",
+    "encode_png/row": "b64be028b1034c733eb4549680f8c1b79ed87fc159a9954f9f12597f4a7fe283",
+    "encode_png_adam7/row": "246e27dd90ea7ec79aaed38571e11d86c5db073ede718ba57b6f371461fe259c",
+    "encode_png16/row": "6d5d8bafd5af318bf5c62539235eef7925aa68ed4496b66e3fad92c9258aa48c",
+    "encode_png/odd": "edcdfe0c7c940287c74f5e37584cfe77f4021a4bd5770fbb530e954c46a165b3",
+    "encode_png_adam7/odd": "0b7aa46ef069a629d0af81ce53f43ee45002d2210f419e4f1613eec9dab2cc10",
+    "encode_png16/odd": "67a9c6e6fe19379ca13e801d7e72f64037f84bb9ec07d06052a8a466199a5b27",
+    "encode_png/oddrgba": "a55877a7b067e27039ae3d21a955b16bf4c2ad1cd56f17fd4e29e0c03b568162",
+    "encode_png_adam7/oddrgba": "52d212e015a258e9bf7c28a8abd89cefa7c83a432d2343b3c64ff40c96b52610",
+    "encode_png16/oddrgba": "aac60e3d91756df3e6432f62ea485d05f92f8c1fe3f405e32eb0a30c7d344f8d",
+    "encode_png/tile": "9b7079820997af5837127b2ed149e2b3fcb5588d38965f0fa8df7f859011436d",
+    "encode_png_adam7/tile": "2a9730f974da0249b4de0762e27cfca0feb610434862f71d814eca10cd49941a",
+    "encode_png16/tile": "cac8e0dbc9ba76504b4aecaa6da6468e0ff0851648427cd0c4814b3101d261e5",
+    "encode_png_palette1/one": "1573553dea0b485c473cf2e60c4ef29d2ed60f1c02034bf7ff291fe1424ee128",
+    "encode_png_palette1/row": "646adaaa1430d9bd70af487743ee5da4a27a3c6a24030d372f632e4218feceea",
+    "encode_png_palette1/odd": "4e8759d7f545225370691bfc7e2f861c9a6f1720afe163f9ae21aefd9def3d54",
+    "encode_png_palette2/one": "53a72f69433220bf1bad43fcd7076bed6d5d5e43f2b31e16402818f6b07a9077",
+    "encode_png_palette2/row": "b24e36435f88f76c09ae364c6ff812db14534e6a8cfc07fddfac85547367c6eb",
+    "encode_png_palette2/odd": "2e75dc9ae28fac4a834327c2d7425e22558bafc36f432e508447dfed92edcad3",
+    "encode_png_palette4/one": "6ca75acb3262c806263c4558ef9b708d42786dee76357a661bc346b1a89c95ea",
+    "encode_png_palette4/row": "b93a4e3de6c66060aac83deeab74f1b15d4ce09bbafd729b5172c1eb8554f8f0",
+    "encode_png_palette4/odd": "6c773629dc68965a073c07f1d21470a4afd4ff1c0053c55257f4e96ee94af861",
+    "encode_png_palette8/one": "07c3396e0de4e1d06eab8093739cd65983aedcbf181a2591809bfed1e77862dc",
+    "encode_png_palette8/row": "6c5777e8ec32a9d20a4bf3ebbcbbea30188c76706b2e0120922935195d76cc1e",
+    "encode_png_palette8/odd": "920b65ed7e9d20bae710072071988e844e2a030ecb5431d030ce7335ec37fb8e",
+}
+
+
+def _png_golden_cases():
+    import numpy as np
+
+    from geokitten_spark.functions.multimodal import (
+        encode_png,
+        encode_png16,
+        encode_png_adam7,
+        encode_png_palette,
+    )
+
+    rng = np.random.RandomState(20)
+    for name, shape in [("gray", (13, 7)), ("rgb", (9, 11, 3)), ("rgba", (10, 5, 4)),
+                        ("one", (1, 1)), ("row", (1, 17, 3)), ("odd", (7, 33)),
+                        ("oddrgba", (6, 3, 4)), ("tile", (64, 64))]:
+        img = rng.randint(0, 256, shape).astype(np.uint8)
+        for enc in (encode_png, encode_png_adam7, encode_png16):
+            yield f"{enc.__name__}/{name}", enc(img)
+    rng = np.random.RandomState(21)
+    for d in (1, 2, 4, 8):
+        for name, shape in [("one", (1, 1)), ("row", (1, 13)), ("odd", (9, 7))]:
+            pal = rng.randint(0, 256, (1 << d, 3)).astype(np.uint8)
+            idx = rng.randint(0, 1 << d, shape).astype(np.uint8)
+            yield f"encode_png_palette{d}/{name}", encode_png_palette(idx, pal, d)
+
+
+def test_png_encoders_golden_sha256():
+    from hashlib import sha256
+
+    got = {k: sha256(blob).hexdigest() for k, blob in _png_golden_cases()}
+    assert got == _PNG_GOLDEN
+
+
 def test_png_subbyte_gray_and_guards():
     """Sub-byte grayscale decodes with left-bit-replication scaling;
     illegal depth/color combos and bad methods fail loudly."""

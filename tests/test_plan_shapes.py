@@ -152,15 +152,18 @@ def test_lm_scoring_has_no_per_doc_window(spark):
             raise AssertionError(f"per-doc Window in LM plan: {line.strip()}")
 
 
-def test_raster_tiles_two_exchanges_any_zoom_count(spark):
-    """viz/raster.py promises exactly TWO shuffles regardless of how many
-    zoom levels render: the packed-pixel aggregate (the only O(docs)
-    input) and the (z, x, y) grouped render over the per-zoom unions."""
+def test_raster_tiles_one_exchange_any_zoom_count(spark):
+    """viz/raster.py promises exactly ONE shuffle regardless of how many
+    zoom levels render: the (z, x, y) repartition of the map-side Arrow
+    pass's per-pixel sums. Both aggregates and the batched render run
+    above it with no further exchange and no grouped pandas render."""
     from geokitten_spark.viz.raster import raster_heat_tiles
 
     docs = web_documents(spark, SF_SMOKE).select("lon", "lat")
-    assert _n_exchanges(raster_heat_tiles(docs, zooms=(3,))) <= 2
-    assert _n_exchanges(raster_heat_tiles(docs, zooms=(4, 3, 2, 1))) <= 2
+    for zooms in ((3,), (4, 3, 2, 1)):
+        df = raster_heat_tiles(docs, zooms=zooms)
+        assert _n_exchanges(df) == 1, zooms
+        assert "FlatMapGroupsInPandas" not in _physical(df), zooms
 
 
 def test_h3_compact_cover_codegen_probe_single_shuffle(spark):

@@ -8,8 +8,8 @@ import pandas as pd
 import pytest
 
 from geokitten_spark.functions.multimodal import decode_png
+from geokitten_spark.oracles import raster_tiles_replica
 from geokitten_spark.viz.raster import (
-    pixel_id_udf,
     point_pixel,
     raster_heat_tiles,
     render_heat_tile,
@@ -66,7 +66,7 @@ def test_render_heat_tile_sums_duplicates():
 
 def test_pixel_pack_guard():
     with pytest.raises(ValueError):
-        pixel_id_udf(26, 64)
+        raster_heat_tiles(None, zooms=(26, 3), tile_px=64)
     with pytest.raises(ValueError):
         raster_heat_tiles(None, zooms=(3,), tile_px=48)
 
@@ -87,11 +87,7 @@ def test_raster_tiles_partitioning_invariance(spark):
     input at 1 and 7 partitions renders identical (z,x,y)->md5 maps — and
     points with a NULL, NaN or ±Inf coordinate draw nothing."""
     def run(points):
-        out = raster_heat_tiles(points, zooms=(3, 2))
-        return {
-            (r["z"], r["x"], r["y"]): (r["n_points"], hashlib.md5(r["png"]).hexdigest())
-            for r in out.collect()
-        }
+        return _tiles(points, (3, 2), 64)
 
     finite = run(_synth_points(spark, parts=1))
     assert run(_synth_points(spark, parts=7)) == finite
@@ -124,30 +120,51 @@ def test_raster_tiles_pyramid_consistency(spark):
     assert img.shape[:2] == (64, 64) and img.max() == 255
 
 
+def _tiles(df, zooms, tile_px, **kw):
+    return {
+        (r["z"], r["x"], r["y"]): (r["n_points"], hashlib.md5(r["png"]).hexdigest())
+        for r in raster_heat_tiles(df, zooms=zooms, tile_px=tile_px, **kw).collect()
+    }
+
+
+def _replica(*args, **kw):
+    return {
+        (z, x, y): (n, hashlib.md5(blob).hexdigest())
+        for z, x, y, n, blob in raster_tiles_replica(*args, **kw)
+    }
+
+
 def test_raster_tiles_matches_driver_replica(spark):
     """Distributed render == the oracle-side numpy replica, byte for
     byte (the same check the strict harness does, on synthetic points)."""
     pts = _synth_points(spark, n=300, parts=5)
-    got = {
-        (r["z"], r["x"], r["y"]): hashlib.md5(r["png"]).hexdigest()
-        for r in raster_heat_tiles(pts, zooms=(2,), tile_px=32).collect()
-    }
     pdf = pts.toPandas()
-    gx, gy = point_pixel(pdf["lon"], pdf["lat"], 2, 32)
-    uniq, counts = np.unique((gx << 32) | gy, return_counts=True)
-    ugx, ugy = uniq >> 32, uniq & 0xFFFFFFFF
-    groups: dict = {}
-    for k in range(len(uniq)):
-        key = (2, int(ugx[k]) >> 5, int(ugy[k]) >> 5)
-        pix = (int(ugy[k]) & 31) * 32 + (int(ugx[k]) & 31)
-        groups.setdefault(key, []).append((pix, int(counts[k])))
-    want = {
-        key: hashlib.md5(
-            render_heat_tile([p for p, _ in rws], [c for _, c in rws], 32)
-        ).hexdigest()
-        for key, rws in groups.items()
-    }
-    assert got == want
+    assert _tiles(pts, (2,), 32) == _replica(pdf["lon"], pdf["lat"], (2,), 32)
+
+
+def test_raster_tiles_huge_weights_and_bad_points_match_replica(spark):
+    """On a multi-partition input whose weights reach 2^53 and beyond
+    (where a float sum is inexact) and with NULL/NaN/±Inf coordinates and
+    a NULL weight, every level equals the numpy replica's exact int64
+    sums, and the bad points draw nothing."""
+    rng = np.random.RandomState(5)
+    n = 240
+    lon = rng.uniform(-60, 60, n)
+    lat = rng.uniform(-50, 50, n)
+    lon[:40] = lon[40:80]  # coincident points share a pixel
+    lat[:40] = lat[40:80]
+    w = rng.randint(0, 1 << 20, n).astype(np.int64)
+    w[::3] = (1 << 53) + rng.randint(1, 1 << 20, len(w[::3]))
+    rows = [(float(a), float(b), int(c)) for a, b, c in zip(lon, lat, w)]
+    rows[7] = (rows[7][0], rows[7][1], None)
+    nan, inf = float("nan"), float("inf")
+    bad = [(None, 1.0, 5), (1.0, None, 5), (nan, 1.0, 5), (1.0, nan, 5),
+           (inf, 1.0, 5), (-inf, 1.0, 5), (1.0, inf, 5), (1.0, -inf, 5)]
+    df = spark.createDataFrame(rows + bad, "lon double, lat double, w long").repartition(6)
+    w[7] = 0
+    want = _replica(lon, lat, (4, 3, 1), 16, weights=w)
+    assert max(v[0] for v in want.values()) > 1 << 53
+    assert _tiles(df, (1, 3, 4), 16, weight_col="w") == want
 
 
 def test_raster_tiles_weighted_equals_replicated(spark):
@@ -161,11 +178,4 @@ def test_raster_tiles_weighted_equals_replicated(spark):
         "lon", "lat", F.explode(F.sequence(F.lit(1), F.col("w"))).alias("_i")
     )
 
-    def tiles(df, **kw):
-        out = raster_heat_tiles(df, zooms=(2,), tile_px=32, **kw)
-        return {
-            (r["z"], r["x"], r["y"]): (r["n_points"], hashlib.md5(r["png"]).hexdigest())
-            for r in out.collect()
-        }
-
-    assert tiles(weighted, weight_col="w") == tiles(replicated)
+    assert _tiles(weighted, (2,), 32, weight_col="w") == _tiles(replicated, (2,), 32)

@@ -51,6 +51,52 @@ def test_snapshot_run_resume_invalidate(spark, tmp_path):
     assert m["row_count"] == 100 and m["stage"] == "s1"
 
 
+
+def test_snapshot_read_back_uses_manifest_schema(spark, tmp_path):
+    """A committed parquet stage, fresh or resumed, reads back with the
+    schema its manifest recorded: the same schema (partition columns
+    last, typed by the directory parse) and rows as an inferred
+    ``spark.read.parquet``, and no Spark job runs to get them."""
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    sc = spark.sparkContext
+
+    def build(s):
+        return s.range(60).select(
+            F.col("id"),
+            (F.col("id") % 3).alias("k"),
+            F.concat(F.lit("l"), (F.col("id") % 2).cast("string")).alias("lang"),
+            (F.col("id") / 7).alias("v"),
+        )
+
+    def jobs_during(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    for i, part in enumerate((None, ["k"], ["lang", "k"])):
+        for resumed in (False, True):
+            tag = f"{i}-{resumed}"
+            r, jobs = jobs_during(
+                lambda: store.run_stage(spark, f"s{i}", build, partition_by=part),
+                f"stage-{tag}",
+            )
+            assert r.resumed == resumed
+            assert not resumed or jobs == []
+            read, jobs = jobs_during(
+                lambda: store._read_parquet(spark, r.path, r.manifest), f"read-{tag}"
+            )
+            assert jobs == []
+            inferred, jobs = jobs_during(lambda: spark.read.parquet(r.path), f"infer-{tag}")
+            assert jobs  # the inferred read runs a schema job
+            assert r.df.schema == read.schema == inferred.schema
+            if part:
+                assert read.schema.names[-len(part):] == part
+            key = lambda row: row["id"]  # noqa: E731
+            assert sorted(r.df.collect(), key=key) == sorted(inferred.collect(), key=key)
+
 def test_salted_join_matches_plain_join(spark):
     big = spark.range(10000).select(
         (F.col("id") % 7).alias("cell"), F.col("id").alias("tag")
